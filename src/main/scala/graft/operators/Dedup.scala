@@ -322,8 +322,9 @@ object Dedup {
     // count-over-shingle window — the window sorted the ENTIRE posting
     // relation by shingle (hot shingles included) just to attach a per-
     // group count; the join streams postings against a hash table of
-    // the ≤cap-df shingle counts (bounded per partition by construction)
-    // and drops capped-out shingles in the same pass (guide §2.3). The
+    // the ≤cap-df shingle counts (every shingle under the cap, so the
+    // build side is vocabulary-sized, not cap-bounded) and drops
+    // capped-out shingles in the same pass (guide §2.3). The
     // postings explode runs twice (both join inputs), which is map-side
     // CPU — cheaper than materializing the corpus-sized posting list.
     val rows = shingleRows(docs)
@@ -949,8 +950,11 @@ object Dedup {
       val path = sharedDir.resolve(
         s"${s.hashCode.toHexString}_${d.replaceAll("[^A-Za-z0-9.]", "_")}_$key")
         .toString
-      build.write.mode("overwrite").parquet(path)
-      s.read.parquet(path)
+      val built = build
+      built.write.mode("overwrite").parquet(path)
+      // read back under the schema just written: inferring it would
+      // launch one more job to read the footer
+      s.read.schema(built.schema).parquet(path)
     })
 
   /** Materialized capped+ranked shingle postings — the

@@ -32,16 +32,6 @@ import org.apache.spark.sql.functions._
   */
 object ScalableWindows {
 
-  // The offsets window below is unpartitioned BY DESIGN over ≤`parts`
-  // rows, but WindowExec cannot know that and logs "No Partition Defined
-  // for Window operation" — 28 call sites × every run made Verify's
-  // stderr a wall of that one benign warning, burying real ones (r16
-  // verdict). Raise just the window-exec loggers to ERROR; nothing else
-  // is filtered, and corpus-sized unpartitioned windows are still caught
-  // structurally by PlanShapeSpec's registry-wide net.
-  org.apache.logging.log4j.core.config.Configurator.setLevel(
-    "org.apache.spark.sql.execution.window", org.apache.logging.log4j.Level.ERROR)
-
   /** `df` plus `out` = global 1-based row number by `sortCols` (LONG).
     * `sortCols` must be a total order (no ties) for a deterministic
     * result. */

@@ -30,7 +30,7 @@ import org.apache.spark.sql.functions._
   *     vs the original to ≈0.27. Patterns are distinct per replica
   *     (11 prime > factor), so no two replicas share a vector.
   *   - `events.ts` is passed through in its source physical layout
-  *     (int64-ns or µs — Tables.events normalizes either on read).
+  *     (µs TIMESTAMP_NTZ, as [[graft.Tables]] declares it).
   */
 object ScaleUp {
 
@@ -45,9 +45,6 @@ object ScaleUp {
 
   def run(spark: org.apache.spark.sql.SparkSession, src: String, out: String,
       factor: Int): Unit = {
-    // pass events.ts through in its source layout (see class doc)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-
     def read(name: String): DataFrame =
       spark.read.parquet(s"$src/$name.parquet")
     def write(df: DataFrame, name: String): Unit =

@@ -51,10 +51,6 @@ object SkewUp {
   }
 
   def run(spark: SparkSession, src: String, out: String): Unit = {
-    // pass events.ts through in its source physical layout (int64-ns or
-    // µs — Tables.events normalizes either on read), same as ScaleUp
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-
     def read(name: String): DataFrame =
       spark.read.parquet(s"$src/$name.parquet")
     def write(df: DataFrame, name: String): Unit =

@@ -32,8 +32,8 @@ class DriverSchemaSpec extends AnyFunSuite {
 
   test("no registered query emits container-typed output columns") {
     val offenders = SparkEntry.registry.flatMap { q =>
-      // .schema only triggers analysis, not execution — cheap for all
-      // 240+ queries.
+      // .schema only triggers analysis, not execution — cheap for every
+      // registered query.
       val bad = containerFields(q.run(spark, TestSpark.tiny).schema)
       if (bad.isEmpty) Nil else Seq(s"${q.name} -> ${bad.mkString(", ")}")
     }
