@@ -126,6 +126,56 @@ object AvroCodec {
         : Expression = copy(child = newChild)
   }
 
+  /** Confluent-framed decode by WRITER schema: reads the 4-byte wire id
+    * (bytes 1–4), takes that id's schema from `writers` and decodes with
+    * Avro's resolving reader onto `readerJson`, so rows written under
+    * any registered version come out in the reader's shape. Fields the
+    * writer lacks take the reader field's default (a reader field with
+    * no default fails the row, naming the field); writer-only fields are
+    * skipped; promotions such as int → long apply. One datum reader per
+    * id is built per task. An id missing from `writers` throws. Null
+    * input → null row (tombstone passthrough). */
+  case class AvroDecodeByIdExpression(
+      child: Expression,
+      writers: Map[Int, String],
+      readerJson: String)
+      extends UnaryExpression with CodegenFallback {
+    @transient private lazy val readerSchema =
+      new Schema.Parser().parse(readerJson)
+    @transient private lazy val readers =
+      scala.collection.mutable.HashMap.empty[Int, GenericDatumReader[GenericRecord]]
+
+    private def readerFor(id: Int): GenericDatumReader[GenericRecord] =
+      readers.getOrElseUpdate(id, {
+        val writer = writers.getOrElse(id, throw
+          new IllegalStateException(s"registry has no schema for wire id $id"))
+        new GenericDatumReader[GenericRecord](
+          new Schema.Parser().parse(writer), readerSchema)
+      })
+
+    override def dataType: DataType = sparkType(readerSchema)
+    override def nullable: Boolean = true
+    override def prettyName: String = "avro_decode_by_id"
+
+    override def nullSafeEval(input: Any): Any = {
+      val bytes = input.asInstanceOf[Array[Byte]]
+      val id = ByteBuffer.wrap(bytes, 1, 4).getInt
+      val decoder =
+        DecoderFactory.get.binaryDecoder(bytes, 5, bytes.length - 5, null)
+      toCatalyst(readerFor(id).read(null, decoder), readerSchema)
+    }
+
+    override protected def withNewChildInternal(newChild: Expression)
+        : Expression = copy(child = newChild)
+  }
+
+  /** Registry-framed decode by writer id onto the reader schema
+    * ([[AvroDecodeByIdExpression]]). */
+  def fromConfluentAvroById(value: Column, writers: Map[Int, String],
+      readerJson: String): Column =
+    ColumnBridge.column(AvroDecodeByIdExpression(
+      ColumnBridge.expression(value), writers, readerJson))
+
   /** from_avro over a raw (headerless) Avro binary column. */
   def fromAvro(value: Column, schemaJson: String): Column =
     ColumnBridge.column(AvroDecodeExpression(ColumnBridge.expression(value), schemaJson))

@@ -26,6 +26,13 @@ import graft.operators.Cdc
   *      version-gated upserts and tombstone deletes inside the database —
   *      set-based, no per-row round-trips.
   *
+  * Schema evolution: a batch column the target lacks is added to it,
+  * and existing rows read NULL there. A column dropped upstream is
+  * absent from the batch (a registry decode resolves old rows onto the
+  * latest schema, [[SchemaRegistry.resolveAndDecodeById]]) and simply
+  * stops being updated: the target keeps the column and its values, and
+  * rows inserted later read NULL in it.
+  *
   * Idempotent under micro-batch replay (at-least-once upgrade, ST1/ST2/
   * ST3): re-merging the same staging rows matches `version > target` on
   * nothing. Out-of-order redelivery is rejected by the same predicate.
@@ -122,8 +129,6 @@ object JdbcUpsertSink {
         // schema evolution (the whole-DB CDC reality — upstream tables
         // gain columns mid-stream): add staging columns the target lacks,
         // typed from the staging table the JDBC writer just created.
-        // Existing rows read NULL for them; a column DROPPED upstream
-        // simply stops being updated (target keeps it, inserts NULL).
         def columnsOf(t: String): Map[String, (String, Int)] = {
           val rs = conn.getMetaData.getColumns(null, null, t, null)
           val out = scala.collection.mutable.Map.empty[String, (String, Int)]

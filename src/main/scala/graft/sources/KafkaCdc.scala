@@ -78,6 +78,15 @@ object KafkaCdc {
   def decodeCdc(
       records: DataFrame,
       valueSchemaJson: String,
+      keySchemaJson: Option[String] = None): DataFrame =
+    cdcFrame(records,
+      AvroCodec.fromConfluentAvro(col("value"), valueSchemaJson), keySchemaJson)
+
+  /** The decoded-record shape every CDC decode returns, with `after`
+    * the given decode of the value column (null on tombstones). */
+  private[sources] def cdcFrame(
+      records: DataFrame,
+      after: Column,
       keySchemaJson: Option[String] = None): DataFrame = {
     val key = keySchemaJson match {
       case Some(ks) => AvroCodec.fromConfluentAvro(col("key"), ks)
@@ -85,8 +94,7 @@ object KafkaCdc {
     }
     records.select(
       key.as("key"),
-      when(col("value").isNotNull,
-        AvroCodec.fromConfluentAvro(col("value"), valueSchemaJson)).as("after"),
+      when(col("value").isNotNull, after).as("after"),
       col("value").isNull.as("is_tombstone"),
       col("topic"), col("partition"), col("offset"), col("timestamp"))
   }

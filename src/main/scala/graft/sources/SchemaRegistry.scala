@@ -3,55 +3,56 @@ package graft.sources
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
+
+import graft.functions.AvroCodec
 
 /** Dynamic schema resolution (SURVEY.md §1.2): the reference resolves
   * Avro schemas two ways — per message from the Schema Registry
   * (reference: main.py:6-9,22) or statically from a file
   * (reference: read_from_kafka.py:8). The engine's equivalents:
   *
-  *  - plan-time resolution: fetch the subject's latest schema once and
-  *    plan the decode with it ([[resolveAndDecode]]);
+  *  - plan-time resolution: snapshot the subject's versions once and
+  *    plan the decode with them ([[SchemaRegistry.resolveAndDecode]]);
   *  - per-batch re-resolution for schema evolution: inside foreachBatch,
-  *    re-fetch before decoding each micro-batch
-  *    ([[decodeEachBatchWith]]) — new fields appear as soon as the
-  *    registry serves the widened schema, without restarting the query.
+  *    re-snapshot before decoding each micro-batch
+  *    ([[SchemaRegistry.decodeEachBatchWith]]) — new fields appear as
+  *    soon as the registry serves the widened schema, without restarting
+  *    the query.
   *
   * The trait is transport-agnostic; [[InMemorySchemaRegistry]] serves
   * tests and broker-less environments (a Confluent-REST-backed
-  * implementation is a drop-in — same two calls the reference makes).
+  * implementation is a drop-in: `versions` is
+  * `GET /subjects/{s}/versions`).
   */
 trait SchemaRegistry {
-  /** writer schema by registry id (the 4-byte wire-header id) */
-  def schemaById(id: Int): Option[String]
-  /** latest (id, schema) for a subject, e.g. "pg.public.users-value" */
-  def latest(subject: String): Option[(Int, String)]
+  /** every (id, schema) registered under a subject, e.g.
+    * "pg.public.users-value", oldest first; the last is the latest */
+  def versions(subject: String): Seq[(Int, String)]
+  /** latest (id, schema) for a subject */
+  def latest(subject: String): Option[(Int, String)] = versions(subject).lastOption
 }
 
 final class InMemorySchemaRegistry extends SchemaRegistry {
-  private val byId = new ConcurrentHashMap[Int, String]()
-  private val latestBySubject = new ConcurrentHashMap[String, Int]()
+  private val bySubject = new ConcurrentHashMap[String, Vector[(Int, String)]]()
 
-  def register(subject: String, id: Int, schemaJson: String): Unit = {
-    byId.put(id, schemaJson)
-    latestBySubject.put(subject, id)
-  }
+  /** Registers `schemaJson` under `id` as the subject's latest version. */
+  def register(subject: String, id: Int, schemaJson: String): Unit =
+    bySubject.merge(subject, Vector(id -> schemaJson),
+      (have, added) => have.filterNot(_._1 == id) ++ added)
 
-  override def schemaById(id: Int): Option[String] = Option(byId.get(id))
-  override def latest(subject: String): Option[(Int, String)] =
-    Option(latestBySubject.get(subject)).map(id => (id, byId.get(id)))
+  override def versions(subject: String): Seq[(Int, String)] =
+    bySubject.getOrDefault(subject, Vector.empty)
 }
 
 object SchemaRegistry {
 
-  /** Plan-time resolution: decode a CDC record stream with the subject's
-    * current latest schema (the registry is consulted once, at plan
-    * time — the main.py mode with the registry cache warm). */
+  /** Plan-time resolution: the registry is consulted once, when the
+    * decode is built (the main.py mode with the registry cache warm).
+    * The one registry decode is [[resolveAndDecodeById]]. */
   def resolveAndDecode(records: DataFrame, registry: SchemaRegistry,
-      topic: String): DataFrame = {
-    val (_, schema) = registry.latest(s"$topic-value").getOrElse(
-      throw new IllegalStateException(s"no schema for subject $topic-value"))
-    KafkaCdc.decodeCdc(records, schema)
-  }
+      topic: String): DataFrame =
+    resolveAndDecodeById(records, registry, topic)
 
   /** Evolution mode: re-resolve the schema per micro-batch so a widened
     * schema takes effect mid-stream. Use as the foreachBatch body:
@@ -61,53 +62,40 @@ object SchemaRegistry {
       handle: (DataFrame, Long) => Unit): (DataFrame, Long) => Unit =
     (batch, id) => handle(resolveAndDecode(batch, registry, topic), id)
 
-  /** Replay-safe evolution mode: decode each record with its WRITER
-    * schema (looked up by the Confluent wire-header id — the header
-    * exists precisely so consumers can do this), then project every
-    * slice onto the subject's LATEST column set: a new nullable column
-    * reads NULL for rows written under an older schema; a column the
-    * latest schema dropped is appended (the sink simply stops updating
-    * it — [[JdbcUpsertSink]]'s documented drop semantics).
+  /** Replay-safe decode: each record is decoded with its WRITER schema,
+    * looked up by the Confluent wire-header id (the header exists
+    * precisely so consumers can do this), and resolved onto the
+    * subject's LATEST schema. The result has [[KafkaCdc.decodeCdc]]'s
+    * seven columns; tombstones (null values) give `after = null`.
     *
     * This is what makes a checkpoint REPLAY that spans a schema
     * evolution safe: after a crash the replayed batch still carries
-    * old-id bytes while the registry already serves the widened schema
-    * — decoding with latest-only ([[resolveAndDecode]]) would EOF
-    * mid-record on the missing tail field. Tombstones (null values)
-    * carry no writer id and ride the latest-schema slice.
+    * old-id bytes while the registry already serves the widened schema,
+    * and a decode with the latest schema alone would EOF mid-record on
+    * the missing tail field.
     *
-    * The distinct-id collect is bounded by the number of schema
-    * VERSIONS in flight within one micro-batch (single digits for any
-    * real subject), never by rows. */
+    * The subject's versions are snapshotted once, when this is called,
+    * and the decode is one projection over that snapshot: building it
+    * launches no Spark job. The snapshot is complete for the batch
+    * because a producer registers its schema before it writes, so every
+    * id in a planned batch is already registered. Consequences:
+    *  - a wire id missing from the snapshot fails the batch when it
+    *    executes (`IllegalStateException`, "registry has no schema for
+    *    wire id N"), not when this is called; the batch still fails
+    *    before anything lands;
+    *  - a column the latest schema dropped is absent: old-id rows
+    *    resolve to the latest shape, and a sink stops updating the
+    *    column ([[JdbcUpsertSink]]'s drop semantics);
+    *  - a latest-schema field the writer lacks takes its Avro default
+    *    (a field with no default fails the batch, naming the field).
+    */
   def resolveAndDecodeById(records: DataFrame, registry: SchemaRegistry,
       topic: String): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    import graft.functions.AvroCodec
-    val (_, latestSchema) = registry.latest(s"$topic-value").getOrElse(
-      throw new IllegalStateException(s"no schema for subject $topic-value"))
-    // materialize the micro-batch ONCE before slicing: the method runs
-    // 2+N jobs over it (distinct-id collect, tombstone slice, one
-    // filter per wire id) and without this the upstream source is
-    // re-scanned per slice inside foreachBatch (r15 ADVICE). Eager
-    // localCheckpoint both caches and cuts lineage, so each per-id
-    // filter reads local blocks.
-    val snap = records.localCheckpoint()
-    val ids = snap.filter(col("value").isNotNull)
-      .select(AvroCodec.confluentSchemaId(col("value")).as("sid"))
-      .distinct().collect().map(_.getInt(0)).toSeq.sorted
-    // the latest-schema empty frame anchors column ORDER; tombstones
-    // (null value) decode under any schema and ride this slice too
-    val anchor = KafkaCdc.decodeCdc(snap.limit(0), latestSchema)
-    val tombstones =
-      KafkaCdc.decodeCdc(snap.filter(col("value").isNull), latestSchema)
-    val slices = ids.map { id =>
-      val writer = registry.schemaById(id).getOrElse(throw
-        new IllegalStateException(s"registry has no schema for wire id $id"))
-      KafkaCdc.decodeCdc(
-        snap.filter(AvroCodec.confluentSchemaId(col("value")) === id),
-        writer)
-    }
-    (anchor +: tombstones +: slices)
-      .reduce((a, b) => a.unionByName(b, allowMissingColumns = true))
+    val subject = s"$topic-value"
+    val writers = registry.versions(subject)
+    val (_, latest) = writers.lastOption.getOrElse(
+      throw new IllegalStateException(s"no schema for subject $subject"))
+    KafkaCdc.cdcFrame(records,
+      AvroCodec.fromConfluentAvroById(col("value"), writers.toMap, latest))
   }
 }

@@ -25,7 +25,9 @@ class SchemaRegistrySpec extends AnyFunSuite {
       |{"name":"id","type":"int"},
       |{"name":"email","type":["null","string"],"default":null}]}""".stripMargin
 
-  private def enc(json: String)(fill: GenericRecord => Unit): Array[Byte] = {
+  /** Confluent wire framing: magic 0 + 4-byte registry id + avro body */
+  private def enc(json: String, wireId: Int)(
+      fill: GenericRecord => Unit): Array[Byte] = {
     val sc = new Schema.Parser().parse(json)
     val rec: GenericRecord = new GenericData.Record(sc)
     fill(rec)
@@ -33,7 +35,7 @@ class SchemaRegistrySpec extends AnyFunSuite {
     val e = EncoderFactory.get.binaryEncoder(out, null)
     new GenericDatumWriter[GenericRecord](sc).write(rec, e); e.flush()
     ByteBuffer.allocate(5 + out.size())
-      .put(0.toByte).putInt(1).put(out.toByteArray).array()
+      .put(0.toByte).putInt(wireId).put(out.toByteArray).array()
   }
 
   private def records(value: Array[Byte]): DataFrame =
@@ -46,7 +48,7 @@ class SchemaRegistrySpec extends AnyFunSuite {
     val reg = new InMemorySchemaRegistry
     reg.register("pg.public.users-value", 1, v1)
     val df = SchemaRegistry.resolveAndDecode(
-      records(enc(v1)(_.put("id", 5))), reg, "pg.public.users")
+      records(enc(v1, 1)(_.put("id", 5))), reg, "pg.public.users")
     assert(df.select("after.id").collect()(0).getInt(0) === 5)
     assert(!df.select("after.*").columns.contains("email"))
   }
@@ -54,14 +56,15 @@ class SchemaRegistrySpec extends AnyFunSuite {
   test("per-batch re-resolution picks up a widened schema mid-stream") {
     val reg = new InMemorySchemaRegistry
     reg.register("pg.public.users-value", 1, v1)
-    var seenCols = Vector.empty[Set[String]]
+    var seen = Vector.empty[DataFrame]
     val body = SchemaRegistry.decodeEachBatchWith(reg, "pg.public.users") {
-      (decoded, _) => seenCols :+= decoded.select("after.*").columns.toSet
+      (decoded, _) => seen :+= decoded.select("after.*")
     }
-    body(records(enc(v1)(_.put("id", 1))), 0L)
+    body(records(enc(v1, 1)(_.put("id", 1))), 0L)
     reg.register("pg.public.users-value", 2, v2) // schema evolves
-    body(records(enc(v2) { r => r.put("id", 2); r.put("email", "a@x.io") }), 1L)
-    assert(seenCols(0) === Set("id"))
-    assert(seenCols(1) === Set("id", "email"))
+    body(records(enc(v2, 2) { r => r.put("id", 2); r.put("email", "a@x.io") }), 1L)
+    assert(reg.versions("pg.public.users-value").map(_._1) === Seq(1, 2))
+    assert(seen(0).columns.toSeq === Seq("id"))
+    assert(seen(1).collect().toSeq === Seq(Row(2, "a@x.io")))
   }
 }

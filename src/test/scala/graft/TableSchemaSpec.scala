@@ -1,11 +1,6 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.JobsDuring
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
@@ -31,27 +26,6 @@ class TableSchemaSpec extends AnyFunSuite {
       assert(decl == inferred, s"$dir/$name: declared ${decl.toDDL} != inferred ${inferred.toDDL}")
     }
 
-  /** A started Spark job: its short call site (its result stage's name)
-    * and whether it ran inside a SQL execution. A schema-inference job
-    * runs bare, during analysis; writes and query actions run inside
-    * one. */
-  private case class Job(site: String, inSqlExecution: Boolean)
-
-  /** The Spark jobs started while `body` runs. */
-  private def jobsDuring(body: => Unit): Seq[Job] = {
-    val sc = spark.sparkContext
-    ListenerBusDrain(sc)
-    val jobs = new ConcurrentLinkedQueue[Job]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.add(Job(e.stageInfos.maxBy(_.stageId).name,
-          e.properties.getProperty("spark.sql.execution.id") != null))
-    }
-    sc.addSparkListener(listener)
-    try { body; ListenerBusDrain(sc) } finally sc.removeSparkListener(listener)
-    jobs.asScala.toSeq
-  }
-
   private val loaders: Seq[(SparkSession, String) => DataFrame] = Seq(
     Tables.region, Tables.nation, Tables.customer, Tables.supplier, Tables.part,
     Tables.orders, Tables.lineitem, Tables.events, Tables.documents, Tables.embeddings)
@@ -70,7 +44,7 @@ class TableSchemaSpec extends AnyFunSuite {
 
   test("calling all ten loaders launches no Spark job") {
     assert(loaders.size == Tables.Schemas.size)
-    val jobs = jobsDuring(loaders.foreach(_(spark, TestSpark.tiny)))
+    val jobs = JobsDuring(spark.sparkContext)(loaders.foreach(_(spark, TestSpark.tiny)))
     assert(jobs.isEmpty, s"loaders launched jobs: $jobs")
   }
 
@@ -92,7 +66,7 @@ class TableSchemaSpec extends AnyFunSuite {
 
   test("no registered query infers a parquet schema while it is built") {
     val offenders = SparkEntry.registry.flatMap { q =>
-      jobsDuring(q.run(spark, TestSpark.tiny))
+      JobsDuring(spark.sparkContext)(q.run(spark, TestSpark.tiny))
         .filter(j => !j.inSqlExecution && j.site.startsWith("parquet at"))
         .map(j => s"${q.name} -> ${j.site}")
     }
