@@ -224,7 +224,7 @@ object EventAnalytics12 {
     * event; max per (type, bucket) is the register. Order-free and
     * duplicate-insensitive, which is what makes the sketch mergeable
     * across micro-batches
-    * ([[graft.streaming.Streams.hllIncrementalBatch]]). */
+    * ([[graft.streaming.HllState]]). */
   private[graft] def hllRanks(ev: DataFrame): DataFrame = {
     val sparkRank: org.apache.spark.sql.Column =
       ((HllW - 1) to 0 by -1).foldRight(

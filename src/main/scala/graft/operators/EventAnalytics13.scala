@@ -95,8 +95,8 @@ object EventAnalytics13 {
 
   /** [[q137QuantileSketch]]'s tail over an already-built
     * (event_type, v4, c) value-count relation — factored out so the
-    * ST6 incremental twin (`Streams.quantileIncrementalBatch`) can run
-    * the IDENTICAL estimator over cumulative per-batch value counts:
+    * ST6 incremental twin ([[graft.streaming.QuantileState]]) can run
+    * the IDENTICAL estimator over its cumulative value counts:
     * golden ≡ one-shot holds structurally, not by re-implementation. */
   private[graft] def quantileFromValueCounts(
       s: org.apache.spark.sql.SparkSession,

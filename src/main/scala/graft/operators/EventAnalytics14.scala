@@ -113,8 +113,8 @@ object EventAnalytics14 {
     * per-user first signup (`user_id, s_ts`), per-user first purchase
     * (`user_id, p_ts`), and the single-row observation end
     * (`m_ts`) — factored out so the ST6 incremental twin
-    * (`Streams.survivalIncrementalBatch`) runs the IDENTICAL
-    * estimator over cumulative per-batch state: golden ≡ one-shot
+    * ([[graft.streaming.SurvivalState]]) runs the IDENTICAL
+    * estimator over its cumulative per-user state: golden ≡ one-shot
     * holds structurally. The state is a JOIN-SEMILATTICE
     * (min, min, max), so the twin absorbs both arrival order AND
     * duplicate delivery, the HLL-twin contract. */

@@ -49,7 +49,7 @@ object TextAnalysis6 {
     */
   /** KL drift from a (source, w, c) count relation — shared by the
     * registered one-shot query and the incremental streaming monitor
-    * ([[graft.streaming.Streams.klDriftIncrementalBatch]]), so the
+    * ([[graft.streaming.KlState]]), so the
     * monitor's output after batch N is definitionally the one-shot
     * answer over the union of batches 1..N. */
   private[graft] def klFromCounts(

@@ -7,8 +7,7 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig,
 
 /** ST6 via the REAL arbitrary-state API, fifth operator: the
   * `q92_delta_sum` per-user counter state as a [[StatefulProcessor]]
-  * under `transformWithState` (RocksDB state store) — counterpart of
-  * the foreachBatch/parquet twin (`Streams.deltaSumIncrementalBatch`).
+  * under `transformWithState` (RocksDB state store).
   *
   * This is the first ORDER-DEPENDENT twin. The four before it fold
   * commutatively (HLL and Kaplan–Meier are join-semilattices; the
@@ -17,19 +16,20 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig,
   * event_id) order — `sum(max(0, v_i − v_{i−1}))` — so the state must
   * carry the last seen value per user, each batch must be applied in
   * in-batch order (rows are sorted here before folding), and batches
-  * must arrive in per-user time order (the same documented
-  * sorted-arrival contract as the batch twin: a CDC/event stream
-  * delivers each key's changes in commit order — reference semantics:
-  * per-partition Kafka ordering, main.py:27-55). What the engine's
-  * checkpoint provides is exactly what an order-dependent fold needs:
-  * state rolls back to the last committed batch version on crash, so
-  * an uncommitted batch REPLAYS against the same (n, acc, last) it
-  * first saw — `DeltaSumTwsSpec` kills the query between batches and
-  * proves the fold continues as if uninterrupted. Cross-batch
-  * duplicate delivery is out of contract (as for the quantile twin —
-  * that stage is `Streams.dedupEvents`); a duplicate row would read
-  * as a zero-increase step, which is why the CONSECUTIVE-pair fold is
-  * still safer under redelivery than a plain sum would be.
+  * must arrive in per-user time order (the documented sorted-arrival
+  * contract: a CDC/event stream delivers each key's changes in commit
+  * order — reference semantics: per-partition Kafka ordering,
+  * main.py:27-55). What the engine's checkpoint provides is exactly
+  * what an order-dependent fold needs: state rolls back to the last
+  * committed batch version on crash, so an uncommitted batch REPLAYS
+  * against the same (n, acc, last) it first saw — `DeltaSumTwsSpec`
+  * kills the query between batches, crashes one batch after its state
+  * commit so that it replays, and proves the fold continues as if
+  * uninterrupted. Cross-batch duplicate delivery is out of contract
+  * (as for the quantile twin — that stage is
+  * [[Streams.dedupWithinWatermark]]); a duplicate row would read as a
+  * zero-increase step, which is why the CONSECUTIVE-pair fold is still
+  * safer under redelivery than a plain sum would be.
   *
   * State per user: (n_events, acc4, last_v4) — 24 bytes off-heap.
   * Emission is one (user, n, acc4) snapshot per updated user per

@@ -6,9 +6,9 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig,
 
 /** ST6 via the REAL arbitrary-state API: the q136 HyperLogLog sketch as
   * a [[StatefulProcessor]] under `transformWithState` (RocksDB state
-  * store), replacing the foreachBatch/parquet-state pattern the other
-  * incremental twins use with engine-managed keyed state that survives
-  * checkpoint restarts natively (reference semantics: the consumer's
+  * store): engine-managed keyed state that survives checkpoint restarts
+  * natively, where the foreachBatch twins in [[Streams]] keep parquet
+  * state of their own (reference semantics: the consumer's
   * resume-from-group-offsets loop, main.py:27-55 — here the offsets AND
   * the operator state both live in the checkpoint).
   *
@@ -24,7 +24,8 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig,
   * (event_type, regs) in Update mode; the final emission per key feeds
   * the one-shot estimator tail
   * ([[graft.operators.EventAnalytics12.hllEstimate]]) — golden ≡
-  * one-shot, asserted across a kill/restart in `HllTwsSpec`.
+  * the registered q136, asserted across a kill/restart and across a
+  * crashed-and-replayed batch in `HllTwsSpec`.
   *
   * 100 TB shape: state is 256 bytes × |event types| (trivially
   * bounded); input volume reaches the operator pre-reduced only by the

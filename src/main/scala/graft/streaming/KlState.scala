@@ -8,21 +8,18 @@ import org.apache.spark.sql.streaming.{MapState, OutputMode, StatefulProcessor,
 /** ST6 via the REAL arbitrary-state API, fourth operator: the
   * `text_kl_drift` per-source word-count state as a
   * [[StatefulProcessor]] under `transformWithState` (RocksDB state
-  * store) — the counterpart of the foreachBatch/parquet twin
-  * (`Streams.klDriftIncrementalBatch`), following [[HllState]] /
-  * [[QuantileState]] / [[SurvivalState]] (reference semantics: the
-  * consumer's resume-from-group-offsets loop, main.py:27-55).
+  * store), following [[HllState]] / [[QuantileState]] /
+  * [[SurvivalState]] (reference semantics: the consumer's
+  * resume-from-group-offsets loop, main.py:27-55).
   *
-  * What this twin adds over the quantile one (same count monoid): the
-  * batch twin's duplicate-delivery contract lives in `oneRowPerKey`
-  * (each document counted once no matter how often the CDC stream
-  * re-delivers it). Here that contract moves INTO the checkpointed
-  * state: a second `MapState` of seen doc ids gates the count update,
-  * so a document re-delivered in a LATER batch — including one that
-  * arrives on the far side of a kill/restart — is absorbed by state
-  * that survived the checkpoint, not by a per-batch aggregation. Two
-  * state variables under one key is exactly what the arbitrary-state
-  * API exists for.
+  * What this twin adds over the quantile one (same count monoid): each
+  * document counts once no matter how often the CDC stream re-delivers
+  * it, and that contract lives INSIDE the checkpointed state: a second
+  * `MapState` of seen doc ids gates the count update, so a document
+  * re-delivered in a LATER batch — including one that arrives on the
+  * far side of a kill/restart — is absorbed by state that survived the
+  * checkpoint, not by a per-batch aggregation. Two state variables
+  * under one key is exactly what the arbitrary-state API exists for.
   *
   * Per batch it emits ONLY the updated (source, word, new_total)
   * entries in Update mode — O(batch delta), never O(vocabulary) (the

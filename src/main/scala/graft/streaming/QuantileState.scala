@@ -7,23 +7,22 @@ import org.apache.spark.sql.streaming.{MapState, OutputMode, StatefulProcessor,
 
 /** ST6 via the REAL arbitrary-state API, second operator: the
   * `q137_quantile_sketch` value-count state as a [[StatefulProcessor]]
-  * under `transformWithState` (RocksDB state store) — the
-  * `transformWithState` counterpart of the foreachBatch/parquet-state
-  * twin (`Streams.quantileIncrementalBatch`), the same way
-  * [[HllState]] upgrades the HLL twin (reference semantics: the
-  * consumer's resume-from-group-offsets loop, main.py:27-55 — offsets
-  * AND operator state both live in the checkpoint).
+  * under `transformWithState` (RocksDB state store), following
+  * [[HllState]] (reference semantics: the consumer's
+  * resume-from-group-offsets loop, main.py:27-55 — offsets AND
+  * operator state both live in the checkpoint).
   *
   * State per event_type: a `MapState[Long, Long]` of fixed-point value
   * (v4 = round(value·10⁴)) → running count. Counts are a commutative
   * monoid, so arrival ORDER is free; replay of an uncommitted batch
   * after a crash is absorbed by the state store's per-batch versioning
   * (restart rolls state back to the last committed version before
-  * re-processing — exactly-once state, asserted across a kill/restart
-  * in `QuantileTwsSpec`). Duplicate delivery of the same logical row in
+  * re-processing — exactly-once state, asserted in `QuantileTwsSpec` by
+  * a batch that crashes after its state commit and replays). Duplicate
+  * delivery of the same logical row in
   * DIFFERENT batches is counted twice — correctly: the one-shot over
   * the concatenated arrivals counts it twice too (that contract stays
-  * on the upstream dedup stage, `Streams.dedupEvents`).
+  * on the upstream dedup stage, [[Streams.dedupWithinWatermark]]).
   *
   * Per batch it emits ONLY the updated (event_type, v4, new_total)
   * entries in Update mode — O(batch delta), never O(state): the

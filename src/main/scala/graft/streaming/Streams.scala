@@ -5,7 +5,7 @@ import scala.collection.concurrent.TrieMap
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 
 import graft.operators.Cdc
 
@@ -17,6 +17,12 @@ import graft.operators.Cdc
   * incrementalized by MicroBatchExecution, and state stores shard by the
   * grouping key, so parallelism scales with partitions exactly like the
   * batch plans.
+  *
+  * The incremental twins here are the foreachBatch ones whose state is
+  * parquet under a state directory. The HLL, quantile, survival, KL
+  * drift and deltaSum twins keep engine-managed keyed state instead:
+  * [[HllState]], [[QuantileState]], [[SurvivalState]], [[KlState]] and
+  * [[DeltaSumState]].
   */
 object Streams {
 
@@ -38,16 +44,6 @@ object Streams {
       .select(col("win.start").as("win_start"), col("event_type"),
         col("n"), col("total"))
   }
-
-  /** ST4: session windows — gap-based grouping per user. */
-  def sessionCounts(events: DataFrame, tsCol: String, watermark: String,
-      gap: String): DataFrame =
-    events
-      .withWatermark(tsCol, watermark)
-      .groupBy(session_window(col(tsCol), gap).as("win"), col("user_id"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("win.start").as("win_start"), col("win.end").as("win_end"),
-        col("user_id"), col("n"))
 
   /** ST5: at-least-once redelivery dedup bounded by the watermark. */
   def dedupWithinWatermark(events: DataFrame, tsCol: String,
@@ -126,26 +122,6 @@ object Streams {
       graft.sources.ParquetSink.writePartitioned(
         batch, path, partitionCols, mode = "append")
 
-  /** ST6 state record: per-user running aggregate. */
-  final case class UserState(user_id: Long, n_events: Long, total: Double)
-  final case class UserEvent(user_id: Long, event_type: String, value: Double)
-
-  /** ST6: arbitrary keyed state via mapGroupsWithState — running per-user
-    * totals that survive across micro-batches. */
-  def runningUserTotals(events: Dataset[UserEvent]): Dataset[UserState] =
-    events
-      .groupByKey(_.user_id)(Encoders.scalaLong)
-      .mapGroupsWithState[UserState, UserState](
-        GroupStateTimeout.NoTimeout) {
-        (uid: Long, batch: Iterator[UserEvent], state: GroupState[UserState]) =>
-          val prev = state.getOption.getOrElse(UserState(uid, 0L, 0.0))
-          var n = prev.n_events; var t = prev.total
-          batch.foreach { e => n += 1; t += e.value }
-          val next = UserState(uid, n, t)
-          state.update(next)
-          next
-      }(Encoders.product[UserState], Encoders.product[UserState])
-
   /** ST6 session record emitted when a session CLOSES. */
   final case class ClosedSession(user_id: Long, session_start: java.sql.Timestamp,
       session_end: java.sql.Timestamp, n_events: Long)
@@ -161,8 +137,7 @@ object Streams {
     * neighbor whose start is within gapMs of the running end. An event
     * that lands BETWEEN two buffered sessions and within gap of both
     * bridges them into one (counts add) — the out-of-order case a
-    * single-open-tail fold gets wrong. Shared by both sessionizer
-    * implementations so their semantics cannot drift. */
+    * single-open-tail fold gets wrong. */
   private[graft] def mergeIntervals(prev: Seq[SessionAcc], times: Seq[Long],
       gapMs: Long): List[SessionAcc] = {
     val all = (prev ++ times.map(t => SessionAcc(t, t, 1L)))
@@ -189,56 +164,25 @@ object Streams {
     ClosedSession(uid, new java.sql.Timestamp(s.startMs),
       new java.sql.Timestamp(s.lastMs + gapMs), s.n)
 
-  /** ST6 deep form: sessionization via flatMapGroupsWithState with
-    * EVENT-TIME timeout — the arbitrary-state generalization of
-    * session_window (use this shape when the per-session logic can't be
-    * an aggregate: emit-on-close, per-session enrichment, custom merge).
+  final case class UserEvent2(user_id: Long, ts: java.sql.Timestamp, value: Double)
+
+  /** ST6: emit-on-close sessionization on `transformWithState` — the
+    * arbitrary-state generalization of `session_window` (use this shape
+    * when the per-session logic can't be an aggregate: emit-on-close,
+    * per-session enrichment, custom merge).
     *
     * A session is emitted ONLY once the watermark strictly passes its
     * close (last event + gap): until then an admissible out-of-order
     * event in a later micro-batch could still extend it — or bridge two
     * buffered sessions into one ([[mergeIntervals]]) — so emitting at
     * the first intra-batch gap would make output depend on batch
-    * alignment. State therefore holds every not-yet-safe session, and
-    * one event-time timer (the earliest pending close) re-checks after
+    * alignment. Typed `ValueState` holds every not-yet-safe session, and
+    * one EVENT-TIME TIMER (the earliest pending close) re-checks after
     * each watermark advance; emitted sessions leave state, so store
-    * size tracks pending sessions only. */
-  def sessionizeWithTimeout(events: Dataset[UserEvent2], gapMs: Long,
-      watermark: String = "10 seconds"): Dataset[ClosedSession] =
-    events
-      .withWatermark("ts", watermark)
-      .groupByKey(_.user_id)(Encoders.scalaLong)
-      .flatMapGroupsWithState[SessionBuf, ClosedSession](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, batch: Iterator[UserEvent2], state: GroupState[SessionBuf]) =>
-          val wm = state.getCurrentWatermarkMs()
-          val merged =
-            if (state.hasTimedOut) state.getOption.map(_.sessions).getOrElse(Nil)
-            else mergeIntervals(state.getOption.map(_.sessions).getOrElse(Nil),
-              batch.map(_.ts.getTime).toSeq, gapMs)
-          val (done, keep) = splitByWatermark(merged, wm, gapMs)
-          if (keep.isEmpty) { if (state.exists) state.remove() }
-          else {
-            state.update(SessionBuf(keep))
-            // earliest pending close; clamp above the watermark (a keep
-            // close may equal wm, which setTimeoutTimestamp rejects)
-            state.setTimeoutTimestamp(
-              math.max(keep.map(_.lastMs).min + gapMs, wm + 1))
-          }
-          done.sortBy(_.startMs).iterator.map(toClosed(uid, _, gapMs))
-      }(Encoders.product[SessionBuf], Encoders.product[ClosedSession])
-
-  final case class UserEvent2(user_id: Long, ts: java.sql.Timestamp, value: Double)
-
-  /** ST6, Spark-4-native form: the same emit-on-close sessionizer as
-    * [[sessionizeWithTimeout]], rebuilt on `transformWithState` — typed
-    * `ValueState` replaces the single `GroupState` blob and the close
-    * condition is an explicit EVENT-TIME TIMER (re-armed to last-event +
-    * gap on every batch) instead of `setTimeoutTimestamp`. Requires the
-    * RocksDB state store provider — the same store that gives 100 TB
-    * streams changelog checkpointing and out-of-heap state; see
-    * [[sessionizeTransformWithState]] for the conf. `StreamingSpec`
-    * drives both implementations through one golden scenario. */
+    * size tracks pending sessions only. Requires the RocksDB state store
+    * provider — the same store that gives 100 TB streams changelog
+    * checkpointing and out-of-heap state; see
+    * [[sessionizeTransformWithState]] for the conf. */
   final class SessionProcessor(gapMs: Long)
       extends StatefulProcessor[Long, UserEvent2, ClosedSession] {
     @transient private var buf: ValueState[SessionBuf] = _
@@ -251,8 +195,7 @@ object Streams {
       if (buf.exists()) buf.get().sessions else Nil
 
     /** emit watermark-safe sessions, keep the rest, re-arm one timer at
-      * the earliest pending close (shared by both callbacks — the same
-      * watermark-gated rule as [[sessionizeWithTimeout]]) */
+      * the earliest pending close (shared by both callbacks) */
     private def flush(uid: Long, merged: Seq[SessionAcc],
         wm: Long): Iterator[ClosedSession] = {
       val (done, keep) = splitByWatermark(merged, wm, gapMs)
@@ -911,78 +854,6 @@ object Streams {
     emitted
   }
 
-  /** ST6 incremental twin of
-    * [[graft.operators.EventAnalytics4.q92DeltaSum]]: per-user deltaSum
-    * maintained across micro-batches with bounded per-batch state — one
-    * stored row per (user, batch): reading count, internal
-    * positive-step sum, and the first/last ×10⁴ fixed-point readings in
-    * (ts, event_id) order. Contract: batches arrive time-ordered per
-    * user (the CDC-replay / monotone-source case — the same
-    * sorted-arrival contract the curation twin documents for its
-    * golden). The cumulative answer folds the stored aggregates per
-    * user in batch_id order: Σ internal sums + Σ cross-boundary
-    * positive steps (lag over ≤|batches| rows per user).
-    *
-    * Idempotence: a retry overwrites ONLY its own `agg/batch_id=`
-    * partition and reads priors (batch_id < current) → re-running a
-    * failed batch cannot double-count. 100 TB shape: the per-batch agg
-    * is one window + hash agg on user_id (batch-sized); the fold reads
-    * |users|·|batches| aggregate rows, never raw events. */
-  def deltaSumIncrementalBatch(batch: DataFrame, stateDir: String,
-      batchId: Long): DataFrame = {
-    val spark = batch.sparkSession
-    val wB = Window.partitionBy("user_id").orderBy(col("t"), col("event_id"))
-    val agg = batch
-      .select(col("user_id"), unix_micros(col("ts")).as("t"), col("event_id"),
-        floor(col("value") * 10000.0 + 0.5).cast("long").as("v4"))
-      .withColumn("pv4", lag(col("v4"), 1).over(wB))
-      .groupBy("user_id")
-      .agg(
-        count(lit(1)).as("bn"),
-        sum(when(col("pv4").isNotNull && col("v4") > col("pv4"),
-          col("v4") - col("pv4")).otherwise(0L)).as("bacc"),
-        min_by(col("v4"), struct(col("t"), col("event_id"))).as("first_v4"),
-        max_by(col("v4"), struct(col("t"), col("event_id"))).as("last_v4"))
-    agg.write.mode("overwrite").parquet(s"$stateDir/agg/batch_id=$batchId")
-    val aggPath = new org.apache.hadoop.fs.Path(s"$stateDir/agg")
-    val all = spark.read.parquet(aggPath.toString)
-      .filter(col("batch_id") < batchId)
-      .select("user_id", "batch_id", "bn", "bacc", "first_v4", "last_v4")
-      .unionByName(agg.withColumn("batch_id", lit(batchId))
-        .select("user_id", "batch_id", "bn", "bacc", "first_v4", "last_v4"))
-    val wF = Window.partitionBy("user_id").orderBy(col("batch_id"))
-    all
-      .withColumn("prev_last", lag(col("last_v4"), 1).over(wF))
-      .groupBy("user_id")
-      .agg(
-        sum(col("bn")).as("n_events"),
-        ((sum(col("bacc")) +
-          sum(when(col("prev_last").isNotNull &&
-            col("first_v4") > col("prev_last"),
-            col("first_v4") - col("prev_last")).otherwise(0L)))
-          .cast("double") / 10000.0).as("delta_sum"))
-  }
-
-  def klDriftIncrementalBatch(batch: DataFrame, stateDir: String,
-      batchId: Long): DataFrame = {
-    import graft.operators.{TextAnalysis, TextAnalysis6}
-    val spark = batch.sparkSession
-    val counts = oneRowPerKey(batch, "doc_id")
-      .select(col("source"), explode(TextAnalysis.words(col("text"))).as("w"))
-      .groupBy("source", "w").agg(count(lit(1)).as("c"))
-    counts.write.mode("overwrite")
-      .parquet(s"$stateDir/counts/batch_id=$batchId")
-    val prior = {
-      val p = new org.apache.hadoop.fs.Path(s"$stateDir/counts")
-      spark.read.parquet(p.toString)
-        .filter(col("batch_id") < batchId)
-        .select("source", "w", "c")
-    }
-    val cumulative = prior.unionByName(counts)
-      .groupBy("source", "w").agg(sum("c").as("c"))
-    TextAnalysis6.klFromCounts(cumulative)
-  }
-
   /** ST1+ST2+ST3: an idempotent upsert sink for foreachBatch. Maintains
     * keyed state (here an in-memory map; in production the same merge
     * runs as a MERGE INTO / ReplacingMergeTree insert) by replaying each
@@ -1033,97 +904,6 @@ object Streams {
       }
 
     def snapshot: Map[Any, Row] = state.map { case (k, (_, r)) => k -> r }.toMap
-  }
-  /** ST6 incremental twin of `q136_hll_portable`: per micro-batch the
-    * (event_type, bucket)→max-rank register deltas land as an
-    * overwrite-own-partition parquet state (retry-idempotent), and the
-    * cumulative registers are the per-key MAX across batches — HLL
-    * state is a join-semilattice, so arrival ORDER AND DUPLICATION are
-    * both irrelevant (a strictly stronger contract than the
-    * time-ordered deltaSum twin). Output = the one-shot estimator
-    * minus its exact-count audit column: streaming exact distinct is
-    * precisely the state HLL exists to avoid. */
-  def hllIncrementalBatch(batch: DataFrame, stateDir: String,
-      batchId: Long): DataFrame = {
-    import graft.operators.EventAnalytics12
-    val spark = batch.sparkSession
-    val regs = EventAnalytics12.hllRanks(
-        batch.select("event_type", "user_id"))
-      .groupBy("event_type", "bucket").agg(max("rank").as("mj"))
-    regs.write.mode("overwrite").parquet(s"$stateDir/regs/batch_id=$batchId")
-    val all = spark.read
-      .parquet(new org.apache.hadoop.fs.Path(s"$stateDir/regs").toString)
-      .filter(col("batch_id") < batchId)
-      .select("event_type", "bucket", "mj")
-      .unionByName(regs)
-      .groupBy("event_type", "bucket").agg(max("mj").as("mj"))
-    EventAnalytics12.hllEstimate(all,
-      all.select("event_type").distinct())
-  }
-
-  /** ST6 incremental twin of `q137_quantile_sketch`: per micro-batch
-    * the (event_type, v4)→count deltas land as an
-    * overwrite-own-partition parquet state (retry-idempotent), the
-    * cumulative value counts are the per-key SUM across batches, and
-    * the output runs the IDENTICAL factored estimator tail
-    * (`EventAnalytics13.quantileFromValueCounts`) over them — so
-    * golden ≡ one-shot in ANY arrival order (counts are a commutative
-    * monoid). Unlike the HLL twin's join-semilattice, a sum does NOT
-    * absorb duplicate DELIVERY of the same rows in different batches —
-    * that contract stays where it belongs, on the upstream dedup stage
-    * (`cdc_dedup_redelivery` / `Streams.dedupEvents`); what IS
-    * absorbed is a retry of the same batch id. */
-  def quantileIncrementalBatch(batch: DataFrame, stateDir: String,
-      batchId: Long): DataFrame = {
-    import graft.operators.EventAnalytics13
-    val spark = batch.sparkSession
-    val vcB = batch
-      .select(col("event_type"),
-        floor(col("value") * 10000.0 + 0.5).cast("long").as("v4"))
-      .groupBy("event_type", "v4").agg(count(lit(1)).as("c"))
-    vcB.write.mode("overwrite").parquet(s"$stateDir/vc/batch_id=$batchId")
-    val all = spark.read
-      .parquet(new org.apache.hadoop.fs.Path(s"$stateDir/vc").toString)
-      .filter(col("batch_id") < batchId)
-      .select("event_type", "v4", "c")
-      .unionByName(vcB)
-      .groupBy("event_type", "v4").agg(sum("c").as("c"))
-    EventAnalytics13.quantileFromValueCounts(spark, all)
-  }
-
-  /** ST6 incremental twin of `q143_survival_km`: per micro-batch the
-    * per-user (min signup ts, min purchase ts) and the batch max ts
-    * land as overwrite-own-partition parquet state; the cumulative
-    * state is min/min/max across batches — a JOIN-SEMILATTICE, so
-    * arrival ORDER and DUPLICATE DELIVERY are both absorbed (the HLL
-    * twin's contract, stronger than the count-monoid quantile twin) —
-    * and the output runs the IDENTICAL factored estimator
-    * (`EventAnalytics14.survivalFromState`). The censoring end is the
-    * running max over ALL events, exactly the one-shot's `mx`, so the
-    * curve after the final batch equals the one-shot on the same
-    * corpus. */
-  def survivalIncrementalBatch(batch: DataFrame, stateDir: String,
-      batchId: Long): DataFrame = {
-    import graft.operators.EventAnalytics14
-    val spark = batch.sparkSession
-    val uB = batch.groupBy("user_id")
-      .agg(min(when(col("event_type") === "signup", col("ts"))).as("s_ts"),
-        min(when(col("event_type") === "purchase", col("ts"))).as("p_ts"),
-        max(col("ts")).as("b_mx"))
-    uB.write.mode("overwrite").parquet(s"$stateDir/users/batch_id=$batchId")
-    val all = spark.read
-      .parquet(new org.apache.hadoop.fs.Path(s"$stateDir/users").toString)
-      .filter(col("batch_id") < batchId)
-      .select("user_id", "s_ts", "p_ts", "b_mx")
-      .unionByName(uB)
-      .groupBy("user_id")
-      .agg(min("s_ts").as("s_ts"), min("p_ts").as("p_ts"),
-        max("b_mx").as("b_mx"))
-      .localCheckpoint(true) // three consumers below
-    val su = all.filter(col("s_ts").isNotNull).select("user_id", "s_ts")
-    val pu = all.filter(col("p_ts").isNotNull).select("user_id", "p_ts")
-    val mx = all.agg(max("b_mx").as("m_ts"))
-    EventAnalytics14.survivalFromState(su, pu, mx)
   }
 
   // ------------------------------------------------------------------

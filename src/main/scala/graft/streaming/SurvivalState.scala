@@ -8,12 +8,10 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig,
 /** ST6 via the REAL arbitrary-state API, third operator: the
   * `q143_survival_km` Kaplan–Meier per-user state as a
   * [[StatefulProcessor]] under `transformWithState` (RocksDB state
-  * store) — the `transformWithState` counterpart of the
-  * foreachBatch/parquet-state twin (`Streams.survivalIncrementalBatch`),
-  * the same upgrade [[HllState]] gives the HLL twin and
-  * [[QuantileState]] the quantile twin (reference semantics: the
-  * consumer's resume-from-group-offsets loop, main.py:27-55 — offsets
-  * AND operator state both live in the checkpoint).
+  * store), following [[HllState]] and [[QuantileState]] (reference
+  * semantics: the consumer's resume-from-group-offsets loop,
+  * main.py:27-55 — offsets AND operator state both live in the
+  * checkpoint).
   *
   * State per user: (min signup µs, min purchase µs, max event µs) with
   * `Long.MaxValue` / `Long.MinValue` sentinels for "none yet" — a
@@ -22,7 +20,8 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig,
   * into the same fixpoint (the HLL twin's contract, strictly stronger
   * than the count-monoid quantile twin, which tolerates replay but not
   * cross-batch duplicates). `SurvivalTwsSpec` asserts golden ≡ one-shot
-  * across a kill/restart with duplicate users spanning the boundary.
+  * across a kill/restart with duplicate users spanning the boundary,
+  * and ≡ the registered q143 across a crashed-and-replayed batch.
   *
   * Per batch each updated user emits its merged (s, p, t) snapshot —
   * one row per updated key, O(batch keys) not O(state); the downstream

@@ -1,27 +1,43 @@
 package graft
 
-import org.apache.spark.sql.Row
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.operators.EventAnalytics12.{hllEstimate, hllRanks}
 import graft.streaming.HllState
 
 /** ST6 on the real arbitrary-state API: `transformWithState` HLL sketch
   * with RocksDB-backed keyed state — golden ≡ one-shot across a query
   * KILL + RESTART from the same checkpoint, with duplicate delivery
-  * spanning the restart boundary. */
+  * spanning the restart boundary, and ≡ the registered
+  * `q136_hll_portable` across a crashed-and-replayed batch. */
 class HllTwsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
+  private type Est = (String, Long, Long, Double)
+
+  private def rows(df: org.apache.spark.sql.DataFrame): Set[Est] =
+    df.select("event_type", "v_empty", "s_fix", "est")
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
+        r.getDouble(3))).toSet
+
+  /** streamed register snapshots → the one-shot estimator tail */
+  private def estimate(snap: Map[String, Array[Byte]]): Set[Est] = {
+    val streamed = snap.toSeq
+      .flatMap { case (k, regs) =>
+        regs.zipWithIndex.collect {
+          case (m, b) if m > 0 => (k, b.toLong, m.toInt)
+        }
+      }
+      .toDF("event_type", "bucket", "mj")
+    rows(hllEstimate(streamed, snap.keySet.toSeq.toDF("event_type")))
+  }
+
   test("transformWithState HLL survives restart; final state ≡ one-shot") {
     implicit val ctx = spark.sqlContext
     val ckpt = java.nio.file.Files.createTempDirectory("hll_tws_ckpt").toString
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prior = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val in = MemoryStream[(String, Long)]
     @volatile var snap = Map.empty[String, Array[Byte]]
     def start() = HllState
@@ -40,7 +56,7 @@ class HllTwsSpec extends AnyFunSuite {
     val batch2 = (200L to 600L).map(u => ("view", u)) ++ // 200–400 are dups
       (100L to 260L).map(u => ("purchase", u)) ++ // 100–150 are dups
       (1L to 90L).map(u => ("click", u)) // key first seen after restart
-    try {
+    TestSpark.withRocksDbState {
       val q1 = start()
       in.addData(batch1: _*)
       q1.processAllAvailable()
@@ -50,37 +66,33 @@ class HllTwsSpec extends AnyFunSuite {
       in.addData(batch2: _*)
       q2.processAllAvailable()
       q2.stop()
-    } finally {
-      prior match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
     }
 
     // one-shot estimator over ALL distinct arrivals (duplicates folded)
-    import graft.operators.EventAnalytics12.{hllEstimate, hllRanks}
     val all = (batch1 ++ batch2).toDF("event_type", "user_id")
     val oneShotRegs = hllRanks(all)
       .groupBy("event_type", "bucket").agg(max("rank").as("mj"))
-    val expected = hllEstimate(oneShotRegs,
-        all.select("event_type").distinct())
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-        r.getDouble(3))).toSet
+    val expected = rows(hllEstimate(oneShotRegs,
+      all.select("event_type").distinct()))
 
     // streaming state → the same estimator tail
     assert(snap.keySet === Set("view", "purchase", "click"))
-    val streamed = snap.toSeq
-      .flatMap { case (k, regs) =>
-        regs.zipWithIndex.collect {
-          case (m, b) if m > 0 => (k, b.toLong, m.toInt)
-        }
-      }
-      .toDF("event_type", "bucket", "mj")
-    val got = hllEstimate(streamed,
-        snap.keySet.toSeq.toDF("event_type"))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-        r.getDouble(3))).toSet
-    assert(got === expected,
+    assert(estimate(snap) === expected,
       "restart + duplicate delivery must fold to the one-shot registers")
+  }
+
+  test("a crashed batch replays without moving the registers; state ≡ " +
+    "the registered q136 on the tiny corpus, shuffled and redelivered") {
+    // slices by user_id mod 3 — deliberately NOT time slices — and
+    // batch 0 re-delivered inside batch 2: the semilattice contract says
+    // neither arrival order nor duplicate delivery may matter
+    val ev = Tables.events(spark, TestSpark.tiny)
+      .select("event_type", "user_id").as[(String, Long)].collect().toSeq
+    val s = (0 until 3).map(i => ev.filter(_._2 % 3 == i))
+    val emitted = CrashReplay.run(Seq(s(0), s(1), s(2) ++ s(0)))(ds =>
+      HllState.hllSketch(ds.toDF("event_type", "user_id")))
+    assert(estimate(emitted.toMap) === rows(
+      graft.operators.EventAnalytics12.q136HllPortable
+        .run(spark, TestSpark.tiny)))
   }
 }

@@ -13,10 +13,17 @@ import graft.streaming.KlState
   * KILL + RESTART, with the SAME documents re-delivered in batches
   * on both sides of the boundary: the seen-doc state, not a per-batch
   * aggregation, must absorb them. Real corpus text, so the Scala
-  * tokenizer mirror is proven against the Column pipeline too. */
+  * tokenizer mirror is proven against the Column pipeline too. And ≡
+  * the registered `text_kl_drift` across a crashed-and-replayed batch,
+  * in sorted and shuffled arrival order. */
 class KlDriftTwsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
+
+  private def tail(wc: org.apache.spark.sql.DataFrame) =
+    graft.operators.TextAnalysis6.klFromCounts(wc)
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
+      .toSeq
 
   test("tokens mirrors split(trim(text), ' ') exactly") {
     val cases = Seq("", " ", "  a  b ", "a b", " a\tb c ", "x  y",
@@ -31,10 +38,6 @@ class KlDriftTwsSpec extends AnyFunSuite {
   test("transformWithState KL counts survive restart + cross-boundary redelivery") {
     implicit val ctx = spark.sqlContext
     val ckpt = java.nio.file.Files.createTempDirectory("kl_tws_ckpt").toString
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prior = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
 
     // real corpus docs: the tokenizer parity matters on real text
     val docs = spark.read
@@ -61,7 +64,7 @@ class KlDriftTwsSpec extends AnyFunSuite {
       .option("checkpointLocation", ckpt)
       .start()
 
-    try {
+    TestSpark.withRocksDbState {
       val q1 = start()
       in.addData(batch1: _*)
       q1.processAllAvailable()
@@ -71,11 +74,6 @@ class KlDriftTwsSpec extends AnyFunSuite {
       in.addData(batch2: _*)
       q2.processAllAvailable()
       q2.stop()
-    } finally {
-      prior match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
     }
 
     // one-shot: each doc counted ONCE (the oneRowPerKey contract)
@@ -94,9 +92,26 @@ class KlDriftTwsSpec extends AnyFunSuite {
         "must each count exactly once")
 
     // …and the IDENTICAL smoothed-KL tail must agree end-to-end
-    def tail(wc: org.apache.spark.sql.DataFrame) =
-      graft.operators.TextAnalysis6.klFromCounts(wc)
-        .collect().map(_.toSeq).toSeq
     assert(tail(streamed) === tail(oneShot))
+  }
+
+  test("a crashed batch replays without double-counting; drift ≡ the " +
+    "registered text_kl_drift, sorted and shuffled arrival") {
+    val expected = graft.operators.TextAnalysis6.klDrift
+      .run(spark, TestSpark.tiny)
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
+      .toSeq
+    val docs = Tables.documents(spark, TestSpark.tiny)
+      .select(col("source"), col("doc_id"), col("text"))
+      .as[(String, Long, String)].collect().sortBy(_._2).toSeq
+    def drift(order: Seq[(String, Long, String)]) = {
+      val emitted = CrashReplay.run(order.grouped(order.length / 3 + 1).toSeq)(
+        ds => KlState.klWordCounts(ds.toDF("source", "doc_id", "text")))
+      tail(emitted.map { case (s, w, c) => (s, w) -> c }.toMap.toSeq
+        .map { case ((s, w), c) => (s, w, c) }.toDF("source", "w", "c"))
+    }
+    assert(drift(docs) === expected, "sorted arrival")
+    assert(drift(new scala.util.Random(7).shuffle(docs)) === expected,
+      "shuffled arrival")
   }
 }

@@ -11,18 +11,19 @@ import graft.streaming.QuantileState
   * keyed `MapState` — golden ≡ one-shot across a query KILL + RESTART
   * from the same checkpoint, with duplicate VALUES delivered in batches
   * spanning the restart boundary (a count monoid counts them exactly as
-  * the one-shot over the concatenated arrivals does). */
+  * the one-shot over the concatenated arrivals does), and ≡ the
+  * registered `q137_quantile_sketch` across a crashed-and-replayed
+  * batch, where a state version that is not rolled back double-counts. */
 class QuantileTwsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
+  private def tail(vc: org.apache.spark.sql.DataFrame) =
+    graft.operators.EventAnalytics13.quantileFromValueCounts(spark, vc)
+
   test("transformWithState quantile sketch survives restart; state ≡ one-shot") {
     implicit val ctx = spark.sqlContext
     val ckpt = java.nio.file.Files.createTempDirectory("qtl_tws_ckpt").toString
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prior = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val in = MemoryStream[(String, Double)]
     // Update-mode emission: per batch each updated key emits only its
     // UPDATED (v4 → new total) entries (O(delta), not O(state)); the
@@ -44,7 +45,7 @@ class QuantileTwsSpec extends AnyFunSuite {
     val batch2 = (1 to 250).map(i => ("view", (i % 97) * 0.37)) ++ // dups of batch1 values
       (1 to 80).map(i => ("purchase", 17.0 + (i % 13) * 0.005)) ++
       (1 to 60).map(i => ("click", i * 0.25)) // key first seen after restart
-    try {
+    TestSpark.withRocksDbState {
       val q1 = start()
       in.addData(batch1: _*)
       q1.processAllAvailable()
@@ -54,11 +55,6 @@ class QuantileTwsSpec extends AnyFunSuite {
       in.addData(batch2: _*)
       q2.processAllAvailable()
       q2.stop()
-    } finally {
-      prior match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
     }
 
     // one-shot: the q137 pipeline head over ALL arrivals (dups counted)
@@ -80,9 +76,30 @@ class QuantileTwsSpec extends AnyFunSuite {
       "restart + cross-boundary duplicate values must sum to the one-shot counts")
 
     // …and the IDENTICAL factored estimator tail must agree end-to-end
-    def tail(vc: org.apache.spark.sql.DataFrame) =
-      graft.operators.EventAnalytics13.quantileFromValueCounts(spark, vc)
-        .collect().map(_.toSeq).toSeq
-    assert(tail(streamedVc) === tail(oneShotVc))
+    assert(tail(streamedVc).collect().map(_.toSeq).toSeq ===
+      tail(oneShotVc).collect().map(_.toSeq).toSeq)
+  }
+
+  test("a crashed batch replays without double-counting; sketch ≡ the " +
+    "registered q137 on the tiny corpus, shuffled arrival") {
+    def key(df: org.apache.spark.sql.DataFrame) =
+      df.select("event_type", "pct", "n", "exact_v", "est_v", "err")
+        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
+          r.getDouble(3), r.getDouble(4), r.getDouble(5))).toSet
+    // slices by user_id mod 3 — deliberately NOT time slices: the
+    // monoid contract says arrival order must not matter
+    val ev = Tables.events(spark, TestSpark.tiny)
+      .select("event_type", "value", "user_id")
+      .as[(String, Double, Long)].collect().toSeq
+    val slices = (0 until 3).map(i =>
+      ev.filter(_._3 % 3 == i).map(e => (e._1, e._2)))
+    val emitted = CrashReplay.run(slices)(ds =>
+      QuantileState.quantileSketch(ds.toDF("event_type", "value")))
+    val vc = emitted.map { case (k, v4, c) => (k, v4) -> c }.toMap.toSeq
+      .map { case ((k, v4), c) => (k, v4, c) }
+      .toDF("event_type", "v4", "c")
+    assert(key(tail(vc)) === key(graft.operators.EventAnalytics13
+      .q137QuantileSketch.run(spark, TestSpark.tiny)),
+      "a replayed batch must count once")
   }
 }

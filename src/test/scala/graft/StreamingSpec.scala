@@ -63,25 +63,6 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("mapGroupsWithState keeps running per-user totals across batches") {
-    implicit val ctx = spark.sqlContext
-    val in = MemoryStream[Streams.UserEvent]
-    val out = Streams.runningUserTotals(in.toDS())
-    val q = out.writeStream.outputMode("update")
-      .format("memory").queryName("state_out").start()
-    try {
-      in.addData(Streams.UserEvent(1L, "click", 2.0),
-        Streams.UserEvent(1L, "view", 3.0))
-      q.processAllAvailable()
-      in.addData(Streams.UserEvent(1L, "purchase", 5.0))
-      q.processAllAvailable()
-      val last = spark.table("state_out")
-        .filter($"user_id" === 1L).orderBy($"n_events".desc)
-        .as[Streams.UserState].head()
-      assert(last === Streams.UserState(1L, 3L, 10.0))
-    } finally q.stop()
-  }
-
   test("Trigger.AvailableNow drains the backlog and stops (S4 micro-batching)") {
     implicit val ctx = spark.sqlContext
     import org.apache.spark.sql.streaming.Trigger
@@ -175,66 +156,33 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("flatMapGroupsWithState closes sessions on event-time timeout") {
+  test("transformWithState sessionizer closes sessions on event-time timeout") {
     implicit val ctx = spark.sqlContext
-    val in = MemoryStream[Streams.UserEvent2]
-    val out = Streams.sessionizeWithTimeout(in.toDS(), gapMs = 60000L)
-    val q = out.writeStream.outputMode("append")
-      .format("memory").queryName("sess_out").start()
-    try {
-      // user 1: two events 30s apart (same session, gap 60s)
-      in.addData(
-        Streams.UserEvent2(1L, ts("2024-01-01 10:00:00"), 1.0),
-        Streams.UserEvent2(1L, ts("2024-01-01 10:00:30"), 2.0))
-      q.processAllAvailable()
-      assert(spark.table("sess_out").isEmpty) // session still open
-      // much later event from ANOTHER user advances the watermark past
-      // user 1's last event + gap …
-      in.addData(Streams.UserEvent2(2L, ts("2024-01-01 11:00:00"), 3.0))
-      q.processAllAvailable()
-      // … and the timeout fires on the following trigger
-      in.addData(Streams.UserEvent2(2L, ts("2024-01-01 11:00:01"), 4.0))
-      q.processAllAvailable()
-      val got = spark.table("sess_out").as[Streams.ClosedSession].collect()
-      assert(got.map(_.user_id).toSet === Set(1L))
-      assert(got.head.n_events === 2L)
-      assert(got.head.session_start === ts("2024-01-01 10:00:00"))
-      assert(got.head.session_end === ts("2024-01-01 10:01:30")) // last + gap
-    } finally q.stop()
-  }
-
-  test("transformWithState sessionizer passes the same golden as " +
-    "flatMapGroupsWithState") {
-    implicit val ctx = spark.sqlContext
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val in = MemoryStream[Streams.UserEvent2]
     val out = Streams.sessionizeTransformWithState(in.toDS(), gapMs = 60000L)
-    val q = out.writeStream.outputMode("append")
-      .format("memory").queryName("sess_tws_out").start()
-    try {
-      in.addData(
-        Streams.UserEvent2(1L, ts("2024-01-01 10:00:00"), 1.0),
-        Streams.UserEvent2(1L, ts("2024-01-01 10:00:30"), 2.0))
-      q.processAllAvailable()
-      assert(spark.table("sess_tws_out").isEmpty) // session still open
-      in.addData(Streams.UserEvent2(2L, ts("2024-01-01 11:00:00"), 3.0))
-      q.processAllAvailable()
-      in.addData(Streams.UserEvent2(2L, ts("2024-01-01 11:00:01"), 4.0))
-      q.processAllAvailable()
-      val got = spark.table("sess_tws_out").as[Streams.ClosedSession].collect()
-      assert(got.map(_.user_id).toSet === Set(1L))
-      assert(got.head.n_events === 2L)
-      assert(got.head.session_start === ts("2024-01-01 10:00:00"))
-      assert(got.head.session_end === ts("2024-01-01 10:01:30")) // last + gap
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
+    TestSpark.withRocksDbState {
+      val q = out.writeStream.outputMode("append")
+        .format("memory").queryName("sess_tws_out").start()
+      try {
+        // user 1: two events 30s apart (same session, gap 60s)
+        in.addData(
+          Streams.UserEvent2(1L, ts("2024-01-01 10:00:00"), 1.0),
+          Streams.UserEvent2(1L, ts("2024-01-01 10:00:30"), 2.0))
+        q.processAllAvailable()
+        assert(spark.table("sess_tws_out").isEmpty) // session still open
+        // much later event from ANOTHER user advances the watermark past
+        // user 1's last event + gap …
+        in.addData(Streams.UserEvent2(2L, ts("2024-01-01 11:00:00"), 3.0))
+        q.processAllAvailable()
+        // … and the event-time timer fires on the following trigger
+        in.addData(Streams.UserEvent2(2L, ts("2024-01-01 11:00:01"), 4.0))
+        q.processAllAvailable()
+        val got = spark.table("sess_tws_out").as[Streams.ClosedSession].collect()
+        assert(got.map(_.user_id).toSet === Set(1L))
+        assert(got.head.n_events === 2L)
+        assert(got.head.session_start === ts("2024-01-01 10:00:00"))
+        assert(got.head.session_end === ts("2024-01-01 10:01:30")) // last + gap
+      } finally q.stop()
     }
   }
 
@@ -306,17 +254,8 @@ class StreamingSpec extends AnyFunSuite {
         assert(got.head.n_events === 3L)
       } finally q.stop()
     }
-    drive("sess_bridge_fmgws", ds => Streams.sessionizeWithTimeout(ds, 60000L))
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try drive("sess_bridge_tws",
-      ds => Streams.sessionizeTransformWithState(ds, 60000L))
-    finally prev match {
-      case Some(v) => spark.conf.set(providerKey, v)
-      case None => spark.conf.unset(providerKey)
-    }
+    TestSpark.withRocksDbState(drive("sess_bridge_tws",
+      ds => Streams.sessionizeTransformWithState(ds, 60000L)))
   }
 
   test("streaming near-dup: union of per-batch emissions equals the " +

@@ -14,7 +14,9 @@ import graft.streaming.SurvivalState
   * checkpoint, with DUPLICATE USERS' rows re-delivered in batches
   * spanning the restart boundary: a (min, min, max) join-semilattice
   * absorbs both replay and cross-batch duplicate delivery (the HLL
-  * twin's contract, stronger than the count-monoid quantile twin). */
+  * twin's contract, stronger than the count-monoid quantile twin) —
+  * and ≡ the registered `q143_survival_km` across a crashed-and-replayed
+  * batch. */
 class SurvivalTwsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -23,18 +25,28 @@ class SurvivalTwsSpec extends AnyFunSuite {
   private val Day = 86400000000L
   private val Min = 60000000L
 
+  private def toEvents(df: DataFrame): DataFrame = df
+    .toDF("user_id", "event_type", "us")
+    .select(col("user_id"), col("event_type"),
+      timestamp_micros(col("us")).as("ts"))
+
+  /** latest per-user (s, p, t) state → the factored estimator's three
+    * input relations → the KM curve */
+  private def curve(snap: Map[Long, (Long, Long, Long)]): DataFrame = {
+    val rows = snap.toSeq.map { case (u, (s, p, t)) => (u, s, p, t) }
+      .toDF("user_id", "s", "p", "t")
+    val su = rows.filter(col("s") =!= SurvivalState.NoMin)
+      .select(col("user_id"), timestamp_micros(col("s")).as("s_ts"))
+    val pu = rows.filter(col("p") =!= SurvivalState.NoMin)
+      .select(col("user_id"), timestamp_micros(col("p")).as("p_ts"))
+    val mx = rows.agg(max(timestamp_micros(col("t"))).as("m_ts"))
+    graft.operators.EventAnalytics14.survivalFromState(su, pu, mx)
+  }
+
   test("transformWithState survival state survives restart; curve ≡ one-shot") {
     implicit val ctx = spark.sqlContext
     val ckpt = java.nio.file.Files.createTempDirectory("surv_tws_ckpt").toString
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prior = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val in = MemoryStream[(Long, String, Long)]
-    def toEvents(df: DataFrame): DataFrame = df
-      .toDF("user_id", "event_type", "us")
-      .select(col("user_id"), col("event_type"),
-        timestamp_micros(col("us")).as("ts"))
     // Update-mode emission: one merged (s, p, t) snapshot per updated
     // user per batch; keep the latest per user
     @volatile var snap = Map.empty[Long, (Long, Long, Long)]
@@ -63,7 +75,7 @@ class SurvivalTwsSpec extends AnyFunSuite {
     val batch2 = batch1.take(15) ++ signups.drop(25) ++ purchases.drop(8) ++
       noise.drop(20) ++ Seq((42L, "signup", Base + 16 * Day),
         (42L, "purchase", Base + 16 * Day + 90 * Min))
-    try {
+    TestSpark.withRocksDbState {
       val q1 = start()
       in.addData(batch1: _*)
       q1.processAllAvailable()
@@ -73,23 +85,9 @@ class SurvivalTwsSpec extends AnyFunSuite {
       in.addData(batch2: _*)
       q2.processAllAvailable()
       q2.stop()
-    } finally {
-      prior match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
     }
 
-    // state → the factored estimator's three input relations
-    val rows = snap.toSeq.map { case (u, (s, p, t)) => (u, s, p, t) }
-      .toDF("user_id", "s", "p", "t")
-    val su = rows.filter(col("s") =!= SurvivalState.NoMin)
-      .select(col("user_id"), timestamp_micros(col("s")).as("s_ts"))
-    val pu = rows.filter(col("p") =!= SurvivalState.NoMin)
-      .select(col("user_id"), timestamp_micros(col("p")).as("p_ts"))
-    val mx = rows.agg(max(timestamp_micros(col("t"))).as("m_ts"))
-    val streamed = graft.operators.EventAnalytics14
-      .survivalFromState(su, pu, mx).collect().map(_.toSeq).toSeq
+    val streamed = curve(snap).collect().map(_.toSeq).toSeq
 
     // one-shot: the q143 head over ALL arrivals (duplicates included —
     // min/min/max absorbs them, exactly like the stream must)
@@ -107,5 +105,30 @@ class SurvivalTwsSpec extends AnyFunSuite {
       "post-restart users and late originals must be in state")
     assert(streamed === oneShot,
       "restart + cross-boundary duplicate users must fold to the one-shot curve")
+  }
+
+  test("a crashed batch replays without moving the curve; curve ≡ the " +
+    "registered q143 on the tiny corpus, shuffled and redelivered") {
+    def key(df: DataFrame) =
+      df.select("cohort_week", "t_min", "n_risk", "d_events", "log_surv")
+        .collect().map(r => (r.getDate(0), r.getLong(1), r.getLong(2),
+          r.getLong(3), r.getDouble(4))).toSet
+    // slices by event_id mod 3 — deliberately NOT time slices, and
+    // deliberately splitting single users across batches — with batch 0
+    // re-delivered inside batch 2: the semilattice contract says neither
+    // order, grouping nor duplicate delivery may matter
+    val ev = Tables.events(spark, TestSpark.tiny)
+      .select(col("user_id"), col("event_type"),
+        unix_micros(col("ts")).as("us"), col("event_id"))
+      .as[(Long, String, Long, Long)].collect().toSeq
+    val s = (0 until 3).map(i =>
+      ev.filter(_._4 % 3 == i).map(e => (e._1, e._2, e._3)))
+    val emitted = CrashReplay.run(Seq(s(0), s(1), s(2) ++ s(0)))(ds =>
+      SurvivalState.survivalState(toEvents(ds.toDF)))
+    val snap = emitted.map { case (u, sv, p, t) => u -> ((sv, p, t)) }.toMap
+    val streamed = key(curve(snap))
+    assert(streamed.nonEmpty, "the tiny corpus must produce KM rows")
+    assert(streamed === key(graft.operators.EventAnalytics14.q143SurvivalKm
+      .run(spark, TestSpark.tiny)))
   }
 }

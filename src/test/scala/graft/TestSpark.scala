@@ -19,4 +19,18 @@ object TestSpark {
   }
 
   val tiny = "/root/testdata/sf0.001"
+
+  /** Runs `body` under the RocksDB state store provider, which
+    * `transformWithState` requires, and restores the prior setting. */
+  def withRocksDbState[T](body: => T): T = {
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try body
+    finally prior match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
 }
