@@ -19,8 +19,9 @@ import graft.operators.Cdc
   * batch plans.
   *
   * The incremental twins here are the foreachBatch ones whose state is
-  * parquet under a state directory. The HLL, quantile, survival, KL
-  * drift and deltaSum twins keep engine-managed keyed state instead:
+  * a [[BatchIndex]] of parquet tables under a state directory. The
+  * HLL, quantile, survival, KL drift and deltaSum twins keep
+  * engine-managed keyed state instead:
   * [[HllState]], [[QuantileState]], [[SurvivalState]], [[KlState]] and
   * [[DeltaSumState]].
   */
@@ -234,12 +235,13 @@ object Streams {
         Encoders.product[ClosedSession])
 
   /** Streaming NEAR-dup dedup: the foreachBatch form of
-    * [[graft.operators.Dedup.incremental]]. The index at `indexDir`
-    * holds three batchId-partitioned tables:
+    * [[graft.operators.Dedup.incremental]]. The index at `indexDir` is
+    * a [[BatchIndex]] of four tables, each holding per batch:
     *
-    *   - `postings/batch_id=N` — (doc_id, shingle) for batch N's docs;
-    *   - `df/batch_id=N` — batch N's per-shingle posting counts;
-    *   - `sizes/batch_id=N` — batch N's per-doc capped set sizes.
+    *   - `postings` — (doc_id, shingle) for the batch's docs;
+    *   - `df` — the batch's per-shingle posting counts;
+    *   - `sizes` — the batch's per-doc capped set sizes;
+    *   - `sets` — the batch's per-doc sorted hash signatures.
     *
     * Each micro-batch is shingled once and paired as old⋈new + new⋈new
     * joins: old docs are never re-shingled, old⋈old is never re-paired.
@@ -255,11 +257,9 @@ object Streams {
     * later scores vs a one-shot run — the incremental stop-gram caveat,
     * impossible at test SF where the cap is never reached.
     *
-    * IDEMPOTENT under foreachBatch retries: every read filters to
-    * batch_id < this batch (a retry's own leftover partitions are
-    * invisible) and every write OVERWRITES this batch's partition, so
-    * re-running a batch rewrites the same files instead of
-    * double-counting document frequencies and set sizes. Every pair is
+    * IDEMPOTENT under foreachBatch retries ([[BatchIndex]]): re-running
+    * a batch rewrites the same files instead of double-counting
+    * document frequencies and set sizes. Every pair is
     * emitted exactly once, in the batch where its SECOND document
     * arrives; the union of all emissions equals the batch-free
     * [[graft.operators.Dedup.jaccardPairs]] over the full corpus
@@ -271,14 +271,11 @@ object Streams {
     // materialize BEFORE the index writes so the pair set reflects
     // the pre-append corpus even under lazy re-evaluation
     val pairs = pairsPlan.localCheckpoint(true)
-    newPost.write.mode("overwrite")
-      .parquet(s"$indexDir/postings/batch_id=$batchId")
-    batchDf.write.mode("overwrite")
-      .parquet(s"$indexDir/df/batch_id=$batchId")
-    newSizes.write.mode("overwrite")
-      .parquet(s"$indexDir/sizes/batch_id=$batchId")
-    newSigs.write.mode("overwrite")
-      .parquet(s"$indexDir/sets/batch_id=$batchId")
+    val index = new BatchIndex(indexDir, batchId)
+    index.put("postings", newPost)
+    index.put("df", batchDf)
+    index.put("sizes", newSizes)
+    index.put("sets", newSigs)
     pairs
   }
 
@@ -305,35 +302,24 @@ object Streams {
       indexDir: String, batchId: Long)
       : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) = {
     import graft.operators.Dedup
-    val spark = batch.sparkSession
-    def readPrior(name: String, cols: String*): Option[DataFrame] = {
-      val p = new org.apache.hadoop.fs.Path(s"$indexDir/$name")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p))
-        Some(spark.read.parquet(p.toString)
-          .filter(col("batch_id") < batchId) // retries see only priors
-          .select(cols.map(col): _*))
-      else None
-    }
+    val index = new BatchIndex(indexDir, batchId)
     // shingle ONLY the batch (batch-sized; reused by df/cap/sizes/joins)
     // shingleRows' contract requires one row per doc_id; an
     // at-least-once source can redeliver a doc WITHIN a batch, which
     // would otherwise inflate df/set sizes (cross-batch redelivery is
-    // handled by the batchId-keyed idempotent writes below)
+    // handled by the index's idempotent writes)
     val newPost = Dedup.shingleRows(oneRowPerKey(batch, "doc_id"))
       .localCheckpoint(true)
     val batchDf = newPost.groupBy("shingle").agg(count(lit(1)).as("cnt"))
     // current document frequency = prior per-batch deltas + this batch:
     // a sum over per-batch AGGREGATES, never a postings re-scan
-    val dfAll = readPrior("df", "shingle", "cnt")
-      .map(_.unionByName(batchDf)).getOrElse(batchDf)
-    val dfNow = dfAll.groupBy("shingle").agg(sum("cnt").as("df"))
+    val dfNow = index.prior("df", batchDf).unionByName(batchDf)
+      .groupBy("shingle").agg(sum("cnt").as("df"))
     val overCap = dfNow.filter(col("df") > Dedup.ShingleDfCap)
       .select("shingle")
     val cappedNew = newPost.join(overCap, Seq("shingle"), "left_anti")
     val newSizes = cappedNew.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val sizes = readPrior("sizes", "doc_id", "n")
-      .map(_.unionByName(newSizes)).getOrElse(newSizes)
+    val sizes = index.prior("sizes", newSizes).unionByName(newSizes)
     // per-doc sorted hash signature of the FULL (uncapped) arrival set —
     // what the index stores; intersections against it reproduce the
     // previous match-count semantics (old side uncapped, new side
@@ -350,15 +336,10 @@ object Streams {
     val prefixNew = rankedNew
       .filter(col("rn") <= col("n") - floor((col("n") + lit(2)) / lit(3)) + 1)
       .select("doc_id", "shingle")
-    val oldPost = readPrior("postings", "doc_id", "shingle")
-    val onCand = oldPost match {
-      case Some(op) => op.as("a").join(prefixNew.as("b"),
-          col("a.shingle") === col("b.shingle"))
-        .select(least(col("a.doc_id"), col("b.doc_id")).as("a_id"),
-          greatest(col("a.doc_id"), col("b.doc_id")).as("b_id"))
-      case None => newPost.limit(0)
-        .select(col("doc_id").as("a_id"), col("doc_id").as("b_id"))
-    }
+    val onCand = index.prior("postings", newPost).as("a")
+      .join(prefixNew.as("b"), col("a.shingle") === col("b.shingle"))
+      .select(least(col("a.doc_id"), col("b.doc_id")).as("a_id"),
+        greatest(col("a.doc_id"), col("b.doc_id")).as("b_id"))
     val nnCand = prefixNew.as("a").join(prefixNew.as("b"),
         col("a.shingle") === col("b.shingle") &&
           col("a.doc_id") < col("b.doc_id"))
@@ -368,8 +349,7 @@ object Streams {
     // arrival signature, new docs to the capped batch signature
     val cappedSigs = cappedNew.groupBy("doc_id")
       .agg(sort_array(collect_set(xxhash64(col("shingle")))).as("sig"))
-    val lookup = readPrior("sets", "doc_id", "sig")
-      .map(_.unionByName(cappedSigs)).getOrElse(cappedSigs)
+    val lookup = index.prior("sets", newSigs).unionByName(cappedSigs)
     val pairs = cand
       .join(lookup.select(col("doc_id").as("a_id"), col("sig").as("sa")), "a_id")
       .join(lookup.select(col("doc_id").as("b_id"), col("sig").as("sb")), "b_id")
@@ -391,8 +371,10 @@ object Streams {
     * (one hash agg). `dropDuplicates` keeps an ARBITRARY row — if a
     * "redelivery" ever carried an updated payload, which payload
     * entered downstream state would then differ across runs and
-    * foreachBatch retries. Shared by the near-dup index and the
-    * curation pipeline so their pick rules cannot drift. */
+    * foreachBatch retries. Shared by the near-dup index, the curation
+    * pipeline and the version-gated edit twins (whose payload is
+    * (version, text), so the max version wins) so their pick rules
+    * cannot drift. */
   private def oneRowPerKey(batch: DataFrame, key: String): DataFrame = {
     val payloadCols = batch.columns.filterNot(_ == key).toSeq
     batch.groupBy(key)
@@ -418,9 +400,8 @@ object Streams {
     *   - contaminated: an arriving holdout doc flips every stored
     *     training doc sharing one of its 5-shingles.
     *
-    * State at `stateDir` (all batchId-partitioned; reads filter
-    * batch_id < current, writes overwrite their own partition →
-    * idempotent under foreachBatch retries, the near-dup index scheme):
+    * State at `stateDir` is a [[BatchIndex]] (idempotent under
+    * foreachBatch retries):
     *   - `nd/`        — the [[nearDupIncrementalBatch]] index;
     *   - `norms/`     — per-batch (norm, min_id) keeper deltas;
     *   - `ho5/`       — per-batch distinct holdout 5-shingles;
@@ -438,16 +419,7 @@ object Streams {
   def curationIncrementalBatch(batch: DataFrame, stateDir: String,
       batchId: Long): DataFrame = {
     import graft.operators.{Dedup, TextAnalysis3}
-    val spark = batch.sparkSession
-    def readPrior(name: String, cols: String*): Option[DataFrame] = {
-      val p = new org.apache.hadoop.fs.Path(s"$stateDir/$name")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p))
-        Some(spark.read.parquet(p.toString)
-          .filter(col("batch_id") < batchId) // retries see only priors
-          .select(cols.map(col): _*))
-      else None
-    }
+    val index = new BatchIndex(stateDir, batchId)
     // near-dup pairs first (maintains its own nd/ index tables)
     val pairs = nearDupIncrementalBatch(batch, s"$stateDir/nd", batchId)
     val ndDocs = pairs.select(col("b_id").as("doc_id")).distinct()
@@ -458,24 +430,18 @@ object Streams {
     val batchNorms = docs.select(col("doc_id"),
       lower(trim(col("text"))).as("norm"))
     val batchMin = batchNorms.groupBy("norm").agg(min("doc_id").as("min_id"))
-    val oldMin = readPrior("norms", "norm", "min_id")
-      .map(_.groupBy("norm").agg(min("min_id").as("old_min")))
-    val curMin = oldMin match {
-      case Some(om) => batchMin
-        .unionByName(om.select(col("norm"), col("old_min").as("min_id")))
-        .groupBy("norm").agg(min("min_id").as("cur_min"))
-      case None => batchMin.select(col("norm"), col("min_id").as("cur_min"))
-    }
+    val oldMin = index.prior("norms", batchMin)
+      .groupBy("norm").agg(min("min_id").as("old_min"))
+    val curMin = batchMin
+      .unionByName(oldMin.select(col("norm"), col("old_min").as("min_id")))
+      .groupBy("norm").agg(min("min_id").as("cur_min"))
     val arrivingExd = batchNorms.join(curMin, "norm")
       .filter(col("doc_id") > col("cur_min"))
       .select("doc_id").withColumn("ex_hit", lit(true))
     // the stored keeper flips iff this batch brought a smaller id
-    val flippedExd = oldMin match {
-      case Some(om) => om.join(batchMin, "norm")
-        .filter(col("min_id") < col("old_min"))
-        .select(col("old_min").as("doc_id"))
-      case None => docs.select("doc_id").limit(0)
-    }
+    val flippedExd = oldMin.join(batchMin, "norm")
+      .filter(col("min_id") < col("old_min"))
+      .select(col("old_min").as("doc_id"))
     // --- contamination (5-shingle overlap with the holdout split) ---
     val sh5 = docs.select(col("doc_id"),
         explode(Dedup.shingles(col("text"), 5)).as("s"))
@@ -483,14 +449,11 @@ object Streams {
     val batchHo5 = sh5.filter(TextAnalysis3.isHoldout(col("doc_id")))
       .select("s").distinct()
     val batchTr5 = sh5.filter(!TextAnalysis3.isHoldout(col("doc_id")))
-    val allHo5 = readPrior("ho5", "s")
-      .map(_.unionByName(batchHo5).distinct()).getOrElse(batchHo5)
+    val allHo5 = index.prior("ho5", batchHo5).unionByName(batchHo5).distinct()
     val arrivingCont = batchTr5.join(allHo5, "s")
       .select("doc_id").distinct().withColumn("ct_hit", lit(true))
-    val flippedCont = readPrior("tr5", "doc_id", "s") match {
-      case Some(tr) => tr.join(batchHo5, "s").select("doc_id").distinct()
-      case None => docs.select("doc_id").limit(0)
-    }
+    val flippedCont = index.prior("tr5", batchTr5)
+      .join(batchHo5, "s").select("doc_id").distinct()
     // --- arriving decisions: full flag row per batch doc ---
     val arriving = docs.select(col("doc_id"),
         TextAnalysis3.isHoldout(col("doc_id")).as("holdout"),
@@ -514,34 +477,26 @@ object Streams {
       .agg(max("f_ex").as("f_ex"), max("f_nd").as("f_nd"),
         max("f_ct").as("f_ct"))
       .join(docs.select("doc_id"), Seq("doc_id"), "left_anti")
-    val flipped = readPrior("decisions", "doc_id", "holdout", "quality_bad",
-        "exact_dup", "near_dup", "contaminated") match {
-      case Some(dec) =>
-        // flags are monotone, so OR across emissions == latest row
-        dec.groupBy("doc_id").agg(max("holdout").as("holdout"),
-            max("quality_bad").as("quality_bad"),
-            max("exact_dup").as("exact_dup"),
-            max("near_dup").as("near_dup"),
-            max("contaminated").as("contaminated"))
-          .join(flipSet, "doc_id")
-          .select(col("doc_id"), col("holdout"), col("quality_bad"),
-            (col("exact_dup") || col("f_ex")).as("exact_dup"),
-            (col("near_dup") || col("f_nd")).as("near_dup"),
-            (col("contaminated") || col("f_ct")).as("contaminated"))
-      case None => arriving.limit(0)
-    }
+    // flags are monotone, so OR across emissions == latest row
+    val flipped = index.prior("decisions", arriving)
+      .groupBy("doc_id").agg(max("holdout").as("holdout"),
+        max("quality_bad").as("quality_bad"),
+        max("exact_dup").as("exact_dup"),
+        max("near_dup").as("near_dup"),
+        max("contaminated").as("contaminated"))
+      .join(flipSet, "doc_id")
+      .select(col("doc_id"), col("holdout"), col("quality_bad"),
+        (col("exact_dup") || col("f_ex")).as("exact_dup"),
+        (col("near_dup") || col("f_nd")).as("near_dup"),
+        (col("contaminated") || col("f_ct")).as("contaminated"))
     val emitted = arriving.unionByName(flipped)
       .withColumn("reason", TextAnalysis3.curationReason)
       .withColumn("kept", col("reason") === "kept")
       .localCheckpoint(true) // materialize BEFORE the state writes
-    batchMin.write.mode("overwrite")
-      .parquet(s"$stateDir/norms/batch_id=$batchId")
-    batchHo5.write.mode("overwrite")
-      .parquet(s"$stateDir/ho5/batch_id=$batchId")
-    batchTr5.write.mode("overwrite")
-      .parquet(s"$stateDir/tr5/batch_id=$batchId")
-    emitted.drop("reason", "kept").write.mode("overwrite")
-      .parquet(s"$stateDir/decisions/batch_id=$batchId")
+    index.put("norms", batchMin)
+    index.put("ho5", batchHo5)
+    index.put("tr5", batchTr5)
+    index.put("decisions", emitted.drop("reason", "kept"))
     emitted.select("doc_id", "reason", "kept")
   }
 
@@ -555,8 +510,8 @@ object Streams {
     *
     * Semantics per batch:
     *   1. within-batch compaction — deterministic survivor
-    *      max(version, text) per key (the [[oneRowPerKey]] rule
-    *      extended with the version);
+    *      max(version, text) per key ([[oneRowPerKey]] over
+    *      (doc_id, version, text));
     *   2. the NEW latest per touched key folds the compacted batch
     *      against stored state, so a STALE redelivery (version ≤
     *      stored) can never regress a verdict — the same
@@ -584,33 +539,18 @@ object Streams {
     * arrivals are [[curationIncrementalBatch]]'s contract, which emits
     * their first full flag row.
     *
-    * State at `stateDir/docs` is batchId-partitioned; reads filter
-    * batch_id < current and writes overwrite only their own partition
-    * → idempotent under foreachBatch retries (the house index scheme).
-    * 100 TB shape: one hash agg + two key joins per batch, all
+    * State is the `docs` table of a [[BatchIndex]] at `stateDir`
+    * (idempotent under foreachBatch retries). 100 TB shape: one hash agg + two key joins per batch, all
     * O(|batch| + touched keys); the epoch flags join prunes to batch
     * keys; nothing rescans the corpus. */
   def recurationDeltaBatch(batch: DataFrame, stateDir: String,
       batchId: Long, epochFlags: DataFrame): DataFrame = {
     import graft.operators.TextAnalysis3
-    val spark = batch.sparkSession
-    def latest(df: DataFrame): DataFrame = df
-      .groupBy("doc_id")
-      .agg(max(struct(col("version"), col("text"))).as("_r"))
-      .select(col("doc_id"), col("_r.version").as("version"),
-        col("_r.text").as("text"))
-    val compacted = latest(batch.select("doc_id", "version", "text"))
-      .localCheckpoint(true)
-    val priorLatest = {
-      val p = new org.apache.hadoop.fs.Path(s"$stateDir/docs")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p))
-        latest(spark.read.parquet(p.toString)
-          .filter(col("batch_id") < batchId)
-          .select("doc_id", "version", "text"))
-      else compacted.limit(0)
-    }
-    val newLatest = latest(compacted.unionByName(priorLatest))
+    val index = new BatchIndex(stateDir, batchId)
+    val compacted = oneRowPerKey(batch.select("doc_id", "version", "text"),
+      "doc_id").localCheckpoint(true)
+    val priorLatest = oneRowPerKey(index.prior("docs", compacted), "doc_id")
+    val newLatest = oneRowPerKey(compacted.unionByName(priorLatest), "doc_id")
       .join(compacted.select("doc_id"), "doc_id") // touched keys only
     def verdict(qualityBad: Column): Column =
       when(col("holdout"), "holdout")
@@ -630,32 +570,10 @@ object Streams {
         verdict(TextAnalysis3.qualityBad(col("new_text"))).as("new_reason"))
       .filter(col("old_reason") =!= col("new_reason"))
       .localCheckpoint(true) // materialize BEFORE the state write
-    compacted.write.mode("overwrite")
-      .parquet(s"$stateDir/docs/batch_id=$batchId")
+    index.put("docs", compacted)
     emitted
   }
 
-  /** Incremental corpus-drift monitor — the streaming face of
-    * `text_kl_drift`: each micro-batch folds its (source, word) counts
-    * into a batchId-partitioned count table and re-emits the per-source
-    * KL divergence over the CUMULATIVE corpus so far. After batch N the
-    * output is definitionally the one-shot `text_kl_drift` answer over
-    * the union of batches 1..N (same [[graft.operators.TextAnalysis6.klFromCounts]] plan on
-    * the summed counts — the spec proves it in sorted AND shuffled
-    * arrival order).
-    *
-    * State: `counts/batch_id=N` holds batch N's (source, w, c) rows;
-    * a retry overwrites ONLY its own partition and reads priors
-    * (batch_id < current) plus its own recomputed counts → idempotent
-    * under foreachBatch's at-least-once contract.
-    *
-    * 100 TB shape: the per-batch count agg is batch-sized and
-    * map-combined; the cumulative re-aggregation is vocabulary-bounded
-    * (counts, not tokens — rereading N batch partitions of
-    * per-batch-vocab rows, not N batches of raw text); everything
-    * after is sources × 256 exactly like the batch query. A long-lived
-    * deployment compacts `counts/` periodically the same way the
-    * near-dup index compacts its postings. */
   /** ST6 incremental twin of the LSH ANN tier
     * ([[graft.operators.Similarity.annTopk]]): the banded signature
     * index maintained across embedding micro-batches. The signature is
@@ -665,8 +583,8 @@ object Streams {
     * partition; a query run against the accumulated index is exactly
     * the one-shot [[graft.operators.Similarity.annLsh]] over the union
     * of all arrived vectors (StreamingSpec golden, any arrival order —
-    * signatures don't depend on arrival). Retries overwrite only their
-    * own partition → idempotent.
+    * signatures don't depend on arrival). The postings are a
+    * [[BatchIndex]] table, so retries are idempotent.
     *
     * 100 TB shape: per batch, one map-side signature pass + append;
     * the query-side bucket join and WindowGroupLimit re-rank read the
@@ -676,7 +594,6 @@ object Streams {
       batchId: Long, numQueries: Int, k: Int): DataFrame = {
     import graft.functions.VectorFunctions.{dot, norm}
     import graft.operators.Similarity
-    val spark = batch.sparkSession
     val postings = batch.select(col("vec_id"), col("embedding"),
         norm(col("embedding")).as("nrm"),
         Similarity.lshSignature(col("embedding"), bits = 32).as("sig"))
@@ -684,11 +601,9 @@ object Streams {
         posexplode(array((0 until 8).map(b =>
           shiftrightunsigned(col("sig"), 4 * b).bitwiseAND(lit(0xFL))): _*))
           .as(Seq("band", "bsig")))
-    postings.write.mode("overwrite")
-      .parquet(s"$stateDir/postings/batch_id=$batchId")
-    val banded = spark.read.parquet(s"$stateDir/postings")
-      .filter(col("batch_id") <= batchId)
-      .select("vec_id", "embedding", "nrm", "band", "bsig")
+    val index = new BatchIndex(stateDir, batchId)
+    val banded = index.prior("postings", postings).unionByName(postings)
+    index.put("postings", postings)
     val queries = banded.filter(col("vec_id") < numQueries)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
         col("nrm").as("q_nrm"), col("band"), col("bsig"))
@@ -739,13 +654,11 @@ object Streams {
     * by |batch| + Σ(members of buckets crossing this batch) ≤ cap per
     * bucket — never the corpus.
     *
-    * State at `stateDir` is batchId-partitioned (`sigs/batch_id=N`,
-    * `cnts/batch_id=N`, `deltas/batch_id=N`); reads filter batch_id <
-    * current, writes overwrite only their own partition → idempotent
-    * under foreachBatch retries (the house index scheme). 100 TB
-    * shape: per batch one band explode + three key equi-joins, all
+    * State at `stateDir` is a [[BatchIndex]] of the tables `sigs`,
+    * `cnts` and `deltas` (idempotent under foreachBatch retries).
+    * 100 TB shape: per batch one band explode + three key equi-joins, all
     * bounded by batch and crossed-bucket sizes; bucket counts fold
-    * from the batchId-partitioned COUNT-DELTA table (the
+    * from the per-batch COUNT-DELTA table (the
     * [[nearDupIncrementalBatch]] df-table pattern — vocabulary-
     * bounded, never a posting re-aggregation); only the pairing join
     * itself reads the stored postings, which is the index's job; the
@@ -754,29 +667,16 @@ object Streams {
   def mediaDedupIncrementalBatch(batch: DataFrame, stateDir: String,
       batchId: Long, threshold: Int = 3,
       cap: Long = graft.operators.Dedup.BandBucketCap): DataFrame = {
-    val spark = batch.sparkSession
-    def readPrior(name: String, cols: String*): Option[DataFrame] = {
-      val p = new org.apache.hadoop.fs.Path(s"$stateDir/$name")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p))
-        Some(spark.read.parquet(p.toString)
-          .filter(col("batch_id") < batchId).select(cols.map(col): _*))
-      else None
-    }
-    val priorSigs = readPrior("sigs", "doc_id", "block", "hash")
+    val index = new BatchIndex(stateDir, batchId)
     // within-batch redelivery: signatures are immutable per doc, so
     // distinct IS the compaction; cross-batch redelivery: already-known
     // docs are not "new" (their pairs were emitted on first arrival)
     val batchSigs = batch.select("doc_id", "block", "hash").distinct()
-    val newSigs = (priorSigs match {
-      case Some(p) => batchSigs.join(p.select("doc_id"), Seq("doc_id"),
-        "left_anti")
-      case None => batchSigs
-    }).localCheckpoint(true)
-    val allSigs = (priorSigs match {
-      case Some(p) => p.unionByName(newSigs)
-      case None => newSigs
-    }).localCheckpoint(true)
+    val priorSigs = index.prior("sigs", batchSigs)
+    val newSigs = batchSigs
+      .join(priorSigs.select("doc_id"), Seq("doc_id"), "left_anti")
+      .localCheckpoint(true)
+    val allSigs = priorSigs.unionByName(newSigs).localCheckpoint(true)
     def bandsOf(sigs: DataFrame): DataFrame = sigs.select(
       col("doc_id"), col("block"),
       posexplode(array((0 until 4).map(k =>
@@ -789,11 +689,9 @@ object Streams {
     // per-batch counts (vocabulary-bounded rows, never postings)
     val batchCnts = bandsOf(newSigs).groupBy(key.map(col): _*)
       .agg(count(lit(1)).as("c")).localCheckpoint(true)
-    val priorCnts = readPrior("cnts", "block", "band", "sig", "c")
-    val cnts = (priorCnts match {
-      case Some(p) => p.unionByName(batchCnts)
-      case None => batchCnts
-    }).groupBy(key.map(col): _*).agg(sum("c").as("n_now"))
+    val priorCnts = index.prior("cnts", batchCnts)
+    val cnts = priorCnts.unionByName(batchCnts)
+      .groupBy(key.map(col): _*).agg(sum("c").as("n_now"))
     val capped = cnts.filter(col("n_now") <= cap).select(key.map(col): _*)
     // --- adds: new docs × accumulated postings, capped buckets only ---
     val newBands = bandsOf(newSigs)
@@ -813,44 +711,38 @@ object Streams {
       .filter(col("hamming") <= threshold)
       .withColumn("op", lit("add"))
     // --- removes: stored pairs whose last support crossed the cap ---
-    val removes = readPrior("deltas", "a_id", "b_id", "block", "hamming", "op")
-      .map { deltas =>
-        val statePairs = deltas.filter(col("op") === "add")
-          .select("a_id", "b_id", "block", "hamming")
-          .join(deltas.filter(col("op") === "remove")
-            .select("a_id", "b_id"), Seq("a_id", "b_id"), "left_anti")
-        val prevCnts = priorCnts.map(_.groupBy(key.map(col): _*)
-            .agg(sum("c").as("n_prev")))
-          .getOrElse(cnts.limit(0).withColumnRenamed("n_now", "n_prev"))
-        val crossed = cnts.filter(col("n_now") > cap)
-          .join(prevCnts.filter(col("n_prev") <= cap), key)
-          .select(key.map(col): _*)
-        val crossedMembers = allBands.join(crossed, key)
-        val suspects = statePairs
-          .join(crossedMembers.select(col("doc_id").as("a_id"),
-            col("block"), col("band"), col("sig")), Seq("a_id", "block"))
-          .join(crossedMembers.select(col("doc_id").as("b_id"),
-            col("block"), col("band"), col("sig")),
-            Seq("b_id", "block", "band", "sig"))
-          .select("a_id", "b_id", "block", "hamming").distinct()
-        val supported = suspects
-          .join(allBands.select(col("doc_id").as("a_id"), col("block"),
-            col("band"), col("sig")), Seq("a_id", "block"))
-          .join(allBands.select(col("doc_id").as("b_id"), col("block"),
-            col("band"), col("sig")), Seq("b_id", "block", "band", "sig"))
-          .join(capped, key)
-          .select("a_id", "b_id").distinct()
-        suspects.join(supported, Seq("a_id", "b_id"), "left_anti")
-          .withColumn("op", lit("remove"))
-      }.getOrElse(adds.limit(0))
+    val deltas = index.prior("deltas", adds)
+    val statePairs = deltas.filter(col("op") === "add")
+      .select("a_id", "b_id", "block", "hamming")
+      .join(deltas.filter(col("op") === "remove")
+        .select("a_id", "b_id"), Seq("a_id", "b_id"), "left_anti")
+    val prevCnts = priorCnts.groupBy(key.map(col): _*)
+      .agg(sum("c").as("n_prev"))
+    val crossed = cnts.filter(col("n_now") > cap)
+      .join(prevCnts.filter(col("n_prev") <= cap), key)
+      .select(key.map(col): _*)
+    val crossedMembers = allBands.join(crossed, key)
+    val suspects = statePairs
+      .join(crossedMembers.select(col("doc_id").as("a_id"),
+        col("block"), col("band"), col("sig")), Seq("a_id", "block"))
+      .join(crossedMembers.select(col("doc_id").as("b_id"),
+        col("block"), col("band"), col("sig")),
+        Seq("b_id", "block", "band", "sig"))
+      .select("a_id", "b_id", "block", "hamming").distinct()
+    val supported = suspects
+      .join(allBands.select(col("doc_id").as("a_id"), col("block"),
+        col("band"), col("sig")), Seq("a_id", "block"))
+      .join(allBands.select(col("doc_id").as("b_id"), col("block"),
+        col("band"), col("sig")), Seq("b_id", "block", "band", "sig"))
+      .join(capped, key)
+      .select("a_id", "b_id").distinct()
+    val removes = suspects.join(supported, Seq("a_id", "b_id"), "left_anti")
+      .withColumn("op", lit("remove"))
     val emitted = adds.unionByName(removes)
       .localCheckpoint(true) // materialize BEFORE the state writes
-    newSigs.write.mode("overwrite")
-      .parquet(s"$stateDir/sigs/batch_id=$batchId")
-    batchCnts.write.mode("overwrite")
-      .parquet(s"$stateDir/cnts/batch_id=$batchId")
-    emitted.write.mode("overwrite")
-      .parquet(s"$stateDir/deltas/batch_id=$batchId")
+    index.put("sigs", newSigs)
+    index.put("cnts", batchCnts)
+    index.put("deltas", emitted)
     emitted
   }
 
@@ -949,7 +841,7 @@ object Streams {
     * epoch state — never a re-tokenization, never a corpus-wide
     * running-sum rebuild. Concretely, per batch:
     *
-    *   1. within-batch compaction + batchId-partitioned edit state,
+    *   1. within-batch compaction + an `edits` [[BatchIndex]] table,
     *      version-gated exactly like [[recurationDeltaBatch]] (stale
     *      cross-batch redeliveries fold to the SAME latest-per-key and
     *      short-circuit to an empty emission);
@@ -990,26 +882,14 @@ object Streams {
     import graft.operators.{Joins, ScalableWindows, TextAnalysis3}
     val spark = batch.sparkSession
     val epoch = spark.read.parquet(s"$stateDir/epoch")
-    def latest(df: DataFrame): DataFrame = df
-      .groupBy("doc_id")
-      .agg(max(struct(col("version"), col("text"))).as("_r"))
-      .select(col("doc_id"), col("_r.version").as("version"),
-        col("_r.text").as("text"))
-    val compacted = latest(batch.select("doc_id", "version", "text"))
+    val index = new BatchIndex(stateDir, batchId)
+    val compacted = oneRowPerKey(batch.select("doc_id", "version", "text"),
+      "doc_id").localCheckpoint(true)
+    val prior = index.prior("edits", compacted)
+    index.put("edits", compacted)
+    val prevLatest = oneRowPerKey(prior, "doc_id").localCheckpoint(true)
+    val allLatest = oneRowPerKey(prior.unionByName(compacted), "doc_id")
       .localCheckpoint(true)
-    val prior = {
-      val p = new org.apache.hadoop.fs.Path(s"$stateDir/edits")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p))
-        spark.read.parquet(p.toString)
-          .filter(col("batch_id") < batchId)
-          .select("doc_id", "version", "text")
-      else compacted.limit(0).select("doc_id", "version", "text")
-    }
-    compacted.write.mode("overwrite")
-      .parquet(s"$stateDir/edits/batch_id=$batchId")
-    val prevLatest = latest(prior).localCheckpoint(true)
-    val allLatest = latest(prior.unionByName(compacted)).localCheckpoint(true)
     val emptyOut = epoch.limit(0).select(col("doc_id"),
       lit("").as("change"), lit(0L).as("old_first_chunk"),
       lit(0L).as("new_first_chunk"), lit(0L).as("old_chunk_offset"),

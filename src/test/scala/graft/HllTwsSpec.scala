@@ -11,7 +11,8 @@ import graft.streaming.HllState
   * with RocksDB-backed keyed state — golden ≡ one-shot across a query
   * KILL + RESTART from the same checkpoint, with duplicate delivery
   * spanning the restart boundary, and ≡ the registered
-  * `q136_hll_portable` across a crashed-and-replayed batch. */
+  * `q136_hll_portable` across a crashed-and-replayed batch, on a
+  * tiny-corpus variant whose event types have distinct user sets. */
 class HllTwsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -83,16 +84,26 @@ class HllTwsSpec extends AnyFunSuite {
 
   test("a crashed batch replays without moving the registers; state ≡ " +
     "the registered q136 on the tiny corpus, shuffled and redelivered") {
+    // every tiny-corpus user has events of every type, so all types
+    // share one register set and a twin that swapped registers between
+    // keys would still match: drop a pseudo-random third of the
+    // (type, user) pairs, so each type has its own user set
+    val dir = java.nio.file.Files.createTempDirectory("hll_tiny").toString
+    Tables.table(spark, TestSpark.tiny, "events")
+      .filter(pmod(xxhash64(col("event_type"), col("user_id")), lit(3)) =!= 0)
+      .write.parquet(s"$dir/events.parquet")
+    val ev = Tables.events(spark, dir)
+      .select("event_type", "user_id").as[(String, Long)].collect().toSeq
+    val userSets = ev.groupBy(_._1).values.map(_.map(_._2).toSet).toSeq
+    assert(userSets.size > 1 && userSets.distinct.size == userSets.size,
+      "every event type must have its own user set")
     // slices by user_id mod 3 — deliberately NOT time slices — and
     // batch 0 re-delivered inside batch 2: the semilattice contract says
     // neither arrival order nor duplicate delivery may matter
-    val ev = Tables.events(spark, TestSpark.tiny)
-      .select("event_type", "user_id").as[(String, Long)].collect().toSeq
     val s = (0 until 3).map(i => ev.filter(_._2 % 3 == i))
     val emitted = CrashReplay.run(Seq(s(0), s(1), s(2) ++ s(0)))(ds =>
       HllState.hllSketch(ds.toDF("event_type", "user_id")))
     assert(estimate(emitted.toMap) === rows(
-      graft.operators.EventAnalytics12.q136HllPortable
-        .run(spark, TestSpark.tiny)))
+      graft.operators.EventAnalytics12.q136HllPortable.run(spark, dir)))
   }
 }

@@ -2,6 +2,8 @@ package graft
 
 import java.sql.Timestamp
 
+import org.apache.spark.JobsDuring
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -320,9 +322,17 @@ class StreamingSpec extends AnyFunSuite {
     // job); DF-cap and sizes come from the delta tables; the only
     // windows are BATCH-sized per-doc rank/size windows (partitioned by
     // doc_id), never a corpus-wide cap window over shingle
-    val pairPlan = Streams.nearDupBatchRelations(
-      Seq((999001L, "fresh doc about nothing at all")).toDF("doc_id", "text"),
-      dir, 2L)._1.queryExecution.executedPlan.toString
+    var pairs: DataFrame = null
+    val jobs = JobsDuring(spark.sparkContext) {
+      pairs = Streams.nearDupBatchRelations(
+        Seq((999001L, "fresh doc about nothing at all")).toDF("doc_id", "text"),
+        dir, 2L)._1
+    }
+    // the four index reads are declared, not inferred: building the
+    // batch's relations launches no schema-inference job
+    val inferred = jobs.filter(j => !j.inSqlExecution && j.site.startsWith("parquet at"))
+    assert(inferred.isEmpty, s"index reads inferred a parquet schema: $inferred")
+    val pairPlan = pairs.queryExecution.executedPlan.toString
     val windowLines = pairPlan.linesIterator
       .filter(_.contains("Window ")).toSeq
     assert(windowLines.forall(_.contains("doc_id")),
@@ -350,11 +360,16 @@ class StreamingSpec extends AnyFunSuite {
       val latest = scala.collection.mutable.Map[Long, (String, Boolean)]()
       order.grouped(order.length / 3 + 1).zipWithIndex.foreach {
         case (g, bid) =>
-          Streams.curationIncrementalBatch(
-            g.toIndexedSeq.toDF("doc_id", "text"), dir, bid.toLong)
+          def deliver() = Streams.curationIncrementalBatch(
+              g.toIndexedSeq.toDF("doc_id", "text"), dir, bid.toLong)
             .select("doc_id", "reason", "kept")
-            .as[(Long, String, Boolean)].collect()
-            .foreach { case (id, r, k) => latest(id) = (r, k) }
+            .as[(Long, String, Boolean)].collect().toSeq
+          // a foreachBatch retry re-delivers the batch under the same id
+          // after its state writes: it must emit what the first did
+          val first = deliver()
+          val retry = deliver()
+          assert(retry.toSet === first.toSet, s"$tag batch $bid: retry changed its emission")
+          retry.foreach { case (id, r, k) => latest(id) = (r, k) }
       }
       latest.toMap
     }
