@@ -20,8 +20,27 @@ import org.apache.spark.sql.SparkSession
   *     task scheduling overhead doesn't dominate column-pruned reads.
   *   - UTC pinned everywhere: timestamp semantics must not depend on
   *     cluster locale (the CDC µs-since-epoch columns assume it).
+  *   - Streaming checkpoint logs go through
+  *     [[CheckpointFileManagerClass]], not Spark's FileContext default.
+  *     Every offsets and commit log entry is written to a temp file and
+  *     renamed into place. On a Hadoop without libhadoop, a FileContext
+  *     rename stats the source through `RawLocalFileSystem`'s deprecated
+  *     link-status path, which forks `readlink` (`FileUtil.readLink`),
+  *     so each streaming batch paid several process starts on its
+  *     critical path. The FileSystem-based manager renames with
+  *     `RawLocalFileSystem.rename`, i.e. `File.renameTo`, and forks
+  *     nothing. Its no-overwrite rename is exists-then-rename, which is
+  *     what FileContext's `rename(src, dst, Rename.NONE)` also does on
+  *     `file:`, so the guard Spark relies on to detect two queries on
+  *     one checkpoint is unchanged there. On HDFS this manager would
+  *     lose FileContext's atomic rename; [[local]] builds local-master
+  *     sessions only, whose checkpoints live on `file:`.
   */
 object Sessions {
+
+  /** Spark's FileSystem-based checkpoint file manager (see above). */
+  val CheckpointFileManagerClass: String =
+    "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
 
   def local(cpus: String): SparkSession = {
     val spark = SparkSession.builder()
@@ -44,6 +63,7 @@ object Sessions {
       // clusters.
       .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "64m")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.streaming.checkpointFileManagerClass", CheckpointFileManagerClass)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     quietWindowExec()

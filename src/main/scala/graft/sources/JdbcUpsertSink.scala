@@ -1,12 +1,11 @@
 package graft.sources
 
-import java.sql.DriverManager
+import java.sql.{Connection, DriverManager}
 import java.util.Properties
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
-
-import graft.operators.Cdc
+import org.apache.spark.sql.{DataFrame, Encoders}
+import org.apache.spark.sql.functions.{col, spark_partition_id}
+import org.apache.spark.sql.types.StructType
 
 /** S9 "production" sink: lands each CDC micro-batch in a JDBC-reachable
   * analytical store via staged MERGE — the engine-side equivalent of the
@@ -14,17 +13,35 @@ import graft.operators.Cdc
   * (reference: docker-compose.yml:155-174), expressed as ANSI MERGE so it
   * runs on anything with a JDBC driver.
   *
-  * Shape per micro-batch (the standard ELT merge at any scale):
-  *   1. within-batch compaction to latest-per-key ([[Cdc.latestByKey]] —
-  *      a batch transform reused unchanged, same as [[graft.streaming.Streams]]'
-  *      in-memory sink);
-  *   2. executors write the compacted batch to a staging table in
-  *      parallel (`df.write.jdbc`, one connection per partition — the
-  *      only data-volume-proportional step, and it scales with
-  *      partitions);
-  *   3. ONE driver-side `MERGE INTO target USING staging` applies
+  * Shape per micro-batch (one Spark job; the rest runs in the database):
+  *   1. executors compact each partition to its latest row per key
+  *      (`sortWithinPartitions(key, version desc)`, keep the first row
+  *      of each key run) and tag every row with its Spark partition id.
+  *      There is no exchange, so compaction and the staging write are
+  *      one narrow job;
+  *   2. the driver empties the staging table (`<table>_stage`), which
+  *      persists across batches, and executors append the compacted
+  *      rows to it in parallel (`df.write.jdbc`, one connection per
+  *      partition — the only data-volume-proportional Spark step);
+  *   3. one driver-side `DELETE … WHERE EXISTS` drops the rows that lost
+  *      to a row of the same key from another partition: a higher
+  *      version, or the same version from a higher partition. The
+  *      staging table then holds exactly one row per key. (Derby rejects
+  *      a view as a MERGE source, so this dedupe is a DELETE on staging.)
+  *   4. ONE driver-side `MERGE INTO target USING staging` applies
   *      version-gated upserts and tombstone deletes inside the database —
   *      set-based, no per-row round-trips.
+  *
+  * Preparation: the staging table and its key index, target creation,
+  * the target key-index check, column evolution and the two SQL strings
+  * depend only on the batch schema. A sink instance prepares them when a
+  * batch's schema differs from the one it last prepared for, and on its
+  * first batch: that batch re-creates the staging table with the
+  * writer's overwrite, so a restarted stream starts from a clean staging
+  * table whatever a crash left in it. Every other batch runs no DDL and
+  * no metadata lookup of its own: besides the writer's append, it sends
+  * the staging DELETE, the dedupe and the MERGE. One instance serves one
+  * stream; its batches run one at a time.
   *
   * Schema evolution: a batch column the target lacks is added to it,
   * and existing rows read NULL there. A column dropped upstream is
@@ -49,25 +66,77 @@ object JdbcUpsertSink {
     * writer quotes on CREATE, so the MERGE must quote to match). */
   private def q(ident: String): String = "\"" + ident + "\""
 
+  /** Staging column holding the Spark partition a row was compacted in:
+    * the tie-break between equal versions of one key in two partitions. */
+  private val Part = "__graft_part"
+
+  /** A sink instance for one stream (see the object doc). */
   def apply(url: String, table: String, keyCol: String, versionCol: String,
       tombstoneCol: String,
       props: Properties = new Properties): (DataFrame, Long) => Unit =
-    (batch, _) => merge(batch, url, table, keyCol, versionCol, tombstoneCol, props)
+    new Sink(url, table, keyCol, versionCol, tombstoneCol, props)
 
-  def merge(batch: DataFrame, url: String, table: String, keyCol: String,
-      versionCol: String, tombstoneCol: String,
-      props: Properties = new Properties): Unit = {
-    val compacted =
-      Cdc.latestByKey(batch, Seq(keyCol), Seq(col(versionCol)))
-    val staging = table + "_stage"
-    compacted.write.mode("overwrite").jdbc(url, q(staging), props)
+  /** Latest row per key within each partition, tagged with the partition
+    * id — a narrow transform: the sort is partition-local and the
+    * first-of-run filter needs no window. */
+  private def compactPartitions(batch: DataFrame, keyCol: String,
+      versionCol: String): DataFrame = {
+    val k = batch.schema.fieldIndex(keyCol)
+    batch.sortWithinPartitions(col(keyCol), col(versionCol).desc)
+      .mapPartitions { rows =>
+        var started = false
+        var prev: Any = null
+        rows.filter { r =>
+          val key = r.get(k)
+          val first = !started || key != prev
+          started = true
+          prev = key
+          first
+        }
+      }(Encoders.row(batch.schema))
+      .withColumn(Part, spark_partition_id())
+  }
 
-    // target columns: everything but the tombstone flag
-    val cols = compacted.columns.filterNot(_ == tombstoneCol).toSeq
-    val dataCols = cols.filterNot(_ == keyCol)
-    val conn = DriverManager.getConnection(url, props)
-    try {
+  private final class Sink(url: String, table: String, keyCol: String,
+      versionCol: String, tombstoneCol: String, props: Properties)
+      extends ((DataFrame, Long) => Unit) {
+    private val staging = table + "_stage"
+    /** The staged schema the database side was last prepared for. */
+    private var prepared: Option[StructType] = None
+    private var dedupeSql = ""
+    private var mergeSql = ""
+
+    def apply(batch: DataFrame, batchId: Long): Unit = synchronized {
+      val staged = compactPartitions(batch, keyCol, versionCol)
+      val conn = DriverManager.getConnection(url, props)
+      try {
+        val st = conn.createStatement()
+        if (prepared.contains(staged.schema)) {
+          st.executeUpdate(s"DELETE FROM ${q(staging)}")
+          staged.write.mode("append").jdbc(url, q(staging), props)
+        } else {
+          staged.write.mode("overwrite").jdbc(url, q(staging), props)
+          prepare(conn, staged.columns.toSeq)
+          prepared = Some(staged.schema)
+        }
+        st.executeUpdate(dedupeSql)
+        st.executeUpdate(mergeSql)
+        st.close()
+      } finally conn.close()
+    }
+
+    /** Everything that depends only on the staged schema: the staging key
+      * index, target creation or its key index and new columns, and the
+      * dedupe and MERGE statements. Runs right after the writer created
+      * the staging table. */
+    private def prepare(conn: Connection, stagedCols: Seq[String]): Unit = {
+      // target columns: everything but the tombstone flag and the tag
+      val cols = stagedCols.filterNot(c => c == tombstoneCol || c == Part)
+      val dataCols = cols.filterNot(_ == keyCol)
       val st = conn.createStatement()
+      // the dedupe's correlated lookup goes through this index
+      st.executeUpdate(s"CREATE INDEX ${q(staging + "_key_idx")} ON " +
+        s"${q(staging)}(${q(keyCol)}, ${q(versionCol)})")
       // create target on first contact, empty, with the staging schema
       val exists = {
         val rs = conn.getMetaData.getTables(null, null, table, null)
@@ -93,10 +162,10 @@ object JdbcUpsertSink {
         // keep the quadratic nested-loop MERGE cliff forever. Any index
         // whose leading column is the key serves the MERGE's ON lookup.
         // "present" means EITHER any index leading with the key column
-        // OR an index already named <table>_key_idx (r14 ADVICE: a
-        // same-named index on a different leading column would otherwise
-        // make the unconditional CREATE INDEX throw a duplicate-name
-        // SQLException and kill the stream on every resume attempt)
+        // OR an index already named <table>_key_idx (a same-named index
+        // on a different leading column would otherwise make the
+        // unconditional CREATE INDEX throw a duplicate-name SQLException
+        // and kill the stream on every resume attempt)
         val (hasKeyIndex, takenNames) = {
           val rs = conn.getMetaData.getIndexInfo(null, null, table, false, false)
           try {
@@ -112,10 +181,10 @@ object JdbcUpsertSink {
           } finally rs.close()
         }
         if (!hasKeyIndex) {
-          // r15 ADVICE: when an UNRELATED index already squats on the
-          // canonical name, don't silently skip — that keeps the
-          // quadratic nested-loop MERGE forever. Create under the first
-          // free uniquified name and say so.
+          // when an UNRELATED index already squats on the canonical
+          // name, don't silently skip — that keeps the quadratic
+          // nested-loop MERGE forever. Create under the first free
+          // uniquified name and say so.
           val name = (Iterator(table + "_key_idx") ++
             Iterator.from(2).map(i => s"${table}_key_idx$i"))
             .find(n => !takenNames.contains(n.toLowerCase)).get
@@ -146,16 +215,21 @@ object JdbcUpsertSink {
             s"ALTER TABLE ${q(table)} ADD COLUMN ${q(c)} $ddlType")
         }
       }
+      st.close()
+      val (k, v, p) = (q(keyCol), q(versionCol), q(Part))
+      val stg = q(staging)
+      dedupeSql =
+        s"""DELETE FROM $stg WHERE EXISTS (SELECT 1 FROM $stg o
+           |WHERE o.$k = $stg.$k AND (o.$v > $stg.$v OR (o.$v = $stg.$v AND o.$p > $stg.$p)))""".stripMargin
       val setList = dataCols.map(c => s"${q(c)} = s.${q(c)}").mkString(", ")
       val insertCols = cols.map(q).mkString(", ")
       val insertVals = cols.map(c => s"s.${q(c)}").mkString(", ")
-      st.executeUpdate(
-        s"""MERGE INTO ${q(table)} t USING ${q(staging)} s
-           |ON t.${q(keyCol)} = s.${q(keyCol)}
-           |WHEN MATCHED AND s.${q(tombstoneCol)} AND s.${q(versionCol)} >= t.${q(versionCol)} THEN DELETE
-           |WHEN MATCHED AND NOT s.${q(tombstoneCol)} AND s.${q(versionCol)} > t.${q(versionCol)} THEN UPDATE SET $setList
-           |WHEN NOT MATCHED AND NOT s.${q(tombstoneCol)} THEN INSERT ($insertCols) VALUES ($insertVals)""".stripMargin)
-      st.close()
-    } finally conn.close()
+      mergeSql =
+        s"""MERGE INTO ${q(table)} t USING $stg s
+           |ON t.$k = s.$k
+           |WHEN MATCHED AND s.${q(tombstoneCol)} AND s.$v >= t.$v THEN DELETE
+           |WHEN MATCHED AND NOT s.${q(tombstoneCol)} AND s.$v > t.$v THEN UPDATE SET $setList
+           |WHEN NOT MATCHED AND NOT s.${q(tombstoneCol)} THEN INSERT ($insertCols) VALUES ($insertVals)""".stripMargin
+    }
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.JobsDuring
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -15,6 +16,73 @@ class JdbcUpsertSinkSpec extends AnyFunSuite {
 
   private def readTable(url: String, table: String) =
     spark.read.jdbc(url, "\"" + table + "\"", new java.util.Properties)
+
+  /** Derby's id for `table`: a DROP and re-CREATE gives it a new one. */
+  private def tableId(url: String, table: String): String = {
+    val c = java.sql.DriverManager.getConnection(url)
+    try {
+      val rs = c.createStatement().executeQuery(
+        s"SELECT TABLEID FROM SYS.SYSTABLES WHERE TABLENAME = '$table'")
+      try { assert(rs.next(), s"$table missing"); rs.getString(1) }
+      finally rs.close()
+    } finally c.close()
+  }
+
+  test("one key's versions and ties spread over partitions land as latest-per-key") {
+    val url = "jdbc:derby:memory:graft6;create=true"
+    val sink = JdbcUpsertSink(url, "parts_latest", "id", "version", "__deleted")
+    sink(Seq((1L, "a0", 0L, false), (3L, "c0", 0L, false))
+      .toDF("id", "username", "version", "__deleted"), 0L)
+    // three slices of three rows: id 1 has a version in every slice, id 2
+    // the same (version, row) in two slices, and id 3's newest row, in
+    // the middle slice, is a tombstone
+    val rows = Seq(
+      (1L, "a1", 1L, false), (2L, "b", 5L, false), (3L, "c1", 1L, false),
+      (1L, "a3", 3L, false), (2L, "b", 5L, false), (3L, "c4", 4L, true),
+      (1L, "a2", 2L, false), (3L, "c2", 2L, false), (4L, "d1", 1L, false))
+    val batch = spark.sparkContext.parallelize(rows, 3)
+      .toDF("id", "username", "version", "__deleted")
+    val spread = batch.withColumn("part", spark_partition_id())
+      .groupBy("id").agg(countDistinct("part"))
+      .as[(Long, Long)].collect().toMap
+    assert(spread(1L) === 3L && spread(2L) === 2L && spread(3L) === 3L)
+
+    sink(batch, 1L)
+    val expected = (Seq((1L, "a0", 0L, false), (3L, "c0", 0L, false)) ++ rows)
+      .groupBy(_._1).values.map(_.maxBy(_._3))
+      .collect { case (id, u, v, false) => (id, u, v) }.toSet
+    assert(expected === Set((1L, "a3", 3L), (2L, "b", 5L), (4L, "d1", 1L)))
+    def landed = readTable(url, "parts_latest")
+      .select("id", "username", "version")
+      .as[(Long, String, Long)].collect().toSeq.sorted
+    assert(landed === expected.toSeq.sorted)
+    // at-least-once replay of the same batch: state unchanged
+    sink(batch, 1L)
+    assert(landed === expected.toSeq.sorted)
+  }
+
+  test("a same-schema batch is one Spark job and keeps the staging table; " +
+    "a new column re-creates it") {
+    val url = "jdbc:derby:memory:graft7;create=true"
+    val sink = JdbcUpsertSink(url, "steady_latest", "id", "version", "__deleted")
+    def batch(v: Long) = Seq((1L, "ann", v, false), (2L, "bob", v, false))
+      .toDF("id", "username", "version", "__deleted")
+    sink(batch(1L), 0L)
+    val staged = tableId(url, "steady_latest_stage")
+    val jobs = JobsDuring(spark.sparkContext)(sink(batch(2L), 1L))
+    assert(jobs.size === 1, jobs)
+    assert(tableId(url, "steady_latest_stage") === staged)
+    sink(batch(3L), 2L)
+    assert(tableId(url, "steady_latest_stage") === staged)
+
+    sink(Seq((1L, "ann", 4L, false, "a@x.io"))
+      .toDF("id", "username", "version", "__deleted", "email"), 3L)
+    assert(tableId(url, "steady_latest_stage") !== staged)
+    assert(readTable(url, "steady_latest")
+      .select("id", "version", "email")
+      .as[(Long, Long, Option[String])].collect().toSet ===
+      Set((1L, 4L, Some("a@x.io")), (2L, 3L, None)))
+  }
 
   test("merge applies upserts, version gating, and tombstone deletes") {
     val url = "jdbc:derby:memory:graft1;create=true"

@@ -11,6 +11,8 @@ object TestSpark {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.streaming.checkpointFileManagerClass",
+        Sessions.CheckpointFileManagerClass)
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft_wh").toString)
       .getOrCreate()
