@@ -250,18 +250,42 @@ object Dedup {
     if (bytes <= 64L * 1024 * 1024) broadcast(m) else m
   }
 
-  /** Exact-Jaccard verification of candidate pairs over the (filtered)
-    * shingle relation. Sets are collected ONLY for docs appearing in a
-    * candidate pair, and as SORTED 64-BIT HASH SIGNATURES, not string
-    * arrays: candidate verification joins those signatures onto every
-    * candidate row, so the bytes that cross the wire per pair are
+  /** Per-doc SORTED 64-BIT HASH SIGNATURES `(doc_id, s)` of
+    * `(doc_id, shingle)` rows — what every overlap count reads instead of
+    * string arrays: the bytes that cross the wire per candidate pair are
     * 8·|set| instead of the raw shingle text (~2.5× smaller), and the
     * intersection is a codegen'd two-pointer merge over primitives
     * ([[graft.functions.SortedIntersectCount]]) instead of a per-row
     * hash-set build. xxhash64 collisions within the shingle vocabulary
     * (~52k distinct at sf1) have probability ~|V|²/2⁶⁴ ≈ 1e-10 —
     * negligible like the SHA-256 grouping in [[exact]]. */
-  private def verifyJaccard(sh: DataFrame, cand: DataFrame): DataFrame = {
+  private[graft] def signatures(rows: DataFrame): DataFrame =
+    rows.groupBy("doc_id")
+      .agg(sort_array(collect_set(xxhash64(col("shingle")))).as("s"))
+
+  /** THE overlap tail of every shingle-pair path (batch Jaccard, edit
+    * distance, containment, the streaming near-dup twin): candidate
+    * pairs `(a_id, b_id)` joined to `(doc_id, s)` signature tables —
+    * `aSigs` for `a_id`, `bSigs` for `b_id` (the batch callers pass one
+    * table twice; the twin resolves `b_id`, always an arriving doc,
+    * against the batch's signatures alone) — yielding `inter` =
+    * |sa ∩ sb| with `na` = |sa| and `nb` = |sb|. Callers apply only
+    * their own predicate. */
+  private[graft] def overlaps(cand: DataFrame, aSigs: DataFrame,
+      bSigs: DataFrame): DataFrame =
+    cand
+      .join(aSigs.as("sa"), col("a_id") === col("sa.doc_id"))
+      .join(bSigs.as("sb"), col("b_id") === col("sb.doc_id"))
+      .withColumn("inter",
+        graft.functions.SortedIntersectCount(col("sa.s"), col("sb.s")))
+      .select(col("a_id"), col("b_id"), col("inter"),
+        size(col("sa.s")).as("na"), size(col("sb.s")).as("nb"))
+
+  /** [[overlaps]] for the batch callers: signatures are collected ONLY
+    * for docs appearing in a candidate pair, from `postings`
+    * `(doc_id, shingle, …)`, and broadcast when they fit
+    * ([[sizeGatedBroadcast]]). */
+  private[graft] def candidateOverlaps(postings: DataFrame, cand: DataFrame): DataFrame = {
     // Materialize the candidate pairs ONCE. The pair relation feeds
     // three consumers (candDocs + both signature joins); left as a plan
     // it is recomputed per consumer — worse, the whole query then fuses
@@ -276,20 +300,18 @@ object Dedup {
     val candM = cand.localCheckpoint(true)
     val candDocs = candM.select(col("a_id").as("doc_id"))
       .union(candM.select(col("b_id").as("doc_id"))).distinct()
-    val candSets = sizeGatedBroadcast(sh
-      .join(broadcast(candDocs), "doc_id")
-      .groupBy("doc_id")
-      .agg(sort_array(collect_set(xxhash64(col("shingle")))).as("s")))
-    candM
-      .join(candSets.as("sa"), col("a_id") === col("sa.doc_id"))
-      .join(candSets.as("sb"), col("b_id") === col("sb.doc_id"))
-      .withColumn("inter",
-        graft.functions.SortedIntersectCount(col("sa.s"), col("sb.s")))
-      .withColumn("sim", col("inter").cast("double") /
-        (size(col("sa.s")) + size(col("sb.s")) - col("inter")))
+    val sigs = sizeGatedBroadcast(
+      signatures(postings.join(broadcast(candDocs), "doc_id")))
+    overlaps(candM, sigs, sigs)
+  }
+
+  /** The Jaccard ≥ [[JaccardThreshold]] predicate over [[overlaps]]
+    * output — shared by the batch pairs and the streaming twin. */
+  private[graft] def jaccardSims(ov: DataFrame): DataFrame =
+    ov.withColumn("sim", col("inter").cast("double") /
+        (col("na") + col("nb") - col("inter")))
       .filter(col("sim") >= JaccardThreshold)
       .select("a_id", "b_id", "sim")
-  }
 
   /** PPJoin positional filter, as a JOIN predicate on prefix-postings
     * co-occurrences: a match at in-document rarity ranks (rn_a, rn_b)
@@ -307,34 +329,47 @@ object Dedup {
   /** α for Jaccard ≥ 1/2: ⌈(n_a+n_b)/3⌉ = ⌊(n_a+n_b+2)/3⌋, exact in
     * IEEE double for any realistic set sizes (/3 of an exact long is
     * correctly rounded and lands on an integer only when exact). */
-  private[graft] def jaccardAlpha(na: Column, nb: Column): Column =
+  private[graft] def jaccardAlpha(na: Column, nb: Column): Column = {
+    requireHalf()
     floor((na + nb + lit(2)) / lit(3)).cast("long")
+  }
 
-  /** Capped postings annotated for prefix filtering: per-shingle DF (the
-    * cap filter's own window, kept as a column), per-doc set size `n`,
-    * and `rn` — the shingle's rank within its document under the GLOBAL
-    * rarity order (df asc, shingle asc). The global order is what makes
-    * prefix filtering sound; rarity-first is what makes it effective
-    * (prefix postings concentrate on low-DF shingles, so the candidate
-    * self-join's Σ df² collapses). */
-  private[graft] def rankedShingleRows(docs: DataFrame, cap: Int): DataFrame = {
+  /** Every Jaccard prefix bound here ([[jaccardAlpha]], [[jaccardOMin]],
+    * [[jaccardProbeOMin]]) is derived for t = 1/2; each runs this check,
+    * so no path can pair under another threshold with a stale bound. */
+  private def requireHalf(): Unit =
+    require(JaccardThreshold == 0.5, "the Jaccard prefix bounds hardcode t = 1/2")
+
+  /** Capped postings annotated for prefix filtering: the rows of
+    * `(doc_id, shingle)` postings whose shingle's `df` (a table covering
+    * every shingle of `rows`) is ≤ cap, with `df`, the per-doc capped set
+    * size `n`, and `rn` — the shingle's rank within its document under
+    * the GLOBAL rarity order (df asc, shingle asc). The global order is
+    * what makes prefix filtering sound; rarity-first is what makes it
+    * effective (prefix postings concentrate on low-DF shingles, so the
+    * candidate self-join's Σ df² collapses). The batch build ranks under
+    * the corpus df ([[rankedShingleRows]]); the streaming twin under its
+    * index's df as of the arriving batch. */
+  private[graft] def rankPostings(rows: DataFrame, df: DataFrame, cap: Int): DataFrame =
     // r17: DF annotation as aggregate + shuffled-hash join instead of a
     // count-over-shingle window — the window sorted the ENTIRE posting
     // relation by shingle (hot shingles included) just to attach a per-
     // group count; the join streams postings against a hash table of
     // the ≤cap-df shingle counts (every shingle under the cap, so the
     // build side is vocabulary-sized, not cap-bounded) and drops
-    // capped-out shingles in the same pass (guide §2.3). The
-    // postings explode runs twice (both join inputs), which is map-side
-    // CPU — cheaper than materializing the corpus-sized posting list.
-    val rows = shingleRows(docs)
-    val dfc = rows.groupBy("shingle").agg(count(lit(1)).as("df"))
-      .filter(col("df") <= cap)
-    rows.join(dfc.hint("shuffle_hash"), "shingle")
+    // capped-out shingles in the same pass (guide §2.3).
+    rows.join(df.filter(col("df") <= cap).hint("shuffle_hash"), "shingle")
       .select(col("doc_id"), col("shingle"), col("df"))
       .withColumn("n", count(lit(1)).over(Window.partitionBy("doc_id")))
       .withColumn("rn", row_number().over(
         Window.partitionBy("doc_id").orderBy(col("df"), col("shingle"))))
+
+  /** [[rankPostings]] of the docs' shingles under their own df. The
+    * postings explode runs twice (both join inputs), which is map-side
+    * CPU — cheaper than materializing the corpus-sized posting list. */
+  private[graft] def rankedShingleRows(docs: DataFrame, cap: Int): DataFrame = {
+    val rows = shingleRows(docs)
+    rankPostings(rows, rows.groupBy("shingle").agg(count(lit(1)).as("df")), cap)
   }
 
   /** PPJoin-style prefix postings for a RELATIVE overlap requirement:
@@ -352,15 +387,26 @@ object Dedup {
   /** ⌈n·t⌉ for the Jaccard threshold, in exact arithmetic: J ≥ t forces
     * |A∩B| ≥ t·|A| (and ≥ t·|B|), and with t = 1/2, ⌈n/2⌉ = ⌊(n+1)/2⌋.
     * IEEE division of exact longs by 2 is exact, so floor() is safe. */
-  private[graft] def jaccardOMin(n: Column): Column =
+  private[graft] def jaccardOMin(n: Column): Column = {
+    requireHalf()
     floor((n + lit(1)) / lit(2)).cast("long")
+  }
+
+  /** ⌈n/3⌉ = ⌊(n+2)/3⌋: the overlap floor the streaming twin probes
+    * stored postings with. J ≥ t forces |A∩B| ≥ t·|A|/(1+t) whatever
+    * the stored side's size, which is ⌈n/3⌉ at t = 1/2 (exact in IEEE
+    * double, as in [[jaccardAlpha]]). */
+  private[graft] def jaccardProbeOMin(n: Column): Column = {
+    requireHalf()
+    floor((n + lit(2)) / lit(3)).cast("long")
+  }
 
   /** candidate generation from annotated postings — joins ONLY prefix
     * postings: the full-postings self-join's Σ df² grows quadratically
     * with corpus size (measured ×90 from sf0.01→sf0.1 and ×107 from
     * sf0.1→sf1 on this corpus family), while prefix postings are the
     * rarest ~(1−t) of each doc */
-  private def jaccardCandidatesFrom(ranked: DataFrame): DataFrame = {
+  private[graft] def jaccardCandidatesFrom(ranked: DataFrame): DataFrame = {
     val prefix = prefixRows(ranked, jaccardOMin)
     prefix.as("a").join(prefix.as("b"),
         col("a.shingle") === col("b.shingle") &&
@@ -399,7 +445,8 @@ object Dedup {
         floor((greatest(na, nb) + lit(4)) / lit(5)).cast("long"))
     // r09: join on xxhash64(shingle), not the ~30-byte shingle STRING —
     // the self-join's inner loop compares/carries only 8-byte longs
-    // (sf2: 489M enumerated prefix pairs; measured in DebugEditTier).
+    // (sf2: 489M enumerated prefix pairs; SURVEY.md §6.2 records the
+    // round-9 measurement).
     // EXACTNESS (w.h.p.): equal shingles ⇒ equal hashes, so the hash
     // join emits a SUPERSET of the string join's pairs — a collision
     // can only ADD phantom candidates at this stage. The downstream
@@ -443,7 +490,6 @@ object Dedup {
 
   private[graft] def jaccardPairs(
       docs: DataFrame, cap: Int = ShingleDfCap): DataFrame = {
-    require(JaccardThreshold == 0.5, "jaccardOMin hardcodes t = 1/2")
     // materialized once: candidate generation AND the signature build
     // both consume the window-annotated postings; left lazy, the verify
     // job recomputes the two window passes (~3.5 s at sf1)
@@ -457,8 +503,8 @@ object Dedup {
   private[graft] def jaccardPairsFrom(ranked: DataFrame): DataFrame =
     // exact verification on FULL sets — output identical to the
     // unfiltered self-join, so the shared oracle is unchanged
-    verifyJaccard(ranked.select("doc_id", "shingle"),
-      jaccardCandidatesFrom(ranked))
+    jaccardSims(candidateOverlaps(ranked.select("doc_id", "shingle"),
+      jaccardCandidatesFrom(ranked)))
 
   private[graft] val NumHashes = 32
   private val NumBands = 16 // × 2 rows/band: P(miss | j=0.5) = (1-0.25)^16 ≈ 1%
@@ -510,7 +556,7 @@ object Dedup {
     // exact-Jaccard verification, materialized only for candidate docs
     // (sparse at any scale — shingle sets are collected per candidate,
     // never for the whole corpus)
-    verifyJaccard(sh, cand).orderBy("a_id", "b_id")
+    jaccardSims(candidateOverlaps(sh, cand)).orderBy("a_id", "b_id")
   }
 
   /** SimHash signature width and chunking. 60 bits (not 64) because the
@@ -1048,7 +1094,7 @@ object Dedup {
     * (10·ed ≤ 3·max(len) — i.e. relative distance ≤ 0.3). Both engines
     * implement classic unit-cost Levenshtein.
     *
-    * SCALE NOTE (r09, measured in `tools/DebugEditTier`): this relation
+    * SCALE NOTE (r09, recorded in SURVEY.md §6.2): this relation
     * is intrinsically SUPER-LINEAR on replicated corpora — the output
     * itself grows 4.14× for 2× data at sf1→sf2 (238k → 987k pairs),
     * because the 20%-overlap floor plus the 0.3 relative-ed keep rule
@@ -1079,25 +1125,11 @@ object Dedup {
     // of exact longs is correctly rounded; /5 results never land on an
     // integer boundary unless exact, so floor is safe)
     val ranked = sharedRanked(s, d)
-    val pCand = editCandidatesFrom(ranked, docs)
-      // one materialization, three consumers + an AQE boundary for the
-      // signature joins — same reasoning as verifyJaccard's checkpoint
-      .localCheckpoint(true)
-    // exact shared-shingle counts on FULL sets, only for candidates —
-    // sorted hash signatures + codegen'd merge, as in verifyJaccard
-    val candDocs = pCand.select(col("a_id").as("doc_id"))
-      .union(pCand.select(col("b_id").as("doc_id"))).distinct()
-    val candSets = sizeGatedBroadcast(ranked
-      .join(broadcast(candDocs), "doc_id")
-      .groupBy("doc_id")
-      .agg(sort_array(collect_set(xxhash64(col("shingle")))).as("s")))
-    val cand = pCand
-      .join(candSets.as("sa"), col("a_id") === col("sa.doc_id"))
-      .join(candSets.as("sb"), col("b_id") === col("sb.doc_id"))
-      .withColumn("shared",
-        graft.functions.SortedIntersectCount(col("sa.s"), col("sb.s")))
-      .filter(col("shared") >= 3 &&
-        col("shared") * 5 >= greatest(size(col("sa.s")), size(col("sb.s"))))
+    // exact shared-shingle counts on FULL sets, only for candidates,
+    // gated by the overlap floor the candidates were generated under
+    val cand = candidateOverlaps(ranked, editCandidatesFrom(ranked, docs))
+      .filter(col("inter") >= 3 &&
+        col("inter") * 5 >= greatest(col("na"), col("nb")))
       .select("a_id", "b_id")
     cand
       .join(docs.as("da"), col("a_id") === col("da.doc_id"))
@@ -1322,7 +1354,7 @@ object Dedup {
       .distinct()
     // sims verified on FULL sets from the corpus-wide filtered
     // vocabulary, so pair scores equal the batch-free computation
-    verifyJaccard(ranked.select("doc_id", "shingle"), cand)
+    jaccardSims(candidateOverlaps(ranked.select("doc_id", "shingle"), cand))
       .orderBy("a_id", "b_id")
   }
 

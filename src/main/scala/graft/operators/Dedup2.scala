@@ -44,7 +44,7 @@ object Dedup2 {
     * 3-witness = 222k candidates, verify 3.85 s → 1.40 s. At sf2 the
     * gap widens: 37.8M / 1.11M candidates, verify 33.1 s → 2.0 s. The
     * witness extension — not signature banding — is the containment
-    * scale route; [[graft.DebugContainment]] reproduces the numbers.
+    * scale route (SURVEY.md §2.6 records the round-8 numbers).
     * B still contributes FULL postings (no prefix bound on B exists:
     * B may be arbitrarily larger). Verification runs on full sets, so
     * the pruning is exact — output ≡ the unfiltered index join the
@@ -71,28 +71,6 @@ object Dedup2 {
       .filter(col("wc") >= col("wr"))
       .select(least(col("x_id"), col("y_id")).as("a_id"),
         greatest(col("x_id"), col("y_id")).as("b_id"))
-  }
-
-  /** Exact-containment verification — the [[Dedup]] sorted-signature
-    * pattern: sets collected only for candidate docs, intersections via
-    * the codegen'd two-pointer merge, one double division per pair. */
-  private[graft] def verifyContainment(sh: DataFrame, cand: DataFrame): DataFrame = {
-    val candM = cand.localCheckpoint(true)
-    val candDocs = candM.select(col("a_id").as("doc_id"))
-      .union(candM.select(col("b_id").as("doc_id"))).distinct()
-    val candSets = Dedup.sizeGatedBroadcast(sh
-      .join(broadcast(candDocs), "doc_id")
-      .groupBy("doc_id")
-      .agg(sort_array(collect_set(xxhash64(col("shingle")))).as("s")))
-    candM
-      .join(candSets.as("sa"), col("a_id") === col("sa.doc_id"))
-      .join(candSets.as("sb"), col("b_id") === col("sb.doc_id"))
-      .withColumn("inter",
-        graft.functions.SortedIntersectCount(col("sa.s"), col("sb.s")))
-      .withColumn("containment", col("inter").cast("double") /
-        least(size(col("sa.s")), size(col("sb.s"))))
-      .filter(col("containment") >= ContainmentThreshold)
-      .select("a_id", "b_id", "containment")
   }
 
   /** Containment pairs at t = 0.8 over the capped shingle vocabulary.
@@ -140,8 +118,13 @@ object Dedup2 {
   private[graft] def sharedContainment(s: SparkSession, d: String): DataFrame =
     Dedup.sharedMat(s, d, "containment") {
       val ranked = Dedup.sharedRanked(s, d)
-      verifyContainment(ranked.select("doc_id", "shingle"),
-        containmentCandidatesFrom(ranked))
+      // exact containment on FULL sets: the shared overlap tail
+      Dedup.candidateOverlaps(ranked.select("doc_id", "shingle"),
+          containmentCandidatesFrom(ranked))
+        .withColumn("containment", col("inter").cast("double") /
+          least(col("na"), col("nb")))
+        .filter(col("containment") >= ContainmentThreshold)
+        .select("a_id", "b_id", "containment")
     }
 
   val containment: Q = Q(
@@ -170,7 +153,6 @@ object Dedup2 {
     * they almost never contain hot shingles). The measured scale route
     * is the 3-witness prefix filter ([[containmentCandidatesFrom]]):
     * 222k candidates at sf1 / 1.11M at sf2, verify 1.4 s / 2.0 s.
-    * [[graft.DebugContainment]] reproduces all three schemes' numbers.
     *
     * Scans the shared [[sharedContainment]] snapshot + per-doc sizes
     * from the shared postings table — pair-bounded residual, no

@@ -236,37 +236,46 @@ object Streams {
 
   /** Streaming NEAR-dup dedup: the foreachBatch form of
     * [[graft.operators.Dedup.incremental]]. The index at `indexDir` is
-    * a [[BatchIndex]] of four tables, each holding per batch:
+    * a [[BatchIndex]] of three tables, each holding per batch:
     *
-    *   - `postings` — (doc_id, shingle) for the batch's docs;
+    *   - `postings` — (doc_id, shingle) for the batch's docs, uncapped;
     *   - `df` — the batch's per-shingle posting counts;
-    *   - `sizes` — the batch's per-doc capped set sizes;
-    *   - `sets` — the batch's per-doc sorted hash signatures.
+    *   - `sets` — the batch's per-doc sorted hash signatures, CAPPED AT
+    *     ARRIVAL: only shingles whose df, as of that batch, is within
+    *     [[graft.operators.Dedup.ShingleDfCap]]. A doc's set size is
+    *     the size of its stored signature.
+    *
+    * An index directory written before `sets` was capped (it also has
+    * a `sizes` table) stores uncapped signatures; rebuild it from the
+    * documents.
     *
     * Each micro-batch is shingled once and paired as old⋈new + new⋈new
-    * joins: old docs are never re-shingled, old⋈old is never re-paired.
-    * The DF-cap gate and set sizes now come from the df/sizes DELTA
-    * tables (vocabulary- and doc-proportional aggregates), NOT from a
-    * linear re-scan of the postings index — the r04 finding. Only the
-    * pairing join itself reads stored postings, which is the index's
-    * job. Capping only the new side of the join is exact: a shared
-    * shingle contributes to the intersection iff it survives the cap on
-    * the arriving side. A doc's set size is fixed at arrival (capped
-    * against df-as-of-arrival); a shingle crossing
-    * [[graft.operators.Dedup.ShingleDfCap]] between batches can shift
-    * later scores vs a one-shot run — the incremental stop-gram caveat,
-    * impossible at test SF where the cap is never reached.
+    * joins on the shingle-pair core of [[graft.operators.Dedup]]: old
+    * docs are never re-shingled, old⋈old is never re-paired. The DF-cap
+    * gate comes from the df DELTA tables (a vocabulary-proportional
+    * aggregate), NOT from a linear re-scan of the postings index — the
+    * r04 finding. Only the pairing join itself reads stored postings,
+    * which is the index's job.
+    *
+    * Semantics: a doc's set is fixed at arrival (capped against
+    * df-as-of-arrival); the arriving doc's set is capped against
+    * df-as-of-now. Intersecting the two is exact against the uncapped
+    * old set: df only grows, so a shingle under the cap now was under
+    * it when the old doc arrived. A shingle crossing the cap between
+    * batches can therefore shift later scores vs a one-shot run — the
+    * incremental stop-gram caveat, impossible at test SF where the cap
+    * is never reached.
     *
     * IDEMPOTENT under foreachBatch retries ([[BatchIndex]]): re-running
     * a batch rewrites the same files instead of double-counting
-    * document frequencies and set sizes. Every pair is
+    * document frequencies. Every pair is
     * emitted exactly once, in the batch where its SECOND document
     * arrives; the union of all emissions equals the batch-free
     * [[graft.operators.Dedup.jaccardPairs]] over the full corpus
     * (StreamingSpec asserts this golden, plus retry-idempotence). */
   def nearDupIncrementalBatch(batch: DataFrame, indexDir: String,
       batchId: Long): DataFrame = {
-    val (pairsPlan, newPost, batchDf, newSizes, newSigs) =
+    val (pairsPlan, newPost, batchDf, newSigs) =
       nearDupBatchRelations(batch, indexDir, batchId)
     // materialize BEFORE the index writes so the pair set reflects
     // the pre-append corpus even under lazy re-evaluation
@@ -274,7 +283,6 @@ object Streams {
     val index = new BatchIndex(indexDir, batchId)
     index.put("postings", newPost)
     index.put("df", batchDf)
-    index.put("sizes", newSizes)
     index.put("sets", newSigs)
     pairs
   }
@@ -284,26 +292,27 @@ object Streams {
     * signature-table scan, no corpus-wide cap window) before
     * localCheckpoint makes it opaque.
     *
-    * Scale shape (r05): candidate generation joins the postings index
-    * against the BATCH'S PREFIX postings only — each arriving doc's
-    * n − ⌈n/3⌉ + 1 rarest shingles under the CURRENT global DF order
-    * (the df delta table the index already maintains). Restricting only
-    * the batch side is complete: the stored side carries every shingle,
-    * so the pair's smallest-ranked common shingle always matches, and
-    * ⌈n/3⌉ (not ⌈n/2⌉) is the bound that stays valid even where the
-    * incremental DF cap bites (sim ≥ t ⟹ inter ≥ t·n_new/(1+t)
-    * regardless of the stored side's capped size). Intersections are
-    * then counted on per-doc SORTED HASH SIGNATURES from the new
-    * `sets/` index table (old docs) and the capped batch (new docs) via
-    * the codegen'd merge — candidate-bounded work, instead of counting
-    * matches across the full old⋈new postings join, whose output grows
-    * with corpus × batch vocabulary overlap. */
+    * Scale shape (r05): the batch is ranked under the CURRENT global DF
+    * order ([[graft.operators.Dedup.rankPostings]] over the index's df
+    * plus this batch). Old⋈new candidates join the postings index
+    * against each arriving doc's n − ⌈n/3⌉ + 1 rarest shingles only:
+    * the stored side carries every shingle, so the pair's
+    * smallest-ranked common shingle always matches, and ⌈n/3⌉ is the
+    * bound that holds whatever the stored side's size
+    * ([[graft.operators.Dedup.jaccardProbeOMin]]). New⋈new candidates
+    * are the batch PPJoin, since both sides are capped under the same
+    * df. Intersections are then counted on per-doc SORTED HASH
+    * SIGNATURES ([[graft.operators.Dedup.overlaps]]): the stored `sets`
+    * plus the batch's on the side that may be old, the batch's alone on
+    * the side that is always new. That is candidate-bounded work,
+    * instead of counting matches across the full old⋈new postings join,
+    * whose output grows with corpus × batch vocabulary overlap. */
   private[graft] def nearDupBatchRelations(batch: DataFrame,
       indexDir: String, batchId: Long)
-      : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) = {
+      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
     import graft.operators.Dedup
     val index = new BatchIndex(indexDir, batchId)
-    // shingle ONLY the batch (batch-sized; reused by df/cap/sizes/joins)
+    // shingle ONLY the batch (batch-sized; reused by df/rank/joins)
     // shingleRows' contract requires one row per doc_id; an
     // at-least-once source can redeliver a doc WITHIN a batch, which
     // would otherwise inflate df/set sizes (cross-batch redelivery is
@@ -315,55 +324,21 @@ object Streams {
     // a sum over per-batch AGGREGATES, never a postings re-scan
     val dfNow = index.prior("df", batchDf).unionByName(batchDf)
       .groupBy("shingle").agg(sum("cnt").as("df"))
-    val overCap = dfNow.filter(col("df") > Dedup.ShingleDfCap)
-      .select("shingle")
-    val cappedNew = newPost.join(overCap, Seq("shingle"), "left_anti")
-    val newSizes = cappedNew.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val sizes = index.prior("sizes", newSizes).unionByName(newSizes)
-    // per-doc sorted hash signature of the FULL (uncapped) arrival set —
-    // what the index stores; intersections against it reproduce the
-    // previous match-count semantics (old side uncapped, new side
-    // capped) exactly
-    val newSigs = newPost.groupBy("doc_id")
-      .agg(sort_array(collect_set(xxhash64(col("shingle")))).as("sig"))
-    // batch-side prefix under the current global order (batch-sized
-    // windows — keyed by doc_id, never corpus-wide)
-    val wDoc = Window.partitionBy("doc_id")
-    val rankedNew = cappedNew.join(dfNow, "shingle")
-      .withColumn("n", count(lit(1)).over(wDoc))
-      .withColumn("rn", row_number().over(
-        wDoc.orderBy(col("df"), col("shingle"))))
-    val prefixNew = rankedNew
-      .filter(col("rn") <= col("n") - floor((col("n") + lit(2)) / lit(3)) + 1)
-      .select("doc_id", "shingle")
+    // batch-sized windows — keyed by doc_id, never corpus-wide
+    val ranked = Dedup.rankPostings(newPost, dfNow, Dedup.ShingleDfCap)
+    val newSigs = Dedup.signatures(ranked)
+    val probe = Dedup.prefixRows(ranked, Dedup.jaccardProbeOMin)
+    // every candidate's b_id is an arriving doc, so only the a side
+    // looks up the stored signatures
     val onCand = index.prior("postings", newPost).as("a")
-      .join(prefixNew.as("b"), col("a.shingle") === col("b.shingle"))
-      .select(least(col("a.doc_id"), col("b.doc_id")).as("a_id"),
-        greatest(col("a.doc_id"), col("b.doc_id")).as("b_id"))
-    val nnCand = prefixNew.as("a").join(prefixNew.as("b"),
-        col("a.shingle") === col("b.shingle") &&
-          col("a.doc_id") < col("b.doc_id"))
+      .join(probe.as("b"), col("a.shingle") === col("b.shingle"))
       .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
-    val cand = onCand.union(nnCand).distinct()
-    // signature lookup: old docs resolve to their stored (uncapped)
-    // arrival signature, new docs to the capped batch signature
-    val cappedSigs = cappedNew.groupBy("doc_id")
-      .agg(sort_array(collect_set(xxhash64(col("shingle")))).as("sig"))
-    val lookup = index.prior("sets", newSigs).unionByName(cappedSigs)
-    val pairs = cand
-      .join(lookup.select(col("doc_id").as("a_id"), col("sig").as("sa")), "a_id")
-      .join(lookup.select(col("doc_id").as("b_id"), col("sig").as("sb")), "b_id")
-      .withColumn("inter",
-        graft.functions.SortedIntersectCount(col("sa"), col("sb")))
-      .join(sizes.withColumnRenamed("doc_id", "a_id")
-        .withColumnRenamed("n", "na"), "a_id")
-      .join(sizes.withColumnRenamed("doc_id", "b_id")
-        .withColumnRenamed("n", "nb"), "b_id")
-      .withColumn("sim", col("inter").cast("double") /
-        (col("na") + col("nb") - col("inter")))
-      .filter(col("sim") >= Dedup.JaccardThreshold)
-      .select("a_id", "b_id", "sim")
-    (pairs, newPost, batchDf, newSizes, newSigs)
+    val cand = onCand.union(Dedup.jaccardCandidatesFrom(ranked)).distinct()
+    val sigs = index.prior("sets", newSigs).unionByName(newSigs)
+    val pairs = Dedup.jaccardSims(Dedup.overlaps(cand, sigs, newSigs))
+      .select(least(col("a_id"), col("b_id")).as("a_id"),
+        greatest(col("a_id"), col("b_id")).as("b_id"), col("sim"))
+    (pairs, newPost, batchDf, newSigs)
   }
 
   /** DETERMINISTIC within-batch redelivery collapse: one row per key,

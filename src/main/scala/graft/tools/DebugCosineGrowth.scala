@@ -4,7 +4,7 @@ package graft.tools
   * adjudication (VERDICT r10 "What's wrong" 2 / ADVICE: the
   * 2.00×-sf2-over-sf1 ratio was adjudicated output-bound on a
   * measurement that lived only in SURVEY prose — this tool commits it,
-  * the `DebugEditTier` discipline).
+  * as SURVEY.md §6.2 records the edit-tier study).
   *
   * Runs the REGISTERED route ([[graft.operators.Dedup.cosinePairs]] at
   * [[graft.operators.Dedup.CosineThreshold]]) on two corpora — by

@@ -91,7 +91,7 @@ class BatchIndexSpec extends AnyFunSuite {
     val clean = newDir("nd_clean")
     val clean0 = run(clean, b0.toIndexedSeq, 0L)
     val killed = newDir("nd_killed")
-    plantAll(clean, killed, Seq("postings", "df", "sizes", "sets"))
+    plantAll(clean, killed, Seq("postings", "df", "sets"))
     assert(run(killed, b0.toIndexedSeq, 0L) === clean0)
     assert(run(killed, b1.toIndexedSeq, 1L) === run(clean, b1.toIndexedSeq, 1L))
   }

@@ -268,29 +268,68 @@ class StreamingSpec extends AnyFunSuite {
     val docs = docsDf.select("doc_id", "text")
       .as[(Long, String)].collect().sortBy(_._1)
     val expected = graft.operators.Dedup.jaccardPairs(docsDf)
-      .select("a_id", "b_id").as[(Long, Long)].collect().toSet
+      .select("a_id", "b_id", "sim").as[(Long, Long, Double)].collect()
+      .map { case (a, b, sim) => (a, b) -> sim }.toMap
     val dir = java.nio.file.Files.createTempDirectory("neardup").toString +
       "/idx"
-    val got = scala.collection.mutable.Set[(Long, Long)]()
+    val got = scala.collection.mutable.Map[(Long, Long), Double]()
     val in = MemoryStream[(Long, String)]
     val q = in.toDF.toDF("doc_id", "text").writeStream
       .foreachBatch { (df: org.apache.spark.sql.DataFrame, bid: Long) =>
         Streams.nearDupIncrementalBatch(df, dir, bid)
-          .select("a_id", "b_id").collect()
-          .foreach(r => got += ((r.getLong(0), r.getLong(1))))
+          .select("a_id", "b_id", "sim").collect()
+          .foreach(r => got((r.getLong(0), r.getLong(1))) = r.getDouble(2))
         ()
       }
       .start()
     try {
       // three uneven batches; every pair must surface exactly when its
-      // second member arrives
+      // second member arrives, with the one-shot score
       docs.grouped(docs.length / 3 + 1).foreach { g =>
         in.addData(g.toIndexedSeq: _*)
         q.processAllAvailable()
       }
-      assert(got.toSet === expected,
-        s"missing=${expected -- got}, spurious=${got.toSet -- expected}")
+      assert(got.keySet === expected.keySet,
+        s"missing=${expected.keySet -- got.keySet}, " +
+          s"spurious=${got.keySet -- expected.keySet}")
+      val off = got.filter { case (k, sim) => math.abs(sim - expected(k)) > 1e-12 }
+      assert(off.isEmpty, s"sims differ from the one-shot pairs: $off")
     } finally q.stop()
+  }
+
+  test("streaming near-dup: a shingle crossing the df cap between two " +
+    "arrivals scores as documented (old set fixed at arrival, new side " +
+    "capped now)") {
+    import spark.implicits._
+    import graft.operators.Dedup.ShingleDfCap
+    import graft.streaming.BatchIndex
+    val dir = java.nio.file.Files.createTempDirectory("neardup_cap")
+      .toString + "/idx"
+    val hot = "hot boiler plate" // over the cap before A arrives
+    val crossing = "warm cross over" // crosses the cap between A and B
+    val a = s"$hot $crossing one two three four five six seven eight"
+    val b = s"$hot $crossing one two three four five six seven nine"
+    // earlier batches' df deltas, planted with the df table's schema
+    def plantDf(bid: Long, rows: (String, Long)*): Unit =
+      new BatchIndex(dir, bid).put("df", rows.toDF("shingle", "cnt"))
+    plantDf(0L, hot -> (ShingleDfCap + 1L), crossing -> (ShingleDfCap - 1L))
+    def run(bid: Long, id: Long, text: String): Map[(Long, Long), Double] =
+      Streams.nearDupIncrementalBatch(Seq((id, text)).toDF("doc_id", "text"),
+          dir, bid)
+        .select("a_id", "b_id", "sim").as[(Long, Long, Double)].collect()
+        .map { case (x, y, sim) => (x, y) -> sim }.toMap
+    assert(run(1L, 1L, a).isEmpty) // A arrives: df(crossing) = cap, kept
+    plantDf(2L, crossing -> 1L)
+    val got = run(3L, 2L, b) // B arrives: df(crossing) > cap, dropped
+    def shingles(t: String): Set[String] =
+      t.split(" ").sliding(3).map(_.mkString(" ")).toSet
+    val aSet = shingles(a) - hot // A's set as capped at its arrival
+    val bSet = shingles(b) - hot - crossing // B's set capped now
+    val inter = (aSet & bSet).size
+    val sim = inter.toDouble / (aSet.size + bSet.size - inter)
+    assert(sim >= 0.5)
+    assert(got.keySet === Set((1L, 2L)))
+    assert(math.abs(got((1L, 2L)) - sim) <= 1e-12, s"got $got, expected $sim")
   }
 
   test("streaming near-dup index is idempotent under foreachBatch " +
@@ -311,7 +350,7 @@ class StreamingSpec extends AnyFunSuite {
     val p0 = run(b0.toIndexedSeq, 0L)
     // simulate a foreachBatch RETRY of batch 0: Spark re-runs the whole
     // batch after the index append. Pairs must match and, crucially,
-    // batch 1's scores must not see double-counted df/sizes.
+    // batch 1's scores must not see a double-counted df.
     val p0retry = run(b0.toIndexedSeq, 0L)
     assert(p0retry === p0, "batch-0 retry changed its emitted pairs")
     val p1 = run(b1.toIndexedSeq, 1L)
@@ -319,16 +358,17 @@ class StreamingSpec extends AnyFunSuite {
       s"missing=${expected -- p0 -- p1}, spurious=${(p0 ++ p1) -- expected}")
     // scale shape: the pair plan reads the postings index exactly once
     // (the old⋈prefix(new) candidate join — that scan IS the index's
-    // job); DF-cap and sizes come from the delta tables; the only
-    // windows are BATCH-sized per-doc rank/size windows (partitioned by
-    // doc_id), never a corpus-wide cap window over shingle
+    // job) and the signature table once; the DF cap comes from the df
+    // table, set sizes from the signatures; the only windows are
+    // BATCH-sized per-doc rank/size windows (partitioned by doc_id),
+    // never a corpus-wide cap window over shingle
     var pairs: DataFrame = null
     val jobs = JobsDuring(spark.sparkContext) {
       pairs = Streams.nearDupBatchRelations(
         Seq((999001L, "fresh doc about nothing at all")).toDF("doc_id", "text"),
         dir, 2L)._1
     }
-    // the four index reads are declared, not inferred: building the
+    // the index reads are declared, not inferred: building the
     // batch's relations launches no schema-inference job
     val inferred = jobs.filter(j => !j.inSqlExecution && j.site.startsWith("parquet at"))
     assert(inferred.isEmpty, s"index reads inferred a parquet schema: $inferred")
@@ -341,6 +381,10 @@ class StreamingSpec extends AnyFunSuite {
     assert(postingsScans === 1,
       s"expected exactly 1 postings-index scan (the old⋈new join), " +
         s"got $postingsScans:\n$pairPlan")
+    val setsScans = "/sets".r.findAllIn(pairPlan).length
+    assert(setsScans === 1,
+      s"expected exactly 1 signature-table scan, got $setsScans:\n$pairPlan")
+    assert(!pairPlan.contains("/sizes"), s"a sizes table is read:\n$pairPlan")
   }
 
   test("streaming curation: upsert of per-batch emissions equals the " +
