@@ -1,11 +1,12 @@
 package graft
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
-import graft.functions.AvroCodec.AvroDecodeExpression
-import graft.functions.DotProduct
+import graft.functions.{AvroCodec, BmpPixels, DotProduct, JpegSegments, MediaHeaders, Mp4Boxes, ObjectCall, PngChunks, WordShingles}
 
 /** Catalyst integration point: registers graft's native expressions with
   * the SQL function registry so `spark.sql("... dot_product(a, b) ...")`
@@ -22,90 +23,76 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
 object GraftExtensions {
 
-  private def info(name: String, usage: String) =
-    new ExpressionInfo(classOf[DotProduct].getName, null, name, usage, "")
+  type Entry = (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
 
-  val dotProduct: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("dot_product"),
-    info("dot_product",
-      "dot_product(a, b) - double-precision dot product of two float arrays"),
-    (exprs: Seq[Expression]) => DotProduct(exprs(0), exprs(1)))
+  /** A SQL function that applies a column wrapper to its arguments.
+    * `cls` is the expression class the wrapper builds: `DESCRIBE
+    * FUNCTION EXTENDED` reports it. */
+  private def entry(name: String, cls: Class[_], usage: String)(
+      build: Seq[Column] => Column): Entry =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, null, name, usage, ""),
+      (exprs: Seq[Expression]) =>
+        ColumnBridge.expression(build(exprs.map(ColumnBridge.column))))
 
-  val avroDecode: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("avro_decode"),
-    info("avro_decode",
-      "avro_decode(bin, schemaJson[, lenient]) - decode headerless Avro binary"),
-    (exprs: Seq[Expression]) => {
-      val schemaJson = exprs(1) match {
-        case lit: org.apache.spark.sql.catalyst.expressions.Literal =>
-          lit.value.toString
-        case other =>
-          throw new IllegalArgumentException(
-            s"avro_decode schema must be a string literal, got $other")
-      }
-      val lenient = exprs.lift(2).exists {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v, _) =>
-          v == true
-        case _ => false
-      }
-      AvroDecodeExpression(exprs(0), schemaJson, lenient)
-    })
-
-  val wordShingles: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("word_shingles"),
-    info("word_shingles",
-      "word_shingles(words[, n]) - n-gram (default 3) word shingles of a string array"),
-    (exprs: Seq[Expression]) => {
-      val n = exprs.lift(1) match {
-        case Some(org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _)) => v
-        case None => 3
-        case other => throw new IllegalArgumentException(
-          s"word_shingles n must be an int literal, got $other")
-      }
-      graft.functions.WordShingles(exprs(0), n, distinct = false)
-    })
-
-  val mediaFormat: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("media_format"),
-    info("media_format",
-      "media_format(bin) - container sniff from magic bytes (png/gif/bmp/jpeg/wav/webp/unknown)"),
-    (exprs: Seq[Expression]) => graft.functions.MediaHeaders.MediaFormat(exprs(0)))
-
-  val imageWidth: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("image_width"),
-    info("image_width", "image_width(bin) - pixel width from the image header, or NULL"),
-    (exprs: Seq[Expression]) => graft.functions.MediaHeaders.ImageWidth(exprs(0)))
-
-  val imageHeight: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("image_height"),
-    info("image_height", "image_height(bin) - pixel height from the image header, or NULL"),
-    (exprs: Seq[Expression]) => graft.functions.MediaHeaders.ImageHeight(exprs(0)))
-
-  private def intLit(e: Expression, what: String): Int = e match {
-    case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-    case other =>
-      throw new IllegalArgumentException(s"$what must be an int literal, got $other")
+  private def literal(c: Column): Any = ColumnBridge.expression(c) match {
+    case Literal(v, _) => v
+    case other => throw new IllegalArgumentException(s"expected a literal, got $other")
+  }
+  private def intLit(c: Column, what: String): Int = literal(c) match {
+    case v: Int => v
+    case other => throw new IllegalArgumentException(s"$what must be an int literal, got $other")
+  }
+  /** an optional flag argument: set only by a literal `true` */
+  private def flag(c: Seq[Column], i: Int): Boolean = c.lift(i).exists { a =>
+    ColumnBridge.expression(a) match {
+      case Literal(v, _) => v == true
+      case _ => false
+    }
   }
 
-  val bmpBuild: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("bmp_build"),
-    info("bmp_build",
-      "bmp_build(seed, w, h) - valid 24-bpp BMP bytes with seed-derived pixels"),
-    (exprs: Seq[Expression]) =>
-      graft.functions.BmpPixels.BmpBuild(exprs(0), exprs(1), exprs(2)))
+  val dotProduct: Entry = entry("dot_product", classOf[DotProduct],
+    "dot_product(a, b) - double-precision dot product of two float arrays")(
+    c => DotProduct(c(0), c(1)))
 
-  val bmpChannelSum: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("bmp_channel_sum"),
-    info("bmp_channel_sum",
-      "bmp_channel_sum(bin, channel[, weighted]) - pixel-walk channel sum over a 24-bpp BMP (0=B,1=G,2=R), or NULL"),
-    (exprs: Seq[Expression]) => {
-      val weighted = exprs.lift(2).exists {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v, _) => v == true
-        case _ => false
-      }
-      graft.functions.BmpPixels.BmpSum(exprs(0),
-        intLit(exprs(1), "bmp_channel_sum channel"), weighted)
-    })
+  val avroDecode: Entry = entry("avro_decode",
+    classOf[AvroCodec.AvroDecodeExpression],
+    "avro_decode(bin, schemaJson[, lenient]) - decode headerless Avro binary") { c =>
+    val schemaJson = literal(c(1)) match {
+      case null => throw new IllegalArgumentException(
+        "avro_decode schema must be a string literal")
+      case v => v.toString
+    }
+    if (flag(c, 2)) AvroCodec.fromAvroLenient(c(0), schemaJson)
+    else AvroCodec.fromAvro(c(0), schemaJson)
+  }
+
+  val wordShingles: Entry = entry("word_shingles", classOf[WordShingles],
+    "word_shingles(words[, n]) - n-gram (default 3) word shingles of a string array") {
+    c => WordShingles(c(0), c.lift(1).map(intLit(_, "word_shingles n")).getOrElse(3))
+  }
+
+  val mediaFormat: Entry = entry("media_format", classOf[ObjectCall],
+    "media_format(bin) - container sniff from magic bytes (png/gif/bmp/jpeg/wav/webp/unknown)")(
+    c => MediaHeaders.format(c(0)))
+
+  val imageWidth: Entry = entry("image_width", classOf[ObjectCall],
+    "image_width(bin) - pixel width from the image header, or NULL")(
+    c => MediaHeaders.width(c(0)))
+
+  val imageHeight: Entry = entry("image_height", classOf[ObjectCall],
+    "image_height(bin) - pixel height from the image header, or NULL")(
+    c => MediaHeaders.height(c(0)))
+
+  val bmpBuild: Entry = entry("bmp_build", classOf[ObjectCall],
+    "bmp_build(seed, w, h) - valid 24-bpp BMP bytes with seed-derived pixels")(
+    c => BmpPixels.build(c(0), c(1), c(2)))
+
+  val bmpChannelSum: Entry = entry("bmp_channel_sum", classOf[ObjectCall],
+    "bmp_channel_sum(bin, channel[, weighted]) - pixel-walk channel sum over a 24-bpp BMP (0=B,1=G,2=R), or NULL") { c =>
+    val channel = intLit(c(1), "bmp_channel_sum channel")
+    if (flag(c, 2)) BmpPixels.weightedSum(c(0), channel)
+    else BmpPixels.channelSum(c(0), channel)
+  }
 
   /** Spark ships BloomFilterAggregate/BloomFilterMightContain as
     * INTERNAL expressions (they power injected runtime filters) without
@@ -114,86 +101,65 @@ object GraftExtensions {
     * `text_decontaminate_bloom`) expressible in one SQL statement:
     * `might_contain((SELECT bloom_filter_agg(xxhash64(x), n, bits)
     * FROM small_side), xxhash64(probe))`. */
-  val bloomFilterAgg: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("bloom_filter_agg"),
-    info("bloom_filter_agg",
-      "bloom_filter_agg(xxhash64(col), estNumItems, numBits) - build a bloom filter as binary"),
-    (exprs: Seq[Expression]) =>
-      org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-        exprs(0), exprs(1), exprs(2), 0, 0).toAggregateExpression())
+  val bloomFilterAgg: Entry = entry("bloom_filter_agg", classOf[BloomFilterAggregate],
+    "bloom_filter_agg(xxhash64(col), estNumItems, numBits) - build a bloom filter as binary") {
+    c =>
+      val e = c.map(ColumnBridge.expression)
+      ColumnBridge.column(BloomFilterAggregate(e(0), e(1), e(2), 0, 0).toAggregateExpression())
+  }
 
-  val mightContain: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("might_contain"),
-    info("might_contain",
-      "might_contain(bloomBinary, xxhash64(value)) - bloom membership probe (no false negatives)"),
-    (exprs: Seq[Expression]) =>
-      org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-        exprs(0), exprs(1)))
+  val mightContain: Entry = entry("might_contain", classOf[BloomFilterMightContain],
+    "might_contain(bloomBinary, xxhash64(value)) - bloom membership probe (no false negatives)") {
+    c => ColumnBridge.column(BloomFilterMightContain(
+      ColumnBridge.expression(c(0)), ColumnBridge.expression(c(1))))
+  }
 
-  val pngBuild: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("png_build"),
-    info("png_build",
-      "png_build(seed) - structurally valid multi-chunk PNG bytes with real per-chunk CRC-32"),
-    (exprs: Seq[Expression]) => graft.functions.PngChunks.PngBuild(exprs(0)))
+  val pngBuild: Entry = entry("png_build", classOf[ObjectCall],
+    "png_build(seed) - structurally valid multi-chunk PNG bytes with real per-chunk CRC-32")(
+    c => PngChunks.build(c(0)))
 
-  val pngChunkCount: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("png_chunk_count"),
-    info("png_chunk_count",
-      "png_chunk_count(bin) - chunk count through IEND, or NULL on malformed structure"),
-    (exprs: Seq[Expression]) => graft.functions.PngChunks.PngStat(exprs(0), 0))
+  val pngChunkCount: Entry = entry("png_chunk_count", classOf[ObjectCall],
+    "png_chunk_count(bin) - chunk count through IEND, or NULL on malformed structure")(
+    c => PngChunks.chunkCount(c(0)))
 
-  val pngIdatBytes: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("png_idat_bytes"),
-    info("png_idat_bytes",
-      "png_idat_bytes(bin) - total IDAT payload bytes without inflating, or NULL"),
-    (exprs: Seq[Expression]) => graft.functions.PngChunks.PngStat(exprs(0), 1))
+  val pngIdatBytes: Entry = entry("png_idat_bytes", classOf[ObjectCall],
+    "png_idat_bytes(bin) - total IDAT payload bytes without inflating, or NULL")(
+    c => PngChunks.idatBytes(c(0)))
 
-  val pngCrcValid: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("png_crc_valid_chunks"),
-    info("png_crc_valid_chunks",
-      "png_crc_valid_chunks(bin) - count of chunks whose stored CRC-32 matches recomputation, or NULL"),
-    (exprs: Seq[Expression]) => graft.functions.PngChunks.PngStat(exprs(0), 2))
+  val pngCrcValid: Entry = entry("png_crc_valid_chunks", classOf[ObjectCall],
+    "png_crc_valid_chunks(bin) - count of chunks whose stored CRC-32 matches recomputation, or NULL")(
+    c => PngChunks.crcValidCount(c(0)))
 
-  val jpegBuild: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("jpeg_build"),
-    info("jpeg_build",
-      "jpeg_build(seed) - structurally valid JFIF marker stream (APP0/COM/DQT/SOF0/DHT/SOS/EOI)"),
-    (exprs: Seq[Expression]) => graft.functions.JpegSegments.JpegBuild(exprs(0)))
+  val jpegBuild: Entry = entry("jpeg_build", classOf[ObjectCall],
+    "jpeg_build(seed) - structurally valid JFIF marker stream (APP0/COM/DQT/SOF0/DHT/SOS/EOI)")(
+    c => JpegSegments.build(c(0)))
 
-  val jpegWidth: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("jpeg_width"),
-    info("jpeg_width",
-      "jpeg_width(bin) - image width from the SOF0 segment, or NULL on malformed structure"),
-    (exprs: Seq[Expression]) => graft.functions.JpegSegments.JpegStat(exprs(0), 1))
+  val jpegWidth: Entry = entry("jpeg_width", classOf[ObjectCall],
+    "jpeg_width(bin) - image width from the SOF0 segment, or NULL on malformed structure")(
+    c => JpegSegments.width(c(0)))
 
-  val jpegHeight: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("jpeg_height"),
-    info("jpeg_height",
-      "jpeg_height(bin) - image height from the SOF0 segment, or NULL"),
-    (exprs: Seq[Expression]) => graft.functions.JpegSegments.JpegStat(exprs(0), 2))
+  val jpegHeight: Entry = entry("jpeg_height", classOf[ObjectCall],
+    "jpeg_height(bin) - image height from the SOF0 segment, or NULL")(
+    c => JpegSegments.height(c(0)))
 
-  val mp4BoxCount: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("mp4_box_count"),
-    info("mp4_box_count",
-      "mp4_box_count(bin) - top-level ISO-BMFF box count (sizes must tile the file), or NULL"),
-    (exprs: Seq[Expression]) => graft.functions.Mp4Boxes.Mp4Stat(exprs(0), 0))
+  val mp4BoxCount: Entry = entry("mp4_box_count", classOf[ObjectCall],
+    "mp4_box_count(bin) - top-level ISO-BMFF box count (sizes must tile the file), or NULL")(
+    c => Mp4Boxes.boxCount(c(0)))
 
-  val mp4MdatBytes: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("mp4_mdat_bytes"),
-    info("mp4_mdat_bytes",
-      "mp4_mdat_bytes(bin) - total mdat payload bytes, or NULL"),
-    (exprs: Seq[Expression]) => graft.functions.Mp4Boxes.Mp4Stat(exprs(0), 1))
+  val mp4MdatBytes: Entry = entry("mp4_mdat_bytes", classOf[ObjectCall],
+    "mp4_mdat_bytes(bin) - total mdat payload bytes, or NULL")(
+    c => Mp4Boxes.mdatBytes(c(0)))
 
-  val all: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
+  val all: Seq[Entry] =
     Seq(dotProduct, avroDecode, wordShingles, mediaFormat, imageWidth,
       imageHeight, bmpBuild, bmpChannelSum, bloomFilterAgg, mightContain,
       pngBuild, pngChunkCount, pngIdatBytes, pngCrcValid,
       jpegBuild, jpegWidth, jpegHeight, mp4BoxCount, mp4MdatBytes)
 
-  /** Register on an already-built session (e.g. the driver's). */
+  /** Register on an already-built session (e.g. the driver's), with
+    * the same [[ExpressionInfo]] the extension injects. */
   def register(spark: SparkSession): Unit =
-    all.foreach { case (id, _, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(id.funcName, builder, "built-in")
+    all.foreach { case (id, info, builder) =>
+      spark.sessionState.functionRegistry.registerFunction(id, info, builder)
     }
 }

@@ -93,7 +93,8 @@ object AvroCodec {
 
   /** Eval-path decode expression (off the hot analytical path; scan-side
     * decode cost is dominated by Kafka IO). Null input → null row
-    * (tombstone passthrough). */
+    * (tombstone passthrough). Bespoke, not an [[ObjectCall]]: it holds
+    * a stateful decoder (parsed schema, datum reader) per instance. */
   case class AvroDecodeExpression(
       child: Expression,
       schemaJson: String,
@@ -134,7 +135,8 @@ object AvroCodec {
     * no default fails the row, naming the field); writer-only fields are
     * skipped; promotions such as int → long apply. One datum reader per
     * id is built per task. An id missing from `writers` throws. Null
-    * input → null row (tombstone passthrough). */
+    * input → null row (tombstone passthrough). Bespoke, not an
+    * [[ObjectCall]]: it caches one stateful datum reader per writer id. */
   case class AvroDecodeByIdExpression(
       child: Expression,
       writers: Map[Int, String],
@@ -239,7 +241,8 @@ object AvroCodec {
     * Avro binary (the publish path — what the reference's Debezium side
     * does upstream, now available engine-side for writing change streams
     * back to Kafka). Struct fields must align positionally with the
-    * schema. */
+    * schema. Bespoke, not an [[ObjectCall]]: it holds a stateful datum
+    * writer per instance. */
   case class AvroEncodeExpression(child: Expression, schemaJson: String)
       extends UnaryExpression with CodegenFallback {
     @transient private lazy val avroSchema =

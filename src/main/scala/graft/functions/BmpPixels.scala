@@ -1,10 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{BinaryType, DataType, IntegerType, LongType}
+import org.apache.spark.sql.types.{BinaryType, LongType}
 
 /** REAL codec-free pixel analytics: BMP is the one mainstream raster
   * format whose pixel array needs no decompression, so channel statistics
@@ -234,135 +231,30 @@ object BmpPixels {
     hash
   }
 
-  /** seed/w/h → BMP bytes (generator side of the round trip). */
-  case class BmpBuild(first: Expression, second: Expression, third: Expression)
-      extends TernaryExpression {
-    override def dataType: DataType = BinaryType
-    override def prettyName: String = "bmp_build"
-    override def nullSafeEval(s: Any, w: Any, h: Any): Any =
-      buildBmp(s.asInstanceOf[Long], w.asInstanceOf[Int], h.asInstanceOf[Int])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val cls = BmpPixels.getClass.getName.stripSuffix("$") + "$.MODULE$"
-      defineCodeGen(ctx, ev, (s, w, h) => s"$cls.buildBmp($s, $w, $h)")
-    }
-    override protected def withNewChildrenInternal(
-        f: Expression, s: Expression, t: Expression): Expression =
-      copy(first = f, second = s, third = t)
-  }
-
-  /** Pixel-walk sum (plain or weighted); -1 sentinel → NULL. */
-  case class BmpSum(child: Expression, channel: Int, weighted: Boolean)
-      extends UnaryExpression {
-    override def nullable: Boolean = true
-    override def dataType: DataType = LongType
-    override def prettyName: String = "bmp_sum"
-    private def method = if (weighted) "bmpWeightedSum" else "bmpChannelSum"
-    override def nullSafeEval(v: Any): Any = {
-      val r =
-        if (weighted) bmpWeightedSum(v.asInstanceOf[Array[Byte]], channel)
-        else bmpChannelSum(v.asInstanceOf[Array[Byte]], channel)
-      if (r == -1L) null else r
-    }
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val cls = BmpPixels.getClass.getName.stripSuffix("$") + "$.MODULE$"
-      // freshName: stacked BmpSum/BmpResample columns share one projection
-      // class — a hard-coded local collides and kills codegen for the row.
-      val r = ctx.freshName("r")
-      nullSafeCodeGen(ctx, ev, c => s"""
-        |long $r = $cls.$method($c, $channel);
-        |if ($r == -1L) { ${ev.isNull} = true; } else { ${ev.value} = $r; }
-      """.stripMargin)
-    }
-    override protected def withNewChildInternal(c: Expression): Expression =
-      copy(child = c)
-  }
-
-  /** Resampled pixel-walk sum; -1 sentinel → NULL. */
-  case class BmpResample(child: Expression, rw: Int, rh: Int, channel: Int,
-      weighted: Boolean) extends UnaryExpression {
-    override def nullable: Boolean = true
-    override def dataType: DataType = LongType
-    override def prettyName: String = "bmp_resample_sum"
-    override def nullSafeEval(v: Any): Any = {
-      val r = bmpResampleSum(v.asInstanceOf[Array[Byte]], rw, rh, channel,
-        weighted)
-      if (r == -1L) null else r
-    }
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val cls = BmpPixels.getClass.getName.stripSuffix("$") + "$.MODULE$"
-      val r = ctx.freshName("r")
-      nullSafeCodeGen(ctx, ev, c => s"""
-        |long $r = $cls.bmpResampleSum($c, $rw, $rh, $channel, $weighted);
-        |if ($r == -1L) { ${ev.isNull} = true; } else { ${ev.value} = $r; }
-      """.stripMargin)
-    }
-    override protected def withNewChildInternal(c: Expression): Expression =
-      copy(child = c)
-  }
-
-  /** aHash pixel walk; -1 sentinel (unreachable for valid input) → NULL. */
-  case class BmpAHashExpr(child: Expression, rw: Int, rh: Int, channel: Int)
-      extends UnaryExpression {
-    override def nullable: Boolean = true
-    override def dataType: DataType = LongType
-    override def prettyName: String = "bmp_ahash"
-    override def nullSafeEval(v: Any): Any = {
-      val r = bmpAHash(v.asInstanceOf[Array[Byte]], rw, rh, channel)
-      if (r == -1L) null else r
-    }
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val cls = BmpPixels.getClass.getName.stripSuffix("$") + "$.MODULE$"
-      val r = ctx.freshName("r")
-      nullSafeCodeGen(ctx, ev, c => s"""
-        |long $r = $cls.bmpAHash($c, $rw, $rh, $channel);
-        |if ($r == -1L) { ${ev.isNull} = true; } else { ${ev.value} = $r; }
-      """.stripMargin)
-    }
-    override protected def withNewChildInternal(c: Expression): Expression =
-      copy(child = c)
-  }
-
-  /** seed/w/h → NN-resampled rendition bytes (ratio num:den fixed per
-    * call site, like the walkers' channel). */
-  case class BmpBuildResampled(first: Expression, second: Expression,
-      third: Expression, num: Int, den: Int) extends TernaryExpression {
-    override def dataType: DataType = BinaryType
-    override def prettyName: String = "bmp_build_resampled"
-    override def nullSafeEval(s: Any, w: Any, h: Any): Any =
-      buildBmpResampled(s.asInstanceOf[Long], w.asInstanceOf[Int],
-        h.asInstanceOf[Int], num, den)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val cls = BmpPixels.getClass.getName.stripSuffix("$") + "$.MODULE$"
-      defineCodeGen(ctx, ev,
-        (s, w, h) => s"$cls.buildBmpResampled($s, $w, $h, $num, $den)")
-    }
-    override protected def withNewChildrenInternal(
-        f: Expression, s: Expression, t: Expression): Expression =
-      copy(first = f, second = s, third = t)
-  }
-
   def build(seed: Column, w: Column, h: Column): Column =
-    ColumnBridge.column(BmpBuild(ColumnBridge.expression(seed),
-      ColumnBridge.expression(w), ColumnBridge.expression(h)))
+    ObjectCall.column("bmp_build", this, "buildBmp", BinaryType, Seq(seed, w, h))
   def channelSum(media: Column, channel: Int): Column =
-    ColumnBridge.column(BmpSum(ColumnBridge.expression(media), channel,
-      weighted = false))
+    walk("bmpChannelSum", media, channel)
   def weightedSum(media: Column, channel: Int): Column =
-    ColumnBridge.column(BmpSum(ColumnBridge.expression(media), channel,
-      weighted = true))
+    walk("bmpWeightedSum", media, channel)
   def resampleSum(media: Column, rw: Int, rh: Int, channel: Int,
       weighted: Boolean = false): Column =
-    ColumnBridge.column(BmpResample(ColumnBridge.expression(media), rw, rh,
-      channel, weighted))
+    ObjectCall.column("bmp_resample_sum", this, "bmpResampleSum", LongType,
+      Seq(media), Seq(rw, rh, channel, weighted), nullOn = Some(-1L))
   def buildResampled(seed: Column, w: Column, h: Column,
       num: Int, den: Int): Column = {
     require(num > 0 && den > 0, "resample ratio must be positive")
-    ColumnBridge.column(BmpBuildResampled(ColumnBridge.expression(seed),
-      ColumnBridge.expression(w), ColumnBridge.expression(h), num, den))
+    ObjectCall.column("bmp_build_resampled", this, "buildBmpResampled",
+      BinaryType, Seq(seed, w, h), Seq(num, den))
   }
   def aHash(media: Column, rw: Int, rh: Int, channel: Int): Column = {
     require(rw > 0 && rh > 0 && rw * rh <= 64, "aHash grid must fit 64 bits")
-    ColumnBridge.column(BmpAHashExpr(ColumnBridge.expression(media), rw, rh,
-      channel))
+    ObjectCall.column("bmp_ahash", this, "bmpAHash", LongType, Seq(media),
+      Seq(rw, rh, channel), nullOn = Some(-1L))
   }
+
+  /** a pixel-walk sum; its -1 sentinel is NULL */
+  private def walk(method: String, media: Column, channel: Int): Column =
+    ObjectCall.column("bmp_sum", this, method, LongType, Seq(media),
+      Seq(channel), nullOn = Some(-1L))
 }

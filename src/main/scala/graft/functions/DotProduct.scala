@@ -16,6 +16,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * precision — bit-identical to the `aggregate(zip_with(...))` fold it
   * replaces and to the DuckDB oracle's `list_reduce` (VectorFunctions
   * doc). Null if either side is null; arrays must be equal length.
+  *
+  * A bespoke expression, not an [[ObjectCall]]: its generated code is
+  * an inline loop over the unsafe arrays, not one method call.
   */
 case class DotProduct(left: Expression, right: Expression)
     extends BinaryExpression {

@@ -1,10 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
+import org.apache.spark.sql.types.{BinaryType, LongType}
 
 /** Element-tree analytics over EBML containers (Matroska/WebM) — the
   * variable-length-integer slice of the multimodal story. EBML is the
@@ -132,41 +129,6 @@ object EbmlTree {
     else nClusters
   }
 
-  /** seed → EBML bytes (generator side of the round trip). */
-  case class EbmlBuild(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = BinaryType
-    override def prettyName: String = "ebml_build"
-    override def nullSafeEval(s: Any): Any = buildEbml(s.asInstanceOf[Long])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val cls = EbmlTree.getClass.getName.stripSuffix("$") + "$.MODULE$"
-      defineCodeGen(ctx, ev, s => s"$cls.buildEbml($s)")
-    }
-    override protected def withNewChildInternal(c: Expression): Expression =
-      copy(child = c)
-  }
-
-  /** VINT-tree fold (mode static); -1 sentinel → NULL. */
-  case class EbmlStat(child: Expression, mode: Int) extends UnaryExpression {
-    override def nullable: Boolean = true
-    override def dataType: DataType = LongType
-    override def prettyName: String = "ebml_stat"
-    override def nullSafeEval(v: Any): Any = {
-      val r = ebmlWalk(v.asInstanceOf[Array[Byte]], mode)
-      if (r == -1L) null else r
-    }
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val cls = EbmlTree.getClass.getName.stripSuffix("$") + "$.MODULE$"
-      // freshName: stacked EbmlStats in one projection must not collide
-      val r = ctx.freshName("r")
-      nullSafeCodeGen(ctx, ev, c => s"""
-        |long $r = $cls.ebmlWalk($c, $mode);
-        |if ($r == -1L) { ${ev.isNull} = true; } else { ${ev.value} = $r; }
-      """.stripMargin)
-    }
-    override protected def withNewChildInternal(c: Expression): Expression =
-      copy(child = c)
-  }
-
   // ------------------------------------------------------------------
   // Temporal fingerprint over CLUSTER TIMESTAMPS (r15 VERDICT task 8):
   // the GIF frame-sequence fingerprint's 65-window fold applied to a
@@ -284,69 +246,36 @@ object EbmlTree {
     if (!walk(0, b.length, inCluster = false) || bad) null else stats.toArray
   }
 
-  /** c/n → fingerprint-corpus EBML bytes (rendition static). */
-  case class EbmlFpBuild(left: Expression, right: Expression, rendition: Int)
-      extends BinaryExpression {
-    override def dataType: DataType = BinaryType
-    override def prettyName: String = "ebml_fp_build"
-    override def nullSafeEval(c: Any, n: Any): Any =
-      buildEbmlFp(c.asInstanceOf[Long], n.asInstanceOf[Int], rendition)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val cls = EbmlTree.getClass.getName.stripSuffix("$") + "$.MODULE$"
-      defineCodeGen(ctx, ev, (c, n) => s"$cls.buildEbmlFp($c, $n, $rendition)")
-    }
-    override protected def withNewChildrenInternal(
-        l: Expression, r: Expression): Expression = copy(left = l, right = r)
-  }
-
   /** Temporal fingerprint over cluster timestamps: one validated walk
-    * ([[ebmlClusterStats]]) + the shared 65-window fold. */
-  case class EbmlFingerprintExpr(child: Expression, frames: Int)
-      extends UnaryExpression {
-    override def nullable: Boolean = true
-    override def dataType: DataType = LongType
-    override def prettyName: String = "ebml_fingerprint"
-    override def nullSafeEval(v: Any): Any = {
-      val stats = ebmlClusterStats(v.asInstanceOf[Array[Byte]])
-      if (stats == null || stats.length < frames + 1) null
-      else GifFrames.gifFingerprintFromStats(stats, frames)
-    }
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val cls = EbmlTree.getClass.getName.stripSuffix("$") + "$.MODULE$"
-      val gcls = GifFrames.getClass.getName.stripSuffix("$") + "$.MODULE$"
-      val s = ctx.freshName("stats")
-      nullSafeCodeGen(ctx, ev, c => s"""
-        |long[] $s = $cls.ebmlClusterStats($c);
-        |if ($s == null || $s.length < ${frames + 1}) {
-        |  ${ev.isNull} = true;
-        |} else {
-        |  ${ev.value} = $gcls.gifFingerprintFromStats($s, $frames);
-        |}
-      """.stripMargin)
-    }
-    override protected def withNewChildInternal(c: Expression): Expression =
-      copy(child = c)
+    * ([[ebmlClusterStats]]) plus the shared 65-window fold. Null when
+    * the stream is malformed or has under `frames` + 1 clusters; boxed
+    * because every 64-bit value is a valid fingerprint. */
+  def fingerprintOf(b: Array[Byte], frames: Int): java.lang.Long = {
+    val stats = ebmlClusterStats(b)
+    if (stats == null || stats.length < frames + 1) null
+    else GifFrames.gifFingerprintFromStats(stats, frames)
   }
 
   def buildFp(c: Column, n: Column, rendition: Int): Column = {
     require(rendition == 0 || rendition == 1, "rendition is 0 or 1")
-    ColumnBridge.column(EbmlFpBuild(ColumnBridge.expression(c),
-      ColumnBridge.expression(n.cast("int")), rendition))
+    ObjectCall.column("ebml_fp_build", this, "buildEbmlFp", BinaryType,
+      Seq(c, n.cast("int")), Seq(rendition))
   }
   def fingerprint(media: Column, frames: Int): Column = {
     require(frames > 0 && frames <= 64, "fingerprint must fit 64 bits")
-    ColumnBridge.column(EbmlFingerprintExpr(ColumnBridge.expression(media),
-      frames))
+    ObjectCall.column("ebml_fingerprint", this, "fingerprintOf", LongType,
+      Seq(media), Seq(frames), boxed = true)
   }
 
   def build(seed: Column): Column =
-    ColumnBridge.column(EbmlBuild(ColumnBridge.expression(seed)))
-  def elementCount(media: Column): Column =
-    ColumnBridge.column(EbmlStat(ColumnBridge.expression(media), 0))
-  def clusterBytes(media: Column): Column =
-    ColumnBridge.column(EbmlStat(ColumnBridge.expression(media), 1))
-  def timestampScale(media: Column): Column =
-    ColumnBridge.column(EbmlStat(ColumnBridge.expression(media), 2))
-  def clusterCount(media: Column): Column =
-    ColumnBridge.column(EbmlStat(ColumnBridge.expression(media), 3))
+    ObjectCall.column("ebml_build", this, "buildEbml", BinaryType, Seq(seed))
+  def elementCount(media: Column): Column = stat(media, 0)
+  def clusterBytes(media: Column): Column = stat(media, 1)
+  def timestampScale(media: Column): Column = stat(media, 2)
+  def clusterCount(media: Column): Column = stat(media, 3)
+
+  /** [[ebmlWalk]]'s fold `mode`; its -1 sentinel is NULL. */
+  private def stat(media: Column, mode: Int): Column =
+    ObjectCall.column("ebml_stat", this, "ebmlWalk", LongType, Seq(media),
+      Seq(mode), nullOn = Some(-1L))
 }

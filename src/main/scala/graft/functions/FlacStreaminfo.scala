@@ -1,10 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
+import org.apache.spark.sql.types.{BinaryType, LongType}
 
 /** STREAMINFO analytics over FLAC streams — the bit-packed slice of
   * the multimodal story. FLAC's first metadata block packs its audio
@@ -98,51 +95,16 @@ object FlacStreaminfo {
     else blocks
   }
 
-  /** seed → FLAC bytes (generator side of the round trip). */
-  case class FlacBuild(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = BinaryType
-    override def prettyName: String = "flac_build"
-    override def nullSafeEval(s: Any): Any = buildFlac(s.asInstanceOf[Long])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val cls = FlacStreaminfo.getClass.getName.stripSuffix("$") + "$.MODULE$"
-      defineCodeGen(ctx, ev, s => s"$cls.buildFlac($s)")
-    }
-    override protected def withNewChildInternal(c: Expression): Expression =
-      copy(child = c)
-  }
-
-  /** Bit-field fold (mode static); -1 sentinel → NULL. */
-  case class FlacStat(child: Expression, mode: Int) extends UnaryExpression {
-    override def nullable: Boolean = true
-    override def dataType: DataType = LongType
-    override def prettyName: String = "flac_stat"
-    override def nullSafeEval(v: Any): Any = {
-      val r = flacWalk(v.asInstanceOf[Array[Byte]], mode)
-      if (r == -1L) null else r
-    }
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val cls = FlacStreaminfo.getClass.getName.stripSuffix("$") + "$.MODULE$"
-      // freshName: stacked FlacStats in one projection must not collide
-      val r = ctx.freshName("r")
-      nullSafeCodeGen(ctx, ev, c => s"""
-        |long $r = $cls.flacWalk($c, $mode);
-        |if ($r == -1L) { ${ev.isNull} = true; } else { ${ev.value} = $r; }
-      """.stripMargin)
-    }
-    override protected def withNewChildInternal(c: Expression): Expression =
-      copy(child = c)
-  }
-
   def build(seed: Column): Column =
-    ColumnBridge.column(FlacBuild(ColumnBridge.expression(seed)))
-  def sampleRate(media: Column): Column =
-    ColumnBridge.column(FlacStat(ColumnBridge.expression(media), 0))
-  def channels(media: Column): Column =
-    ColumnBridge.column(FlacStat(ColumnBridge.expression(media), 1))
-  def bitsPerSample(media: Column): Column =
-    ColumnBridge.column(FlacStat(ColumnBridge.expression(media), 2))
-  def totalSamples(media: Column): Column =
-    ColumnBridge.column(FlacStat(ColumnBridge.expression(media), 3))
-  def blockCount(media: Column): Column =
-    ColumnBridge.column(FlacStat(ColumnBridge.expression(media), 4))
+    ObjectCall.column("flac_build", this, "buildFlac", BinaryType, Seq(seed))
+  def sampleRate(media: Column): Column = stat(media, 0)
+  def channels(media: Column): Column = stat(media, 1)
+  def bitsPerSample(media: Column): Column = stat(media, 2)
+  def totalSamples(media: Column): Column = stat(media, 3)
+  def blockCount(media: Column): Column = stat(media, 4)
+
+  /** [[flacWalk]]'s fold `mode`; its -1 sentinel is NULL. */
+  private def stat(media: Column, mode: Int): Column =
+    ObjectCall.column("flac_stat", this, "flacWalk", LongType, Seq(media),
+      Seq(mode), nullOn = Some(-1L))
 }

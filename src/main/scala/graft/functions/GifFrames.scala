@@ -1,10 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
+import org.apache.spark.sql.types.{BinaryType, LongType}
 
 /** Frame-level analytics over ANIMATED GIF containers — the
   * frame-sampling slice of the multimodal story (every-k-th-frame
@@ -154,9 +151,17 @@ object GifFrames {
     * [[gifFingerprintFromStats]] folds the windows in O(F) memory
     * without touching the container again. */
   def gifFingerprint(b: Array[Byte], frames: Int): Long = {
+    val h = fingerprintOf(b, frames)
+    if (h == null) 0L else h // caller gates
+  }
+
+  /** One validated walk ([[gifFrameStats]]) plus the window fold: null
+    * when the stream is malformed or has under `frames` + 1 frames;
+    * boxed because every 64-bit value is a valid fingerprint. */
+  def fingerprintOf(b: Array[Byte], frames: Int): java.lang.Long = {
     val stats = gifFrameStats(b)
-    if (stats == null || stats.length < frames + 1) return 0L // caller gates
-    gifFingerprintFromStats(stats, frames)
+    if (stats == null || stats.length < frames + 1) null
+    else gifFingerprintFromStats(stats, frames)
   }
 
   /** One fully-validated block walk collecting per-frame
@@ -305,107 +310,24 @@ object GifFrames {
     -1L // ran off the end without a trailer
   }
 
-  /** seed/n → GIF bytes (generator side of the round trip). */
-  case class GifBuild(left: Expression, right: Expression)
-      extends BinaryExpression {
-    override def dataType: DataType = BinaryType
-    override def prettyName: String = "gif_build"
-    override def nullSafeEval(s: Any, n: Any): Any =
-      buildGif(s.asInstanceOf[Long], n.asInstanceOf[Int])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val cls = GifFrames.getClass.getName.stripSuffix("$") + "$.MODULE$"
-      defineCodeGen(ctx, ev, (s, n) => s"$cls.buildGif($s, $n)")
-    }
-    override protected def withNewChildrenInternal(
-        l: Expression, r: Expression): Expression = copy(left = l, right = r)
-  }
-
-  /** Frame-structure fold (mode/k static); -1 sentinel → NULL. */
-  case class GifStat(child: Expression, mode: Int, k: Int)
-      extends UnaryExpression {
-    override def nullable: Boolean = true
-    override def dataType: DataType = LongType
-    override def prettyName: String = "gif_stat"
-    override def nullSafeEval(v: Any): Any = {
-      val r = gifWalk(v.asInstanceOf[Array[Byte]], mode, k)
-      if (r == -1L) null else r
-    }
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val cls = GifFrames.getClass.getName.stripSuffix("$") + "$.MODULE$"
-      // freshName: two GifStats in one projection must not collide.
-      val r = ctx.freshName("r")
-      nullSafeCodeGen(ctx, ev, c => s"""
-        |long $r = $cls.gifWalk($c, $mode, $k);
-        |if ($r == -1L) { ${ev.isNull} = true; } else { ${ev.value} = $r; }
-      """.stripMargin)
-    }
-    override protected def withNewChildInternal(c: Expression): Expression =
-      copy(child = c)
-  }
-
-  /** c/n → fingerprint-corpus GIF bytes (rendition static). */
-  case class GifFpBuild(left: Expression, right: Expression, rendition: Int)
-      extends BinaryExpression {
-    override def dataType: DataType = BinaryType
-    override def prettyName: String = "gif_fp_build"
-    override def nullSafeEval(c: Any, n: Any): Any =
-      buildGifFp(c.asInstanceOf[Long], n.asInstanceOf[Int], rendition)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val cls = GifFrames.getClass.getName.stripSuffix("$") + "$.MODULE$"
-      defineCodeGen(ctx, ev, (c, n) => s"$cls.buildGifFp($c, $n, $rendition)")
-    }
-    override protected def withNewChildrenInternal(
-        l: Expression, r: Expression): Expression = copy(left = l, right = r)
-  }
-
-  /** Temporal fingerprint; validity gated on [[gifWalk]] mode 0 (no
-    * in-band sentinel — any 64-bit pattern is a legitimate hash). */
-  case class GifFingerprintExpr(child: Expression, frames: Int)
-      extends UnaryExpression {
-    override def nullable: Boolean = true
-    override def dataType: DataType = LongType
-    override def prettyName: String = "gif_fingerprint"
-    override def nullSafeEval(v: Any): Any = {
-      val b = v.asInstanceOf[Array[Byte]]
-      val stats = gifFrameStats(b)
-      if (stats == null || stats.length < frames + 1) null
-      else gifFingerprintFromStats(stats, frames)
-    }
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val cls = GifFrames.getClass.getName.stripSuffix("$") + "$.MODULE$"
-      val s = ctx.freshName("stats")
-      // ONE container walk per row: validity, frame count, and stats
-      // come out of the same gifFrameStats pass (r15 ADVICE)
-      nullSafeCodeGen(ctx, ev, c => s"""
-        |long[] $s = $cls.gifFrameStats($c);
-        |if ($s == null || $s.length < ${frames + 1}) {
-        |  ${ev.isNull} = true;
-        |} else {
-        |  ${ev.value} = $cls.gifFingerprintFromStats($s, $frames);
-        |}
-      """.stripMargin)
-    }
-    override protected def withNewChildInternal(c: Expression): Expression =
-      copy(child = c)
-  }
-
   def build(seed: Column, n: Column): Column =
-    ColumnBridge.column(GifBuild(ColumnBridge.expression(seed),
-      ColumnBridge.expression(n)))
+    ObjectCall.column("gif_build", this, "buildGif", BinaryType, Seq(seed, n))
   def buildFp(c: Column, n: Column, rendition: Int): Column = {
     require(rendition == 0 || rendition == 1, "rendition is 0 or 1")
-    ColumnBridge.column(GifFpBuild(ColumnBridge.expression(c),
-      ColumnBridge.expression(n.cast("int")), rendition))
+    ObjectCall.column("gif_fp_build", this, "buildGifFp", BinaryType,
+      Seq(c, n.cast("int")), Seq(rendition))
   }
   def fingerprint(media: Column, frames: Int): Column = {
     require(frames > 0 && frames <= 64, "fingerprint must fit 64 bits")
-    ColumnBridge.column(GifFingerprintExpr(ColumnBridge.expression(media),
-      frames))
+    ObjectCall.column("gif_fingerprint", this, "fingerprintOf", LongType,
+      Seq(media), Seq(frames), boxed = true)
   }
-  def frameCount(media: Column): Column =
-    ColumnBridge.column(GifStat(ColumnBridge.expression(media), 0, 1))
-  def totalDelay(media: Column): Column =
-    ColumnBridge.column(GifStat(ColumnBridge.expression(media), 1, 1))
-  def sampledSum(media: Column, k: Int): Column =
-    ColumnBridge.column(GifStat(ColumnBridge.expression(media), 2, k))
+  def frameCount(media: Column): Column = stat(media, 0, 1)
+  def totalDelay(media: Column): Column = stat(media, 1, 1)
+  def sampledSum(media: Column, k: Int): Column = stat(media, 2, k)
+
+  /** [[gifWalk]]'s fold `mode`; its -1 sentinel is NULL. */
+  private def stat(media: Column, mode: Int, k: Int): Column =
+    ObjectCall.column("gif_stat", this, "gifWalk", LongType, Seq(media),
+      Seq(mode, k), nullOn = Some(-1L))
 }

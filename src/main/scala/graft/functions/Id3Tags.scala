@@ -1,10 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
+import org.apache.spark.sql.types.{BinaryType, LongType}
 
 /** Frame-level analytics over ID3v2.3 audio-metadata containers — the
   * music/podcast-lake slice of the multimodal story. The ID3 grammar
@@ -123,51 +120,16 @@ object Id3Tags {
     else size
   }
 
-  /** seed → ID3 bytes (generator side of the round trip). */
-  case class Id3Build(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = BinaryType
-    override def prettyName: String = "id3_build"
-    override def nullSafeEval(s: Any): Any = buildId3(s.asInstanceOf[Long])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val cls = Id3Tags.getClass.getName.stripSuffix("$") + "$.MODULE$"
-      defineCodeGen(ctx, ev, s => s"$cls.buildId3($s)")
-    }
-    override protected def withNewChildInternal(c: Expression): Expression =
-      copy(child = c)
-  }
-
-  /** Frame-structure fold (mode static); -1 sentinel → NULL. */
-  case class Id3Stat(child: Expression, mode: Int) extends UnaryExpression {
-    override def nullable: Boolean = true
-    override def dataType: DataType = LongType
-    override def prettyName: String = "id3_stat"
-    override def nullSafeEval(v: Any): Any = {
-      val r = id3Walk(v.asInstanceOf[Array[Byte]], mode)
-      if (r == -1L) null else r
-    }
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val cls = Id3Tags.getClass.getName.stripSuffix("$") + "$.MODULE$"
-      // freshName: stacked Id3Stats in one projection must not collide.
-      val r = ctx.freshName("r")
-      nullSafeCodeGen(ctx, ev, c => s"""
-        |long $r = $cls.id3Walk($c, $mode);
-        |if ($r == -1L) { ${ev.isNull} = true; } else { ${ev.value} = $r; }
-      """.stripMargin)
-    }
-    override protected def withNewChildInternal(c: Expression): Expression =
-      copy(child = c)
-  }
-
   def build(seed: Column): Column =
-    ColumnBridge.column(Id3Build(ColumnBridge.expression(seed)))
-  def frameCount(media: Column): Column =
-    ColumnBridge.column(Id3Stat(ColumnBridge.expression(media), 0))
-  def payloadBytes(media: Column): Column =
-    ColumnBridge.column(Id3Stat(ColumnBridge.expression(media), 1))
-  def titleLength(media: Column): Column =
-    ColumnBridge.column(Id3Stat(ColumnBridge.expression(media), 2))
-  def trackNumber(media: Column): Column =
-    ColumnBridge.column(Id3Stat(ColumnBridge.expression(media), 3))
-  def tagSize(media: Column): Column =
-    ColumnBridge.column(Id3Stat(ColumnBridge.expression(media), 4))
+    ObjectCall.column("id3_build", this, "buildId3", BinaryType, Seq(seed))
+  def frameCount(media: Column): Column = stat(media, 0)
+  def payloadBytes(media: Column): Column = stat(media, 1)
+  def titleLength(media: Column): Column = stat(media, 2)
+  def trackNumber(media: Column): Column = stat(media, 3)
+  def tagSize(media: Column): Column = stat(media, 4)
+
+  /** [[id3Walk]]'s fold `mode`; its -1 sentinel is NULL. */
+  private def stat(media: Column, mode: Int): Column =
+    ObjectCall.column("id3_stat", this, "id3Walk", LongType, Seq(media),
+      Seq(mode), nullOn = Some(-1L))
 }

@@ -1,10 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
+import org.apache.spark.sql.types.{BinaryType, LongType}
 
 /** Marker-segment analytics over JPEG/JFIF containers — the compressed
   * -image slice of the multimodal story. JPEG's segment grammar (0xFF
@@ -128,51 +125,16 @@ object JpegSegments {
     -1L // ran off the end without SOS
   }
 
-  /** seed → JPEG bytes (generator side of the round trip). */
-  case class JpegBuild(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = BinaryType
-    override def prettyName: String = "jpeg_build"
-    override def nullSafeEval(s: Any): Any = buildJpeg(s.asInstanceOf[Long])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val cls = JpegSegments.getClass.getName.stripSuffix("$") + "$.MODULE$"
-      defineCodeGen(ctx, ev, s => s"$cls.buildJpeg($s)")
-    }
-    override protected def withNewChildInternal(c: Expression): Expression =
-      copy(child = c)
-  }
-
-  /** Marker-structure fold (mode static); -1 sentinel → NULL. */
-  case class JpegStat(child: Expression, mode: Int) extends UnaryExpression {
-    override def nullable: Boolean = true
-    override def dataType: DataType = LongType
-    override def prettyName: String = "jpeg_stat"
-    override def nullSafeEval(v: Any): Any = {
-      val r = jpegWalk(v.asInstanceOf[Array[Byte]], mode)
-      if (r == -1L) null else r
-    }
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val cls = JpegSegments.getClass.getName.stripSuffix("$") + "$.MODULE$"
-      // freshName: stacked JpegStats in one projection must not collide.
-      val r = ctx.freshName("r")
-      nullSafeCodeGen(ctx, ev, c => s"""
-        |long $r = $cls.jpegWalk($c, $mode);
-        |if ($r == -1L) { ${ev.isNull} = true; } else { ${ev.value} = $r; }
-      """.stripMargin)
-    }
-    override protected def withNewChildInternal(c: Expression): Expression =
-      copy(child = c)
-  }
-
   def build(seed: Column): Column =
-    ColumnBridge.column(JpegBuild(ColumnBridge.expression(seed)))
-  def segmentCount(media: Column): Column =
-    ColumnBridge.column(JpegStat(ColumnBridge.expression(media), 0))
-  def width(media: Column): Column =
-    ColumnBridge.column(JpegStat(ColumnBridge.expression(media), 1))
-  def height(media: Column): Column =
-    ColumnBridge.column(JpegStat(ColumnBridge.expression(media), 2))
-  def entropyBytes(media: Column): Column =
-    ColumnBridge.column(JpegStat(ColumnBridge.expression(media), 3))
-  def dqtSum(media: Column): Column =
-    ColumnBridge.column(JpegStat(ColumnBridge.expression(media), 4))
+    ObjectCall.column("jpeg_build", this, "buildJpeg", BinaryType, Seq(seed))
+  def segmentCount(media: Column): Column = stat(media, 0)
+  def width(media: Column): Column = stat(media, 1)
+  def height(media: Column): Column = stat(media, 2)
+  def entropyBytes(media: Column): Column = stat(media, 3)
+  def dqtSum(media: Column): Column = stat(media, 4)
+
+  /** [[jpegWalk]]'s fold `mode`; its -1 sentinel is NULL. */
+  private def stat(media: Column, mode: Int): Column =
+    ObjectCall.column("jpeg_stat", this, "jpegWalk", LongType, Seq(media),
+      Seq(mode), nullOn = Some(-1L))
 }

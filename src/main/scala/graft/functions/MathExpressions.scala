@@ -1,33 +1,18 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{DataType, DoubleType}
-
-/** Natural log via `java.lang.Math.log` (the platform intrinsic, which
-  * matches glibc's correctly-rounded `log` bit-for-bit — verified across
-  * the corpus's argument range) instead of Spark's `StrictMath.log`
-  * (fdlibm), which differs in the last ulp and breaks the DuckDB
-  * hash-compare for scores derived from logs (TF-IDF, BM25).
-  */
-case class NaturalLog(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "ln_libm"
-
-  override def nullSafeEval(v: Any): Any =
-    java.lang.Math.log(v.asInstanceOf[Double])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"java.lang.Math.log($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
+import org.apache.spark.sql.types.DoubleType
 
 object MathExpressions {
-  /** ln with host-libm rounding (see [[NaturalLog]]). */
+  /** Natural log via `java.lang.Math.log` (the platform intrinsic, which
+    * matches glibc's correctly-rounded `log` bit-for-bit — verified across
+    * the corpus's argument range) instead of Spark's `StrictMath.log`
+    * (fdlibm), which differs in the last ulp and breaks the DuckDB
+    * hash-compare for scores derived from logs (TF-IDF, BM25).
+    */
+  def ln(v: Double): Double = java.lang.Math.log(v)
+
+  /** ln with host-libm rounding (see [[ln]]). */
   def lnLibm(c: Column): Column =
-    ColumnBridge.column(NaturalLog(Cast(ColumnBridge.expression(c), DoubleType)))
+    ObjectCall.column("ln_libm", this, "ln", DoubleType, Seq(c.cast(DoubleType)))
 }

@@ -1,10 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
+import org.apache.spark.sql.types.{IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Codec-FREE media header parsing over opaque `binary` columns — the
@@ -15,8 +12,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * Covers the containers a training-data lake actually meets: PNG
   * (IHDR geometry), GIF87a/89a (logical screen), BMP (BITMAPINFOHEADER),
   * JPEG (SOF marker walk), RIFF (WAV sample rate / WebP). Everything is
-  * a static byte-inspection method, and the Catalyst expressions codegen
-  * to direct static calls — they stay inside whole-stage codegen, so
+  * a static byte-inspection method called through [[ObjectCall]], so it
+  * stays inside whole-stage codegen:
   * sniffing a 100 TB lake is one scan with no decode, no shuffle, and
   * column-pruned to the binary column alone.
   */
@@ -96,65 +93,15 @@ object MediaHeaders {
       b(12) == 'f' && b(13) == 'm' && b(14) == 't') le32(b, 24)
     else -1
 
-  /** expression wrappers: -1 sentinel from the static helpers → NULL */
-  abstract class HeaderExpr extends UnaryExpression {
-    def method: String
-    override def nullable: Boolean = true
-    override def dataType: DataType = IntegerType
-    override def nullSafeEval(v: Any): Any = {
-      val r = call(v.asInstanceOf[Array[Byte]])
-      if (r == -1) null else r
-    }
-    protected def call(b: Array[Byte]): Int
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val cls = MediaHeaders.getClass.getName.stripSuffix("$") + "$.MODULE$"
-      // freshName: two HeaderExprs in one projection must not collide on a
-      // hard-coded local, or Janino rejects the class and the whole
-      // projection silently falls back to interpreted mode.
-      val r = ctx.freshName("r")
-      nullSafeCodeGen(ctx, ev, c => s"""
-        |int $r = $cls.$method($c);
-        |if ($r == -1) { ${ev.isNull} = true; } else { ${ev.value} = $r; }
-      """.stripMargin)
-    }
-  }
-
-  case class ImageWidth(child: Expression) extends HeaderExpr {
-    override def method = "imageWidth"
-    override def prettyName = "image_width"
-    override protected def call(b: Array[Byte]): Int = imageWidth(b)
-    override protected def withNewChildInternal(c: Expression) = copy(child = c)
-  }
-  case class ImageHeight(child: Expression) extends HeaderExpr {
-    override def method = "imageHeight"
-    override def prettyName = "image_height"
-    override protected def call(b: Array[Byte]): Int = imageHeight(b)
-    override protected def withNewChildInternal(c: Expression) = copy(child = c)
-  }
-  case class WavRate(child: Expression) extends HeaderExpr {
-    override def method = "wavSampleRate"
-    override def prettyName = "wav_sample_rate"
-    override protected def call(b: Array[Byte]): Int = wavSampleRate(b)
-    override protected def withNewChildInternal(c: Expression) = copy(child = c)
-  }
-  case class MediaFormat(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = StringType
-    override def prettyName = "media_format"
-    override def nullSafeEval(v: Any): Any =
-      sniffFormat(v.asInstanceOf[Array[Byte]])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val cls = MediaHeaders.getClass.getName.stripSuffix("$") + "$.MODULE$"
-      defineCodeGen(ctx, ev, c => s"$cls.sniffFormat($c)")
-    }
-    override protected def withNewChildInternal(c: Expression) = copy(child = c)
-  }
-
   def format(media: Column): Column =
-    ColumnBridge.column(MediaFormat(ColumnBridge.expression(media)))
-  def width(media: Column): Column =
-    ColumnBridge.column(ImageWidth(ColumnBridge.expression(media)))
-  def height(media: Column): Column =
-    ColumnBridge.column(ImageHeight(ColumnBridge.expression(media)))
+    ObjectCall.column("media_format", this, "sniffFormat", StringType, Seq(media))
+  def width(media: Column): Column = header("image_width", "imageWidth", media)
+  def height(media: Column): Column = header("image_height", "imageHeight", media)
   def wavRate(media: Column): Column =
-    ColumnBridge.column(WavRate(ColumnBridge.expression(media)))
+    header("wav_sample_rate", "wavSampleRate", media)
+
+  /** a header field; the helpers' -1 sentinel is NULL */
+  private def header(name: String, method: String, media: Column): Column =
+    ObjectCall.column(name, this, method, IntegerType, Seq(media),
+      nullOn = Some(-1L))
 }

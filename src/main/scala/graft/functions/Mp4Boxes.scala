@@ -1,10 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
+import org.apache.spark.sql.types.{BinaryType, LongType}
 
 /** Box-level analytics over ISO-BMFF (MP4/MOV) containers — the video
   * slice of the multimodal story. The ISO base-media grammar (4-byte
@@ -109,49 +106,15 @@ object Mp4Boxes {
     else duration
   }
 
-  /** seed → MP4 bytes (generator side of the round trip). */
-  case class Mp4Build(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = BinaryType
-    override def prettyName: String = "mp4_build"
-    override def nullSafeEval(s: Any): Any = buildMp4(s.asInstanceOf[Long])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val cls = Mp4Boxes.getClass.getName.stripSuffix("$") + "$.MODULE$"
-      defineCodeGen(ctx, ev, s => s"$cls.buildMp4($s)")
-    }
-    override protected def withNewChildInternal(c: Expression): Expression =
-      copy(child = c)
-  }
-
-  /** Box-structure fold (mode static); -1 sentinel → NULL. */
-  case class Mp4Stat(child: Expression, mode: Int) extends UnaryExpression {
-    override def nullable: Boolean = true
-    override def dataType: DataType = LongType
-    override def prettyName: String = "mp4_stat"
-    override def nullSafeEval(v: Any): Any = {
-      val r = mp4Walk(v.asInstanceOf[Array[Byte]], mode)
-      if (r == -1L) null else r
-    }
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val cls = Mp4Boxes.getClass.getName.stripSuffix("$") + "$.MODULE$"
-      // freshName: stacked Mp4Stats in one projection must not collide.
-      val r = ctx.freshName("r")
-      nullSafeCodeGen(ctx, ev, c => s"""
-        |long $r = $cls.mp4Walk($c, $mode);
-        |if ($r == -1L) { ${ev.isNull} = true; } else { ${ev.value} = $r; }
-      """.stripMargin)
-    }
-    override protected def withNewChildInternal(c: Expression): Expression =
-      copy(child = c)
-  }
-
   def build(seed: Column): Column =
-    ColumnBridge.column(Mp4Build(ColumnBridge.expression(seed)))
-  def boxCount(media: Column): Column =
-    ColumnBridge.column(Mp4Stat(ColumnBridge.expression(media), 0))
-  def mdatBytes(media: Column): Column =
-    ColumnBridge.column(Mp4Stat(ColumnBridge.expression(media), 1))
-  def timescale(media: Column): Column =
-    ColumnBridge.column(Mp4Stat(ColumnBridge.expression(media), 2))
-  def duration(media: Column): Column =
-    ColumnBridge.column(Mp4Stat(ColumnBridge.expression(media), 3))
+    ObjectCall.column("mp4_build", this, "buildMp4", BinaryType, Seq(seed))
+  def boxCount(media: Column): Column = stat(media, 0)
+  def mdatBytes(media: Column): Column = stat(media, 1)
+  def timescale(media: Column): Column = stat(media, 2)
+  def duration(media: Column): Column = stat(media, 3)
+
+  /** [[mp4Walk]]'s fold `mode`; its -1 sentinel is NULL. */
+  private def stat(media: Column, mode: Int): Column =
+    ObjectCall.column("mp4_stat", this, "mp4Walk", LongType, Seq(media),
+      Seq(mode), nullOn = Some(-1L))
 }

@@ -1,10 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{DataType, IntegerType}
+import org.apache.spark.sql.types.IntegerType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Unit-cost Levenshtein distance via Myers' bit-parallel algorithm
@@ -32,30 +29,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * as the builtin (`UTF8String.levenshteinDistance` counts chars, not
   * bytes). Property-tested against the builtin on random strings.
   */
-case class MyersLevenshtein(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "myers_levenshtein"
-
-  override def nullSafeEval(l: Any, r: Any): Any =
-    MyersLevenshtein.dist(
-      l.asInstanceOf[UTF8String], r.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = MyersLevenshtein.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    defineCodeGen(ctx, ev, (a, b) => s"$cls.dist($a, $b)")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
 object MyersLevenshtein {
   def apply(left: Column, right: Column): Column =
-    ColumnBridge.column(MyersLevenshtein(
-      ColumnBridge.expression(left), ColumnBridge.expression(right)))
+    ObjectCall.column("myers_levenshtein", this, "dist", IntegerType,
+      Seq(left, right))
 
   /** code points of s — the unit the builtin distance counts */
   private def codePoints(s: UTF8String): Array[Int] = {

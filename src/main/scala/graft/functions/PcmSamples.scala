@@ -1,10 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
+import org.apache.spark.sql.types.{BinaryType, LongType}
 
 /** SAMPLE-level analytics over RIFF/WAVE PCM audio — the audio
   * feature-extraction slice of the multimodal story (reference keeps
@@ -151,8 +148,8 @@ object PcmSamples {
     * delta signs. Returns [[Invalid]] on malformed input (an all-ones
     * fingerprint is a legitimate crescendo, so the aHash -1 trick does
     * not apply; Invalid = Long.MinValue would collide with the
-    * bit-63-only pattern, which is why the COLUMN wrapper gates on
-    * [[pcmWalk]]'s validity instead of this sentinel alone). */
+    * bit-63-only pattern, which is why the column goes through
+    * [[fingerprintOf]] instead of this sentinel). */
   def pcmFingerprint(b: Array[Byte], frames: Int): Long = {
     if (frames <= 0 || frames > 63 + 1) return Invalid
     val n = pcmWalk(b, 0, 1)
@@ -186,6 +183,14 @@ object PcmSamples {
       f += 1
     }
     hash
+  }
+
+  /** [[pcmFingerprint]] gated on [[pcmWalk]]'s validity: null when the
+    * stream is malformed or has under `frames` + 1 samples; boxed
+    * because every 64-bit value is a valid fingerprint. */
+  def fingerprintOf(b: Array[Byte], frames: Int): java.lang.Long = {
+    val n = pcmWalk(b, 0, 1)
+    if (n == Invalid || n < frames + 1) null else pcmFingerprint(b, frames)
   }
 
   /** Chunk-walking PCM fold. Modes: 0 = sample count, 1 = sample rate,
@@ -249,117 +254,28 @@ object PcmSamples {
     }
   }
 
-  /** seed/rate/n → WAV bytes (generator side of the round trip). */
-  case class WavBuild(first: Expression, second: Expression, third: Expression)
-      extends TernaryExpression {
-    override def dataType: DataType = BinaryType
-    override def prettyName: String = "wav_build"
-    override def nullSafeEval(s: Any, r: Any, n: Any): Any =
-      buildWav(s.asInstanceOf[Long], r.asInstanceOf[Int], n.asInstanceOf[Int])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val cls = PcmSamples.getClass.getName.stripSuffix("$") + "$.MODULE$"
-      defineCodeGen(ctx, ev, (s, r, n) => s"$cls.buildWav($s, $r, $n)")
-    }
-    override protected def withNewChildrenInternal(
-        f: Expression, s: Expression, t: Expression): Expression =
-      copy(first = f, second = s, third = t)
-  }
-
-  /** Sample-walk fold (mode/k static); [[Invalid]] sentinel → NULL. */
-  case class PcmStat(child: Expression, mode: Int, k: Int)
-      extends UnaryExpression {
-    override def nullable: Boolean = true
-    override def dataType: DataType = LongType
-    override def prettyName: String = "pcm_stat"
-    override def nullSafeEval(v: Any): Any = {
-      val r = pcmWalk(v.asInstanceOf[Array[Byte]], mode, k)
-      if (r == Invalid) null else r
-    }
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val cls = PcmSamples.getClass.getName.stripSuffix("$") + "$.MODULE$"
-      // freshName: stacked PcmStats in one projection must not collide.
-      val r = ctx.freshName("r")
-      nullSafeCodeGen(ctx, ev, c => s"""
-        |long $r = $cls.pcmWalk($c, $mode, $k);
-        |if ($r == java.lang.Long.MIN_VALUE) { ${ev.isNull} = true; } else { ${ev.value} = $r; }
-      """.stripMargin)
-    }
-    override protected def withNewChildInternal(c: Expression): Expression =
-      copy(child = c)
-  }
-
-  /** c/rate/n → fingerprint-corpus WAV bytes (rendition static). */
-  case class WavFpBuild(first: Expression, second: Expression,
-      third: Expression, rendition: Int) extends TernaryExpression {
-    override def dataType: DataType = BinaryType
-    override def prettyName: String = "wav_fp_build"
-    override def nullSafeEval(c: Any, r: Any, n: Any): Any =
-      buildWavFp(c.asInstanceOf[Long], r.asInstanceOf[Int],
-        n.asInstanceOf[Int], rendition)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val cls = PcmSamples.getClass.getName.stripSuffix("$") + "$.MODULE$"
-      defineCodeGen(ctx, ev,
-        (c, r, n) => s"$cls.buildWavFp($c, $r, $n, $rendition)")
-    }
-    override protected def withNewChildrenInternal(
-        f: Expression, s: Expression, t: Expression): Expression =
-      copy(first = f, second = s, third = t)
-  }
-
-  /** Fingerprint walk; validity gated on [[pcmWalk]] (Invalid is NOT a
-    * safe sentinel here — an all-bit-63 fingerprint is legitimate). */
-  case class PcmFingerprintExpr(child: Expression, frames: Int)
-      extends UnaryExpression {
-    override def nullable: Boolean = true
-    override def dataType: DataType = LongType
-    override def prettyName: String = "pcm_fingerprint"
-    override def nullSafeEval(v: Any): Any = {
-      val b = v.asInstanceOf[Array[Byte]]
-      val n = pcmWalk(b, 0, 1)
-      if (n == Invalid || n < frames + 1) null
-      else pcmFingerprint(b, frames)
-    }
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val cls = PcmSamples.getClass.getName.stripSuffix("$") + "$.MODULE$"
-      val n = ctx.freshName("n")
-      nullSafeCodeGen(ctx, ev, c => s"""
-        |long $n = $cls.pcmWalk($c, 0, 1);
-        |if ($n == java.lang.Long.MIN_VALUE || $n < ${frames + 1}L) {
-        |  ${ev.isNull} = true;
-        |} else {
-        |  ${ev.value} = $cls.pcmFingerprint($c, $frames);
-        |}
-      """.stripMargin)
-    }
-    override protected def withNewChildInternal(c: Expression): Expression =
-      copy(child = c)
-  }
-
   def build(seed: Column, rate: Column, n: Column): Column =
-    ColumnBridge.column(WavBuild(ColumnBridge.expression(seed),
-      ColumnBridge.expression(rate.cast("int")),
-      ColumnBridge.expression(n.cast("int"))))
-  def sampleCount(media: Column): Column =
-    ColumnBridge.column(PcmStat(ColumnBridge.expression(media), 0, 1))
-  def sampleRate(media: Column): Column =
-    ColumnBridge.column(PcmStat(ColumnBridge.expression(media), 1, 1))
-  def energy(media: Column): Column =
-    ColumnBridge.column(PcmStat(ColumnBridge.expression(media), 2, 1))
-  def peak(media: Column): Column =
-    ColumnBridge.column(PcmStat(ColumnBridge.expression(media), 3, 1))
-  def zeroCrossings(media: Column): Column =
-    ColumnBridge.column(PcmStat(ColumnBridge.expression(media), 4, 1))
-  def decimatedChecksum(media: Column, k: Int): Column =
-    ColumnBridge.column(PcmStat(ColumnBridge.expression(media), 5, k))
+    ObjectCall.column("wav_build", this, "buildWav", BinaryType,
+      Seq(seed, rate.cast("int"), n.cast("int")))
+  def sampleCount(media: Column): Column = stat(media, 0, 1)
+  def sampleRate(media: Column): Column = stat(media, 1, 1)
+  def energy(media: Column): Column = stat(media, 2, 1)
+  def peak(media: Column): Column = stat(media, 3, 1)
+  def zeroCrossings(media: Column): Column = stat(media, 4, 1)
+  def decimatedChecksum(media: Column, k: Int): Column = stat(media, 5, k)
   def buildFp(c: Column, rate: Column, n: Column, rendition: Int): Column = {
     require(rendition == 0 || rendition == 1, "rendition is 0 or 1")
-    ColumnBridge.column(WavFpBuild(ColumnBridge.expression(c),
-      ColumnBridge.expression(rate.cast("int")),
-      ColumnBridge.expression(n.cast("int")), rendition))
+    ObjectCall.column("wav_fp_build", this, "buildWavFp", BinaryType,
+      Seq(c, rate.cast("int"), n.cast("int")), Seq(rendition))
   }
   def fingerprint(media: Column, frames: Int): Column = {
     require(frames > 0 && frames <= 64, "fingerprint must fit 64 bits")
-    ColumnBridge.column(PcmFingerprintExpr(ColumnBridge.expression(media),
-      frames))
+    ObjectCall.column("pcm_fingerprint", this, "fingerprintOf", LongType,
+      Seq(media), Seq(frames), boxed = true)
   }
+
+  /** [[pcmWalk]]'s fold `mode`; its [[Invalid]] sentinel is NULL. */
+  private def stat(media: Column, mode: Int, k: Int): Column =
+    ObjectCall.column("pcm_stat", this, "pcmWalk", LongType, Seq(media),
+      Seq(mode, k), nullOn = Some(Invalid))
 }

@@ -3,10 +3,7 @@ package graft.functions
 import java.util.zip.CRC32
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
+import org.apache.spark.sql.types.{BinaryType, LongType}
 
 /** Chunk-level integrity analytics over PNG containers — the
   * corruption-audit slice of the multimodal story. PNG's chunk grammar
@@ -124,47 +121,14 @@ object PngChunks {
     -1L // ran off the end without IEND
   }
 
-  /** seed → PNG bytes (generator side of the round trip). */
-  case class PngBuild(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = BinaryType
-    override def prettyName: String = "png_build"
-    override def nullSafeEval(s: Any): Any = buildPng(s.asInstanceOf[Long])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val cls = PngChunks.getClass.getName.stripSuffix("$") + "$.MODULE$"
-      defineCodeGen(ctx, ev, s => s"$cls.buildPng($s)")
-    }
-    override protected def withNewChildInternal(c: Expression): Expression =
-      copy(child = c)
-  }
-
-  /** Chunk-structure fold (mode static); -1 sentinel → NULL. */
-  case class PngStat(child: Expression, mode: Int) extends UnaryExpression {
-    override def nullable: Boolean = true
-    override def dataType: DataType = LongType
-    override def prettyName: String = "png_stat"
-    override def nullSafeEval(v: Any): Any = {
-      val r = pngWalk(v.asInstanceOf[Array[Byte]], mode)
-      if (r == -1L) null else r
-    }
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val cls = PngChunks.getClass.getName.stripSuffix("$") + "$.MODULE$"
-      // freshName: stacked PngStats in one projection must not collide.
-      val r = ctx.freshName("r")
-      nullSafeCodeGen(ctx, ev, c => s"""
-        |long $r = $cls.pngWalk($c, $mode);
-        |if ($r == -1L) { ${ev.isNull} = true; } else { ${ev.value} = $r; }
-      """.stripMargin)
-    }
-    override protected def withNewChildInternal(c: Expression): Expression =
-      copy(child = c)
-  }
-
   def build(seed: Column): Column =
-    ColumnBridge.column(PngBuild(ColumnBridge.expression(seed)))
-  def chunkCount(media: Column): Column =
-    ColumnBridge.column(PngStat(ColumnBridge.expression(media), 0))
-  def idatBytes(media: Column): Column =
-    ColumnBridge.column(PngStat(ColumnBridge.expression(media), 1))
-  def crcValidCount(media: Column): Column =
-    ColumnBridge.column(PngStat(ColumnBridge.expression(media), 2))
+    ObjectCall.column("png_build", this, "buildPng", BinaryType, Seq(seed))
+  def chunkCount(media: Column): Column = stat(media, 0)
+  def idatBytes(media: Column): Column = stat(media, 1)
+  def crcValidCount(media: Column): Column = stat(media, 2)
+
+  /** [[pngWalk]]'s fold `mode`; its -1 sentinel is NULL. */
+  private def stat(media: Column, mode: Int): Column =
+    ObjectCall.column("png_stat", this, "pngWalk", LongType, Seq(media),
+      Seq(mode), nullOn = Some(-1L))
 }

@@ -1,10 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.types.LongType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Codegen'd polynomial rolling hash (base 31, mod 1e9+7) over the code
@@ -20,7 +17,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * (DuckDB mirrors it with ASCII() over 1-char substrings) is
   * unchanged bit for bit.
   *
-  * [[MinWindow]] is the winnowing variant behind `text_fingerprint`:
+  * [[minWindow]] is the winnowing variant behind `text_fingerprint`:
   * the minimum window hash over all `win`-code-point windows, computed
   * in one O(win·n) pass over a decoded code-point array instead of the
   * interpreted O(win·n) lambda tree (which also re-ran substr's UTF-8
@@ -73,44 +70,9 @@ object PolyHash {
     best
   }
 
-  /** text → base-31 poly hash (never null for non-null input). */
-  case class Full(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = LongType
-    override def prettyName: String = "poly_hash"
-    override def nullSafeEval(v: Any): Any =
-      fullHash(v.asInstanceOf[UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val cls = PolyHash.getClass.getName.stripSuffix("$") + "$.MODULE$"
-      defineCodeGen(ctx, ev, c => s"$cls.fullHash($c)")
-    }
-    override protected def withNewChildInternal(c: Expression): Expression =
-      copy(child = c)
-  }
-
-  /** text → min win-window hash; NULL below win code points. */
-  case class MinWindow(child: Expression, win: Int) extends UnaryExpression {
-    override def nullable: Boolean = true
-    override def dataType: DataType = LongType
-    override def prettyName: String = "min_window_hash"
-    override def nullSafeEval(v: Any): Any = {
-      val r = minWindow(v.asInstanceOf[UTF8String], win)
-      if (r == -1L) null else r
-    }
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val cls = PolyHash.getClass.getName.stripSuffix("$") + "$.MODULE$"
-      // freshName: stacked hash expressions must not collide
-      val r = ctx.freshName("r")
-      nullSafeCodeGen(ctx, ev, c => s"""
-        |long $r = $cls.minWindow($c, $win);
-        |if ($r == -1L) { ${ev.isNull} = true; } else { ${ev.value} = $r; }
-      """.stripMargin)
-    }
-    override protected def withNewChildInternal(c: Expression): Expression =
-      copy(child = c)
-  }
-
   def full(text: Column): Column =
-    ColumnBridge.column(Full(ColumnBridge.expression(text)))
+    ObjectCall.column("poly_hash", this, "fullHash", LongType, Seq(text))
   def minWindowCol(text: Column, win: Int): Column =
-    ColumnBridge.column(MinWindow(ColumnBridge.expression(text), win))
+    ObjectCall.column("min_window_hash", this, "minWindow", LongType,
+      Seq(text), Seq(win), nullOn = Some(-1L))
 }

@@ -131,7 +131,8 @@ object SignMatrix {
   private val Cls = SignMatrix.getClass.getName.stripSuffix("$") + "$.MODULE$"
 
   /** array<double> of raw projections for planes
-    * planeBase..planeBase+nPlanes-1 (each × scale). */
+    * planeBase..planeBase+nPlanes-1 (each × scale). Bespoke, not an
+    * [[ObjectCall]]: the call's `isFloat` depends on the resolved input type. */
   case class Project(child: Expression, planeBase: Int, nPlanes: Int,
       scale: Double = 1.0) extends UnaryExpression {
     require(planeBase >= 0 && planeBase + nPlanes <= MaxPlanes)
@@ -148,7 +149,8 @@ object SignMatrix {
   }
 
   /** Packed sign bits (bit p = proj_p >= 0) for planes
-    * planeBase..planeBase+nPlanes-1. */
+    * planeBase..planeBase+nPlanes-1. Bespoke, not an [[ObjectCall]]:
+    * the call's `isFloat` depends on the resolved input type. */
   case class PackBits(child: Expression, planeBase: Int, nPlanes: Int)
       extends UnaryExpression {
     require(planeBase >= 0 && planeBase + nPlanes <= MaxPlanes && nPlanes <= 63)

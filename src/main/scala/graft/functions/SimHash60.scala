@@ -1,11 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.types.LongType
 
 /** Row-local 60-bit SimHash over a string array (the document's distinct
   * shingles): per element, the portable md5-prefix hash — identical to
@@ -13,7 +10,7 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * of the MD5 digest — votes ±1 on each of 60 bit positions; a positive
   * sum sets the bit.
   *
-  * Why an expression and not the relational form (explode → 60
+  * Why a row-local call and not the relational form (explode → 60
   * conditional sums → repack): the votes of one document never need
   * other documents' rows, so the aggregation was a pure shuffle tax —
   * the postings exchange plus a 60-column hash aggregate over the whole
@@ -28,23 +25,6 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * relational form produced no group for them, while an all-zero
   * signature would spuriously bucket empty docs together.
   */
-case class SimHash60(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "simhash60"
-
-  override def nullSafeEval(input: Any): Any =
-    SimHash60.compute(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = SimHash60.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    defineCodeGen(ctx, ev, c => s"$cls.compute($c)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object SimHash60 {
 
   private val Bits = 60
@@ -54,7 +34,6 @@ object SimHash60 {
       java.security.MessageDigest.getInstance("MD5")
   }
 
-  /** static so codegen calls it directly (stays inside WSCG) */
   def compute(arr: ArrayData): Long = {
     val md = digest.get()
     val n = arr.numElements()
@@ -87,5 +66,5 @@ object SimHash60 {
   }
 
   def apply(ws: Column): Column =
-    ColumnBridge.column(SimHash60(ColumnBridge.expression(ws)))
+    ObjectCall.column("simhash60", this, "compute", LongType, Seq(ws))
 }

@@ -1,11 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.types.LongType
 
 /** Count of common elements between two SORTED long arrays — the verify
   * kernel of candidate-then-verify similarity joins.
@@ -13,7 +10,7 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * Why not `size(array_intersect(a, b))`: ArrayIntersect allocates and
   * fills a hash set per ROW evaluation and carries element objects;
   * over millions of candidate pairs the verify stage is exactly a tight
-  * inner loop over fixed-width primitives, which this expression emits
+  * inner loop over fixed-width primitives, which this method runs
   * directly inside whole-stage codegen — a two-pointer merge over the
   * unsafe array data, zero allocation, zero boxing.
   *
@@ -21,28 +18,8 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * (e.g. `sort_array(collect_set(xxhash64(...)))`) — the merge neither
   * checks nor repairs order.
   */
-case class SortedIntersectCount(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "sorted_intersect_count"
-
-  override def nullSafeEval(l: Any, r: Any): Any =
-    SortedIntersectCount.merge(
-      l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = SortedIntersectCount.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    defineCodeGen(ctx, ev, (a, b) => s"$cls.merge($a, $b)")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
 object SortedIntersectCount {
-  /** two-pointer merge count; static so codegen calls it directly */
+  /** two-pointer merge count */
   def merge(a: ArrayData, b: ArrayData): Long = {
     val na = a.numElements(); val nb = b.numElements()
     var i = 0; var j = 0; var c = 0L
@@ -56,6 +33,5 @@ object SortedIntersectCount {
   }
 
   def apply(a: Column, b: Column): Column =
-    ColumnBridge.column(SortedIntersectCount(
-      ColumnBridge.expression(a), ColumnBridge.expression(b)))
+    ObjectCall.column("sorted_intersect_count", this, "merge", LongType, Seq(a, b))
 }

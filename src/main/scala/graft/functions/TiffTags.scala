@@ -1,10 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
+import org.apache.spark.sql.types.{BinaryType, LongType}
 
 /** IFD-level analytics over TIFF containers — the EXIF-metadata slice
   * of the multimodal story. TIFF's image-file-directory grammar (byte
@@ -114,49 +111,15 @@ object TiffTags {
     }
   }
 
-  /** seed → TIFF bytes (generator side of the round trip). */
-  case class TiffBuild(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = BinaryType
-    override def prettyName: String = "tiff_build"
-    override def nullSafeEval(s: Any): Any = buildTiff(s.asInstanceOf[Long])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val cls = TiffTags.getClass.getName.stripSuffix("$") + "$.MODULE$"
-      defineCodeGen(ctx, ev, s => s"$cls.buildTiff($s)")
-    }
-    override protected def withNewChildInternal(c: Expression): Expression =
-      copy(child = c)
-  }
-
-  /** IFD fold (mode static); -1 sentinel → NULL. */
-  case class TiffStat(child: Expression, mode: Int) extends UnaryExpression {
-    override def nullable: Boolean = true
-    override def dataType: DataType = LongType
-    override def prettyName: String = "tiff_stat"
-    override def nullSafeEval(v: Any): Any = {
-      val r = tiffWalk(v.asInstanceOf[Array[Byte]], mode)
-      if (r == -1L) null else r
-    }
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val cls = TiffTags.getClass.getName.stripSuffix("$") + "$.MODULE$"
-      // freshName: stacked TiffStats in one projection must not collide.
-      val r = ctx.freshName("r")
-      nullSafeCodeGen(ctx, ev, c => s"""
-        |long $r = $cls.tiffWalk($c, $mode);
-        |if ($r == -1L) { ${ev.isNull} = true; } else { ${ev.value} = $r; }
-      """.stripMargin)
-    }
-    override protected def withNewChildInternal(c: Expression): Expression =
-      copy(child = c)
-  }
-
   def build(seed: Column): Column =
-    ColumnBridge.column(TiffBuild(ColumnBridge.expression(seed)))
-  def entryCount(media: Column): Column =
-    ColumnBridge.column(TiffStat(ColumnBridge.expression(media), 0))
-  def width(media: Column): Column =
-    ColumnBridge.column(TiffStat(ColumnBridge.expression(media), 1))
-  def height(media: Column): Column =
-    ColumnBridge.column(TiffStat(ColumnBridge.expression(media), 2))
-  def tagChecksum(media: Column): Column =
-    ColumnBridge.column(TiffStat(ColumnBridge.expression(media), 3))
+    ObjectCall.column("tiff_build", this, "buildTiff", BinaryType, Seq(seed))
+  def entryCount(media: Column): Column = stat(media, 0)
+  def width(media: Column): Column = stat(media, 1)
+  def height(media: Column): Column = stat(media, 2)
+  def tagChecksum(media: Column): Column = stat(media, 3)
+
+  /** [[tiffWalk]]'s fold `mode`; its -1 sentinel is NULL. */
+  private def stat(media: Column, mode: Int): Column =
+    ObjectCall.column("tiff_stat", this, "tiffWalk", LongType, Seq(media),
+      Seq(mode), nullOn = Some(-1L))
 }

@@ -1,11 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** MOSS-style winnowing fingerprint selection as ONE codegen'd row-local
@@ -83,21 +80,9 @@ object Winnowing {
 
   /** text → array of selected winnowing keys (never null for non-null
     * input; empty below k+w−1 code points). */
-  case class WinnowKeys(child: Expression, k: Int, w: Int)
-      extends UnaryExpression {
+  def winnowKeysCol(text: Column, k: Int, w: Int): Column = {
     require(k >= 1 && w >= 1)
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def prettyName: String = "winnow_keys"
-    override def nullSafeEval(v: Any): Any =
-      winnowKeys(v.asInstanceOf[UTF8String], k, w)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val cls = Winnowing.getClass.getName.stripSuffix("$") + "$.MODULE$"
-      defineCodeGen(ctx, ev, c => s"$cls.winnowKeys($c, $k, $w)")
-    }
-    override protected def withNewChildInternal(c: Expression): Expression =
-      copy(child = c)
+    ObjectCall.column("winnow_keys", this, "winnowKeys",
+      ArrayType(LongType, containsNull = false), Seq(text), Seq(k, w))
   }
-
-  def winnowKeysCol(text: Column, k: Int, w: Int): Column =
-    ColumnBridge.column(WinnowKeys(ColumnBridge.expression(text), k, w))
 }

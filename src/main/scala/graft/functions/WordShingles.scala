@@ -29,6 +29,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * doc_id differs — so the postings relation needs zero shuffles, where
   * the explode + `.distinct()` formulation paid a full hash-aggregate
   * exchange over the corpus' raw postings in every near-dup query.
+  *
+  * A bespoke expression, not an [[ObjectCall]]: its generated code is
+  * an inline loop that builds the output array, not one method call.
   */
 case class WordShingles(child: Expression, n: Int, distinct: Boolean)
     extends UnaryExpression {

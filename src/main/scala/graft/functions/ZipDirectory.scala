@@ -1,10 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
+import org.apache.spark.sql.types.{BinaryType, LongType}
 
 /** Central-directory analytics over ZIP archives — the shard-container
   * slice of the multimodal story: training corpora ship as zip/tar
@@ -140,49 +137,15 @@ object ZipDirectory {
     else deflated
   }
 
-  /** seed → ZIP bytes (generator side of the round trip). */
-  case class ZipBuild(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = BinaryType
-    override def prettyName: String = "zip_build"
-    override def nullSafeEval(s: Any): Any = buildZip(s.asInstanceOf[Long])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val cls = ZipDirectory.getClass.getName.stripSuffix("$") + "$.MODULE$"
-      defineCodeGen(ctx, ev, s => s"$cls.buildZip($s)")
-    }
-    override protected def withNewChildInternal(c: Expression): Expression =
-      copy(child = c)
-  }
-
-  /** Directory fold (mode static); -1 sentinel → NULL. */
-  case class ZipStat(child: Expression, mode: Int) extends UnaryExpression {
-    override def nullable: Boolean = true
-    override def dataType: DataType = LongType
-    override def prettyName: String = "zip_stat"
-    override def nullSafeEval(v: Any): Any = {
-      val r = zipWalk(v.asInstanceOf[Array[Byte]], mode)
-      if (r == -1L) null else r
-    }
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val cls = ZipDirectory.getClass.getName.stripSuffix("$") + "$.MODULE$"
-      // freshName: stacked ZipStats in one projection must not collide
-      val r = ctx.freshName("r")
-      nullSafeCodeGen(ctx, ev, c => s"""
-        |long $r = $cls.zipWalk($c, $mode);
-        |if ($r == -1L) { ${ev.isNull} = true; } else { ${ev.value} = $r; }
-      """.stripMargin)
-    }
-    override protected def withNewChildInternal(c: Expression): Expression =
-      copy(child = c)
-  }
-
   def build(seed: Column): Column =
-    ColumnBridge.column(ZipBuild(ColumnBridge.expression(seed)))
-  def entryCount(media: Column): Column =
-    ColumnBridge.column(ZipStat(ColumnBridge.expression(media), 0))
-  def compressedBytes(media: Column): Column =
-    ColumnBridge.column(ZipStat(ColumnBridge.expression(media), 1))
-  def uncompressedBytes(media: Column): Column =
-    ColumnBridge.column(ZipStat(ColumnBridge.expression(media), 2))
-  def deflateCount(media: Column): Column =
-    ColumnBridge.column(ZipStat(ColumnBridge.expression(media), 3))
+    ObjectCall.column("zip_build", this, "buildZip", BinaryType, Seq(seed))
+  def entryCount(media: Column): Column = stat(media, 0)
+  def compressedBytes(media: Column): Column = stat(media, 1)
+  def uncompressedBytes(media: Column): Column = stat(media, 2)
+  def deflateCount(media: Column): Column = stat(media, 3)
+
+  /** [[zipWalk]]'s fold `mode`; its -1 sentinel is NULL. */
+  private def stat(media: Column, mode: Int): Column =
+    ObjectCall.column("zip_stat", this, "zipWalk", LongType, Seq(media),
+      Seq(mode), nullOn = Some(-1L))
 }

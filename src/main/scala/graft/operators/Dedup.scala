@@ -1141,10 +1141,10 @@ object Dedup {
         lit(3) * greatest(length(col("da.text")), length(col("db.text"))))
       // bit-parallel Myers distance — the same unit-cost metric as the
       // builtin (property-tested equal), at O(⌈m/64⌉·n) instead of
-      // O(m·n). The banded builtin ([[graft.functions
-      // .BoundedLevenshtein]]) was measured SLOWER at sf1 (73 s vs
-      // 36 s): its band is per-cell branches, not loop bounds, and
-      // near-threshold candidates defeat its early exit. Materialized
+      // O(m·n). Spark's thresholded `levenshtein(l, r, k)` was
+      // measured SLOWER at sf1 (73 s vs 36 s): its band is per-cell
+      // branches, not loop bounds, and near-threshold candidates
+      // defeat its early exit. Materialized
       // once: referencing the expression in both filter and projection
       // would run it twice
       .withColumn("__ed", graft.functions.MyersLevenshtein(

@@ -49,7 +49,7 @@ object TextAnalysis {
   /** Winnowing-style fingerprint: minimum polynomial hash over all 8-char
     * windows — robust to edits outside the matching window. Texts under
     * `win` chars return NULL (the oracle's empty RANGE also yields NULL).
-    * Codegen'd one-pass walk ([[graft.functions.PolyHash.MinWindow]]). */
+    * Codegen'd one-pass walk ([[graft.functions.PolyHash.minWindow]]). */
   def minWindowHash(text: Column, win: Int = 8): Column =
     graft.functions.PolyHash.minWindowCol(text, win)
 

@@ -98,7 +98,7 @@ object TextAnalysis2 {
     val df = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val n = documents(s, d).agg(count(lit(1)).as("n"))
     // lnLibm, not functions.log: Spark's StrictMath.log differs from
-    // glibc/DuckDB in the last ulp (see graft.functions.NaturalLog)
+    // glibc/DuckDB in the last ulp (see graft.functions.MathExpressions.ln)
     val score = col("tf") *
       graft.functions.MathExpressions.lnLibm(
         (col("n") + 1.0) / (col("df") + 1.0))

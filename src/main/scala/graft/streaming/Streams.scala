@@ -267,12 +267,17 @@ object Streams {
     * is never reached.
     *
     * IDEMPOTENT under foreachBatch retries ([[BatchIndex]]): re-running
-    * a batch rewrites the same files instead of double-counting
-    * document frequencies. Every pair is
-    * emitted exactly once, in the batch where its SECOND document
+    * a batch id rewrites the same files instead of double-counting
+    * document frequencies. That covers only a retried batch id: a doc
+    * redelivered in a later batch is dropped against the doc ids
+    * already in `sets` before it is shingled. Documents are immutable
+    * per id, as in [[mediaDedupIncrementalBatch]]; edits go through the
+    * version-gated twins. Every pair is emitted
+    * exactly once, in the batch where its SECOND document first
     * arrives; the union of all emissions equals the batch-free
     * [[graft.operators.Dedup.jaccardPairs]] over the full corpus
-    * (StreamingSpec asserts this golden, plus retry-idempotence). */
+    * (StreamingSpec asserts this golden, retry-idempotence and
+    * cross-batch redelivery). */
   def nearDupIncrementalBatch(batch: DataFrame, indexDir: String,
       batchId: Long): DataFrame = {
     val (pairsPlan, newPost, batchDf, newSigs) =
@@ -315,9 +320,14 @@ object Streams {
     // shingle ONLY the batch (batch-sized; reused by df/rank/joins)
     // shingleRows' contract requires one row per doc_id; an
     // at-least-once source can redeliver a doc WITHIN a batch, which
-    // would otherwise inflate df/set sizes (cross-batch redelivery is
-    // handled by the index's idempotent writes)
-    val newPost = Dedup.shingleRows(oneRowPerKey(batch, "doc_id"))
+    // would otherwise inflate df/set sizes. A doc redelivered in a
+    // LATER batch is already in `sets`: it is not new, so it adds no
+    // postings or df and pairs with nothing (its pairs were emitted on
+    // first arrival, and it would pair with itself)
+    val arriving = oneRowPerKey(batch, "doc_id")
+    val newPost = Dedup.shingleRows(arriving.join(
+        index.prior("sets", arriving.select("doc_id")), Seq("doc_id"),
+        "left_anti"))
       .localCheckpoint(true)
     val batchDf = newPost.groupBy("shingle").agg(count(lit(1)).as("cnt"))
     // current document frequency = prior per-batch deltas + this batch:

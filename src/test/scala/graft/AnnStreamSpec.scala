@@ -67,4 +67,20 @@ class AnnStreamSpec extends AnyFunSuite {
       bs(2).toDF("vec_id", "embedding"), dir, 2L, 10, 5))
     assert(fin === oneShot())
   }
+
+  test("a vector redelivered in a later batch leaves the answer " +
+    "unchanged") {
+    import spark.implicits._
+    val vecs = Tables.embeddings(spark, TestSpark.tiny)
+      .select("vec_id", "embedding").as[(Long, Seq[Float])].collect()
+      .sortBy(_._1).toIndexedSeq
+    val dir = java.nio.file.Files.createTempDirectory("annidx_redeliver")
+      .toString + "/state"
+    val (b0, b1) = vecs.splitAt(vecs.length / 2)
+    Streams.annIncrementalBatch(b0.toDF("vec_id", "embedding"), dir, 0L, 10, 5)
+    // vec 0 is a query vector: its postings now sit in the index twice
+    val fin = collect(Streams.annIncrementalBatch(
+      (b0.head +: b1).toDF("vec_id", "embedding"), dir, 1L, 10, 5))
+    assert(fin === oneShot())
+  }
 }

@@ -17,15 +17,8 @@ class CodegenOnlySpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val FactoryMode = "spark.sql.codegen.factoryMode"
 
-  private def codegenOnly[A](body: => A): A = {
-    val prev = spark.conf.getOption(FactoryMode)
-    spark.conf.set(FactoryMode, "CODEGEN_ONLY")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(FactoryMode, v)
-      case None    => spark.conf.unset(FactoryMode)
-    }
-  }
+  private def codegenOnly[A](body: => A): A =
+    withConf(FactoryMode -> "CODEGEN_ONLY")(body)
 
   test("stacked multimodal walker projection compiles (mm_bmp_pixels)") {
     // The regression shape from r06: six byte-walker expressions in ONE
@@ -72,6 +65,63 @@ class CodegenOnlySpec extends AnyFunSuite {
       assert(empties.isEmpty,
         s"queries with 0 rows at sf0.001 (trivially-green oracle):\n  " +
           empties.mkString("\n  "))
+    }
+  }
+
+  test("interpreted eval of the graft.functions calls matches codegen " +
+    "(NO_CODEGEN, wholeStage off)") {
+    // Codegen is the path every query takes, so without this the
+    // interpreted eval of the walkers and hashes runs only when the
+    // optimizer folds a constant. Covered: every mm_* query, plus the
+    // text_* and dedup_* queries whose plan calls a graft.functions
+    // expression (PolyHash, Winnowing, SimHash60, shingles, verify
+    // kernels).
+    def callsFunctions(df: org.apache.spark.sql.DataFrame): Boolean =
+      df.queryExecution.analyzed.exists(_.expressions.exists(_.exists(
+        _.getClass.getName.startsWith("graft.functions."))))
+    def canonical(v: Any): Any = v match {
+      case b: Array[Byte] => b.map("%02x".format(_)).mkString
+      case r: org.apache.spark.sql.Row => r.toSeq.map(canonical)
+      case xs: scala.collection.Seq[_] => xs.map(canonical)
+      case m: scala.collection.Map[_, _] =>
+        m.toSeq.map { case (k, x) => (canonical(k), canonical(x)) }
+      case x => x
+    }
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(r => canonical(r).toString).sorted.toSeq
+    val checked = scala.collection.mutable.ListBuffer.empty[String]
+    val mismatches = scala.collection.mutable.ListBuffer.empty[String]
+    for (q <- SparkEntry.registry
+         if Seq("mm_", "text_", "dedup_").exists(q.name.startsWith)) {
+      val df = q.run(spark, TestSpark.tiny)
+      if (q.name.startsWith("mm_") || callsFunctions(df)) {
+        val codegen = rows(df)
+        val interpreted = withConf(FactoryMode -> "NO_CODEGEN",
+          "spark.sql.codegen.wholeStage" -> "false") {
+          rows(q.run(spark, TestSpark.tiny))
+        }
+        checked += q.name
+        if (interpreted != codegen)
+          mismatches += s"${q.name}: ${codegen.length} codegen rows vs " +
+            s"${interpreted.length} interpreted, first difference " +
+            s"${codegen.diff(interpreted).headOption} / " +
+            s"${interpreted.diff(codegen).headOption}"
+      }
+    }
+    assert(checked.count(_.startsWith("mm_")) >= 20, s"checked: $checked")
+    assert(checked.exists(_.startsWith("text_")) &&
+      checked.exists(_.startsWith("dedup_")), s"checked: $checked")
+    assert(mismatches.isEmpty,
+      s"interpreted rows differ from codegen for:\n  ${mismatches.mkString("\n  ")}")
+  }
+
+  private def withConf[A](kvs: (String, String)*)(body: => A): A = {
+    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
     }
   }
 

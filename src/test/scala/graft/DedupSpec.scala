@@ -112,24 +112,6 @@ class DedupSpec extends AnyFunSuite {
     assert(fs.contains("Window"), s"DF-cap window missing from plan:\n$fs")
   }
 
-  test("BoundedLevenshtein: per-row threshold returns the exact distance " +
-    "at or under the band and -1 above it (matches the unbounded builtin)") {
-    val rows = Seq(
-      ("kitten", "sitting"), ("abc", "abc"), ("abc", "xyz"),
-      ("", "abcd"), ("flaw", "lawn"), ("abcdefgh", "abcdefgh"),
-      ("aaaa", "bbbbbbbb"), ("same text here", "same text hero"))
-      .toDF("a", "b")
-    val got = rows.select(
-        levenshtein(col("a"), col("b")).as("ed"),
-        graft.functions.BoundedLevenshtein(col("a"), col("b"), lit(3)).as("b3"),
-        graft.functions.BoundedLevenshtein(col("a"), col("b"), lit(0)).as("b0"))
-      .as[(Int, Int, Int)].collect()
-    for ((ed, b3, b0) <- got) {
-      assert(b3 === (if (ed <= 3) ed else -1))
-      assert(b0 === (if (ed == 0) 0 else -1))
-    }
-  }
-
   test("MyersLevenshtein ≡ builtin levenshtein on random strings " +
     "(including multi-block patterns > 64 chars and non-ASCII)") {
     val rnd = new scala.util.Random(42)

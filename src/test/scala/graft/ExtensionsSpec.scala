@@ -33,4 +33,20 @@ class ExtensionsSpec extends AnyFunSuite {
       s"SELECT avro_decode(bin, '$json').x FROM avro_in").collect()(0).getInt(0)
     assert(got === 42)
   }
+
+  test("DESCRIBE FUNCTION reports the class a SQL entry builds") {
+    GraftExtensions.register(spark)
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    val registry = spark.sessionState.functionRegistry
+    val id = FunctionIdentifier("png_build")
+    val className = registry.lookupFunction(id).map(_.getClassName)
+    assert(className ===
+      Some(registry.lookupFunction(id, Seq(Literal(7L))).getClass.getName))
+    assert(className === Some("graft.functions.ObjectCall"))
+    val described = spark.sql("DESCRIBE FUNCTION EXTENDED png_build")
+      .collect().map(_.getString(0))
+    assert(described.contains("Class: graft.functions.ObjectCall"),
+      described.mkString("\n"))
+  }
 }

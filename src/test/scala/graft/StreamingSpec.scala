@@ -387,6 +387,42 @@ class StreamingSpec extends AnyFunSuite {
     assert(!pairPlan.contains("/sizes"), s"a sizes table is read:\n$pairPlan")
   }
 
+  test("streaming near-dup: a doc redelivered in a later batch adds no " +
+    "pairs, no self-pair and no df") {
+    import spark.implicits._
+    val docsDf = graft.Tables.documents(spark, TestSpark.tiny)
+    val docs = docsDf.select("doc_id", "text").as[(Long, String)]
+      .collect().sortBy(_._1)
+    val (b0, b1) = docs.splitAt(docs.length / 2)
+    val expected = graft.operators.Dedup.jaccardPairs(docsDf)
+      .select("a_id", "b_id", "sim").as[(Long, Long, Double)].collect()
+      .map { case (a, b, sim) => (a, b) -> sim }.toMap
+    val dir = java.nio.file.Files.createTempDirectory("neardup_redeliver")
+      .toString + "/idx"
+    def run(batch: Seq[(Long, String)], bid: Long): Seq[(Long, Long, Double)] =
+      Streams.nearDupIncrementalBatch(batch.toDF("doc_id", "text"), dir, bid)
+        .select("a_id", "b_id", "sim").as[(Long, Long, Double)].collect().toSeq
+    // batch 1 redelivers batch 0's first doc, which has pairs of its own
+    val first = b0.head
+    assert(expected.keys.exists { case (a, b) => a == first._1 || b == first._1 })
+    val emitted = run(b0.toIndexedSeq, 0L) ++ run(first +: b1.toIndexedSeq, 1L)
+    val selfPairs = emitted.filter { case (a, b, _) => a == b }
+    assert(selfPairs.isEmpty, s"self-pairs: $selfPairs")
+    val repeated = emitted.groupBy(p => (p._1, p._2)).filter(_._2.length > 1)
+    assert(repeated.isEmpty, s"pairs emitted more than once: ${repeated.keys}")
+    val got = emitted.map { case (a, b, sim) => (a, b) -> sim }.toMap
+    assert(got.keySet === expected.keySet,
+      s"missing=${expected.keySet -- got.keySet}, " +
+        s"spurious=${got.keySet -- expected.keySet}")
+    val off = got.filter { case (k, sim) => math.abs(sim - expected(k)) > 1e-12 }
+    assert(off.isEmpty, s"sims differ from the one-shot pairs: $off")
+    val summedDf = spark.read.parquet(s"$dir/df").groupBy("shingle")
+      .agg(sum("cnt").as("df")).as[(String, Long)].collect().toMap
+    val oneShotDf = graft.operators.Dedup.shingleRows(docsDf)
+      .groupBy("shingle").count().as[(String, Long)].collect().toMap
+    assert(summedDf === oneShotDf)
+  }
+
   test("streaming curation: upsert of per-batch emissions equals the " +
     "one-shot keep list, in sorted AND shuffled arrival order") {
     import spark.implicits._
