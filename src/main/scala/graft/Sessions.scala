@@ -1,5 +1,10 @@
 package graft
 
+import java.nio.file.Files
+import java.nio.file.attribute.PosixFilePermissions
+
+import org.apache.hadoop.fs.{LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.SparkSession
 
 /** Session factory — one place for the engine's execution configuration
@@ -35,6 +40,23 @@ import org.apache.spark.sql.SparkSession
   *     one checkpoint is unchanged there. On HDFS this manager would
   *     lose FileContext's atomic rename; [[local]] builds local-master
   *     sessions only, whose checkpoints live on `file:`.
+  *   - `file:` is served by [[NioLocalFileSystem]], Hadoop's checksummed
+  *     `LocalFileSystem` over a raw local file system that sets
+  *     permissions through `java.nio` instead of forking a `chmod`
+  *     process. Without libhadoop, the stock raw file system forks one
+  *     `chmod` per created file and directory, and again for each
+  *     file's `.crc` sibling: every checkpoint-log entry, state-store
+  *     upload and parquet file. The bits set are the same (the create
+  *     mode under the configured umask, 0644 and 0755 by default). Where
+  *     the platform has no POSIX attribute view, or the mode carries
+  *     the sticky bit, it falls back to the stock `chmod` path.
+  *     Hadoop caches one file system per scheme JVM-wide, keyed without
+  *     the configuration, so the setting holds only if no `file:` file
+  *     system was created before the session; the sessions here are the
+  *     first thing their JVMs build.
+  *
+  * [[IoSettings]] holds these two settings; [[local]] and the test
+  * session both apply them.
   */
 object Sessions {
 
@@ -42,8 +64,15 @@ object Sessions {
   val CheckpointFileManagerClass: String =
     "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
 
+  /** The checkpoint-manager and `file:` settings (see above), which every
+    * session built for the engine carries, test sessions included. */
+  val IoSettings: Map[String, String] = Map(
+    "spark.sql.streaming.checkpointFileManagerClass" -> CheckpointFileManagerClass,
+    "spark.hadoop.fs.file.impl" -> classOf[NioLocalFileSystem].getName)
+
   def local(cpus: String): SparkSession = {
     val spark = SparkSession.builder()
+      .config(IoSettings)
       // local[N, 4]: allow task retries like a real cluster would —
       // plain local[N] aborts a whole query on one transient task
       // failure (e.g. the JDK NIO spill-read race under heavy spill)
@@ -63,7 +92,6 @@ object Sessions {
       // clusters.
       .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "64m")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.checkpointFileManagerClass", CheckpointFileManagerClass)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     quietWindowExec()
@@ -85,5 +113,23 @@ object Sessions {
         org.apache.logging.log4j.core.config.Configurator.setLevel(
           "org.apache.spark.sql.execution.window", org.apache.logging.log4j.Level.ERROR)
       case _ => ()
+    }
+}
+
+/** Hadoop's `LocalFileSystem` (checksummed `file:`) over
+  * [[NioRawLocalFileSystem]]; see [[Sessions]]. */
+final class NioLocalFileSystem extends LocalFileSystem(new NioRawLocalFileSystem)
+
+/** `RawLocalFileSystem` whose `setPermission` is one `java.nio` call
+  * instead of a forked `chmod`. A sticky bit, and a file system without
+  * a POSIX attribute view, keep the stock path. */
+final class NioRawLocalFileSystem extends RawLocalFileSystem {
+  override def setPermission(p: Path, permission: FsPermission): Unit =
+    if (permission.getStickyBit) super.setPermission(p, permission)
+    else try {
+      Files.setPosixFilePermissions(pathToFile(p).toPath,
+        PosixFilePermissions.fromString(permission.toString))
+    } catch {
+      case _: UnsupportedOperationException => super.setPermission(p, permission)
     }
 }

@@ -152,19 +152,20 @@ object PcmSamples {
     * [[fingerprintOf]] instead of this sentinel). */
   def pcmFingerprint(b: Array[Byte], frames: Int): Long = {
     if (frames <= 0 || frames > 63 + 1) return Invalid
-    val n = pcmWalk(b, 0, 1)
-    if (n == Invalid || n < frames + 1) return Invalid
-    // re-locate the data chunk (same walk as pcmWalk, validity proven)
-    var pos = 12
-    var dataOff = -1
-    while (pos + 8 <= b.length) {
-      val size = le32(b, pos + 4)
-      val body = pos + 8
-      if (b(pos) == 'd' && b(pos + 1) == 'a' && b(pos + 2) == 't' &&
-        b(pos + 3) == 'a') dataOff = body
-      pos = body + size + (size & 1)
-    }
-    val nn = n.toInt
+    val fp = fingerprintOf(b, frames)
+    if (fp == null) Invalid else fp
+  }
+
+  /** [[pcmFingerprint]] with one chunk walk: null when the stream is
+    * malformed or has under `frames` + 1 samples; boxed because every
+    * 64-bit value is a valid fingerprint. */
+  def fingerprintOf(b: Array[Byte], frames: Int): java.lang.Long = {
+    val at = chunks(b)
+    if (at < 0) return null
+    val dataOff = at.toInt
+    val nn = samples(b, dataOff)
+    if (nn < frames + 1) return null
+    if (frames <= 0 || frames > 63 + 1) return Invalid
     val e = new Array[Long](frames + 1)
     var i = 0
     while (i < nn) {
@@ -185,13 +186,43 @@ object PcmSamples {
     hash
   }
 
-  /** [[pcmFingerprint]] gated on [[pcmWalk]]'s validity: null when the
-    * stream is malformed or has under `frames` + 1 samples; boxed
-    * because every 64-bit value is a valid fingerprint. */
-  def fingerprintOf(b: Array[Byte], frames: Int): java.lang.Long = {
-    val n = pcmWalk(b, 0, 1)
-    if (n == Invalid || n < frames + 1) null else pcmFingerprint(b, frames)
+  /** The one chunk walk: for a well-formed stream (RIFF/WAVE magic, every
+    * chunk inside the buffer, a PCM mono 16-bit `fmt ` with a positive
+    * rate, a `data` chunk; the last of each chunk kind wins), the body
+    * offsets of its `fmt ` and `data` chunks as `fmt << 32 | data`;
+    * otherwise -1. */
+  private def chunks(b: Array[Byte]): Long = {
+    if (b == null || b.length < 12) return -1L
+    if (b(0) != 'R' || b(1) != 'I' || b(2) != 'F' || b(3) != 'F' ||
+      b(8) != 'W' || b(9) != 'A' || b(10) != 'V' || b(11) != 'E')
+      return -1L
+    var pos = 12
+    var fmtOff = -1; var fmtOk = false
+    var dataOff = -1
+    while (pos + 8 <= b.length) {
+      val size = le32(b, pos + 4)
+      val body = pos + 8
+      if (size < 0 || size > b.length - body) return -1L
+      if (b(pos) == 'f' && b(pos + 1) == 'm' && b(pos + 2) == 't' &&
+        b(pos + 3) == ' ') {
+        if (size < 16) return -1L
+        // PCM, mono, 16-bit — anything else is outside this walker's
+        // contract (compressed WAV payloads need codecs)
+        fmtOk = le16(b, body) == 1 && le16(b, body + 2) == 1 &&
+          le16(b, body + 14) == 16
+        fmtOff = body
+      } else if (b(pos) == 'd' && b(pos + 1) == 'a' && b(pos + 2) == 't' &&
+        b(pos + 3) == 'a') {
+        dataOff = body
+      }
+      pos = body + size + (size & 1) // RIFF chunks pad to even
+    }
+    if (!fmtOk || le32(b, fmtOff + 4) <= 0 || dataOff < 0) -1L
+    else (fmtOff.toLong << 32) | dataOff
   }
+
+  /** Sample count of the `data` chunk whose body starts at `dataOff`. */
+  private def samples(b: Array[Byte], dataOff: Int): Int = le32(b, dataOff - 4) / 2
 
   /** Chunk-walking PCM fold. Modes: 0 = sample count, 1 = sample rate,
     * 2 = energy Σv², 3 = peak max|v|, 4 = zero crossings, 5 = decimated
@@ -199,35 +230,13 @@ object PcmSamples {
     * malformed input (bad magic, truncated chunk, non-PCM/mono/16-bit,
     * or no data chunk). */
   def pcmWalk(b: Array[Byte], mode: Int, k: Int): Long = {
-    if (b == null || b.length < 12 || k <= 0) return Invalid
-    if (b(0) != 'R' || b(1) != 'I' || b(2) != 'F' || b(3) != 'F' ||
-      b(8) != 'W' || b(9) != 'A' || b(10) != 'V' || b(11) != 'E')
-      return Invalid
-    var pos = 12
-    var fmtOk = false; var rate = -1
-    var dataOff = -1; var dataLen = -1
-    while (pos + 8 <= b.length) {
-      val size = le32(b, pos + 4)
-      val body = pos + 8
-      if (size < 0 || size > b.length - body) return Invalid
-      if (b(pos) == 'f' && b(pos + 1) == 'm' && b(pos + 2) == 't' &&
-        b(pos + 3) == ' ') {
-        if (size < 16) return Invalid
-        // PCM, mono, 16-bit — anything else is outside this walker's
-        // contract (compressed WAV payloads need codecs)
-        fmtOk = le16(b, body) == 1 && le16(b, body + 2) == 1 &&
-          le16(b, body + 14) == 16
-        rate = le32(b, body + 4)
-      } else if (b(pos) == 'd' && b(pos + 1) == 'a' && b(pos + 2) == 't' &&
-        b(pos + 3) == 'a') {
-        dataOff = body; dataLen = size
-      }
-      pos = body + size + (size & 1) // RIFF chunks pad to even
-    }
-    if (!fmtOk || rate <= 0 || dataOff < 0) return Invalid
-    val n = dataLen / 2
+    if (k <= 0) return Invalid
+    val at = chunks(b)
+    if (at < 0) return Invalid
+    val dataOff = at.toInt
+    val n = samples(b, dataOff)
     if (mode == 0) return n.toLong
-    if (mode == 1) return rate.toLong
+    if (mode == 1) return le32(b, (at >>> 32).toInt + 4).toLong
     var acc = 0L; var peak = 0L; var crossings = 0L
     var prevNeg = false
     var i = 0

@@ -1,11 +1,18 @@
 package graft.sources
 
-import java.sql.{Connection, DriverManager}
+import java.sql.{Connection, DriverManager, PreparedStatement}
 import java.util.Properties
 
-import org.apache.spark.sql.{DataFrame, Encoders}
-import org.apache.spark.sql.functions.{col, spark_partition_id}
-import org.apache.spark.sql.types.StructType
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
+import org.apache.spark.sql.execution.datasources.jdbc.{JdbcOptionsInWrite, JdbcUtils}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.jdbc.{JdbcDialect, JdbcDialects}
+import org.apache.spark.sql.types._
 
 /** S9 "production" sink: lands each CDC micro-batch in a JDBC-reachable
   * analytical store via staged MERGE — the engine-side equivalent of the
@@ -14,15 +21,16 @@ import org.apache.spark.sql.types.StructType
   * runs on anything with a JDBC driver.
   *
   * Shape per micro-batch (one Spark job; the rest runs in the database):
-  *   1. executors compact each partition to its latest row per key
-  *      (`sortWithinPartitions(key, version desc)`, keep the first row
-  *      of each key run) and tag every row with its Spark partition id.
-  *      There is no exchange, so compaction and the staging write are
-  *      one narrow job;
-  *   2. the driver empties the staging table (`<table>_stage`), which
-  *      persists across batches, and executors append the compacted
-  *      rows to it in parallel (`df.write.jdbc`, one connection per
-  *      partition — the only data-volume-proportional Spark step);
+  *   1. the driver empties the staging table (`<table>_stage`), which
+  *      persists across batches;
+  *   2. one Spark job runs over the batch's rows as sorted by
+  *      `sortWithinPartitions(key, version desc)`, taken as internal rows
+  *      (`queryExecution.toRdd`: no encoder round trip, no
+  *      `Dataset.rdd` plan). Each task keeps the first row of each key
+  *      run, tags it with its partition id and inserts it into staging
+  *      through a prepared, batched INSERT on its own connection. There
+  *      is no exchange and no JDBC data source: no write command, no
+  *      table-existence or schema lookups, only the inserts;
   *   3. one driver-side `DELETE … WHERE EXISTS` drops the rows that lost
   *      to a row of the same key from another partition: a higher
   *      version, or the same version from a higher partition. The
@@ -33,15 +41,16 @@ import org.apache.spark.sql.types.StructType
   *      set-based, no per-row round-trips.
   *
   * Preparation: the staging table and its key index, target creation,
-  * the target key-index check, column evolution and the two SQL strings
+  * the target key-index check, column evolution and the SQL strings
   * depend only on the batch schema. A sink instance prepares them when a
   * batch's schema differs from the one it last prepared for, and on its
-  * first batch: that batch re-creates the staging table with the
-  * writer's overwrite, so a restarted stream starts from a clean staging
-  * table whatever a crash left in it. Every other batch runs no DDL and
-  * no metadata lookup of its own: besides the writer's append, it sends
-  * the staging DELETE, the dedupe and the MERGE. One instance serves one
-  * stream; its batches run one at a time.
+  * first batch: that batch drops and re-creates the staging table with
+  * Spark's JDBC DDL (`JdbcUtils.createTable`, the dialect's column types
+  * and the `createTableColumnTypes` option), so a restarted stream starts
+  * from a clean staging table whatever a crash left in it. Every other
+  * batch runs no DDL and no metadata lookup: it sends the staging
+  * DELETE, the inserts, the dedupe and the MERGE. One instance serves
+  * one stream; its batches run one at a time.
   *
   * Schema evolution: a batch column the target lacks is added to it,
   * and existing rows read NULL there. A column dropped upstream is
@@ -63,7 +72,7 @@ import org.apache.spark.sql.types.StructType
 object JdbcUpsertSink {
 
   /** Quoted identifier (JDBC targets fold unquoted names; Spark's JDBC
-    * writer quotes on CREATE, so the MERGE must quote to match). */
+    * DDL quotes on CREATE, so the MERGE must quote to match). */
   private def q(ident: String): String = "\"" + ident + "\""
 
   /** Staging column holding the Spark partition a row was compacted in:
@@ -76,49 +85,122 @@ object JdbcUpsertSink {
       props: Properties = new Properties): (DataFrame, Long) => Unit =
     new Sink(url, table, keyCol, versionCol, tombstoneCol, props)
 
-  /** Latest row per key within each partition, tagged with the partition
-    * id — a narrow transform: the sort is partition-local and the
-    * first-of-run filter needs no window. */
-  private def compactPartitions(batch: DataFrame, keyCol: String,
-      versionCol: String): DataFrame = {
-    val k = batch.schema.fieldIndex(keyCol)
-    batch.sortWithinPartitions(col(keyCol), col(versionCol).desc)
-      .mapPartitions { rows =>
-        var started = false
-        var prev: Any = null
-        rows.filter { r =>
-          val key = r.get(k)
-          val first = !started || key != prev
-          started = true
-          prev = key
-          first
-        }
-      }(Encoders.row(batch.schema))
-      .withColumn(Part, spark_partition_id())
+  /** Binds a non-null value of one column from an internal row, as
+    * Spark's JDBC writer binds the same value from an external row.
+    * Atomic types only: nothing lands array columns here (Derby has no
+    * array type), so their binding is left out and such a batch fails. */
+  private type Setter = (PreparedStatement, InternalRow, Int) => Unit
+
+  private def setter(dt: DataType, dialect: JdbcDialect): Setter =
+    dt match {
+      case IntegerType => (s, r, i) => s.setInt(i + 1, r.getInt(i))
+      case LongType => (s, r, i) => s.setLong(i + 1, r.getLong(i))
+      case DoubleType => (s, r, i) => s.setDouble(i + 1, r.getDouble(i))
+      case FloatType => (s, r, i) => s.setFloat(i + 1, r.getFloat(i))
+      case ShortType => (s, r, i) => s.setInt(i + 1, r.getShort(i))
+      case ByteType => (s, r, i) => s.setInt(i + 1, r.getByte(i))
+      case BooleanType => (s, r, i) => s.setBoolean(i + 1, r.getBoolean(i))
+      case _: StringType => (s, r, i) => s.setString(i + 1, r.getUTF8String(i).toString)
+      case BinaryType => (s, r, i) => s.setBytes(i + 1, r.getBinary(i))
+      case TimestampType => (s, r, i) =>
+        s.setTimestamp(i + 1, DateTimeUtils.toJavaTimestamp(r.getLong(i)))
+      case TimestampNTZType => (s, r, i) =>
+        s.setTimestamp(i + 1, dialect.convertTimestampNTZToJavaTimestamp(
+          DateTimeUtils.microsToLocalDateTime(r.getLong(i))))
+      case DateType => (s, r, i) => s.setDate(i + 1, DateTimeUtils.toJavaDate(r.getInt(i)))
+      case t: DecimalType => (s, r, i) =>
+        s.setBigDecimal(i + 1, r.getDecimal(i, t.precision, t.scale).toJavaBigDecimal)
+      case _ => throw new IllegalArgumentException(
+        s"cannot bind a value of type ${dt.catalogString} to a JDBC parameter")
+    }
+
+  /** One task's share of a batch: its partition, sorted by (key, version
+    * desc). Inserts the first row of each key run, tagged with the
+    * partition id, into staging. The sorter hands out one reused row, so
+    * only the key that starts a run is copied. A named class rather than
+    * a lambda: Spark's closure cleaner skips it, where a lambda capturing
+    * its enclosing object costs an ASM walk of that class on every job. */
+  private final class StageRows(options: JdbcOptionsInWrite, insertSql: String,
+      schema: StructType, keyIndex: Int)
+      extends ((TaskContext, Iterator[InternalRow]) => Unit) with Serializable {
+    def apply(ctx: TaskContext, rows: Iterator[InternalRow]): Unit = if (rows.hasNext) {
+      val dialect = JdbcDialects.get(options.url)
+      val conn = dialect.createConnectionFactory(options)(ctx.partitionId)
+      val transactional = options.isolationLevel != Connection.TRANSACTION_NONE
+      var committed = false
+      try {
+        if (transactional) conn.setAutoCommit(false)
+        val stmt = conn.prepareStatement(insertSql)
+        try {
+          stmt.setQueryTimeout(options.queryTimeout)
+          val n = schema.length - 1 // the last column is the partition tag
+          val setters = (0 until n).map(i => setter(schema(i).dataType, dialect)).toArray
+          val nullTypes = (0 until n).map(i =>
+            JdbcUtils.getJdbcType(schema(i).dataType, dialect).jdbcNullType).toArray
+          val keyOf = InternalRow.getAccessor(schema(keyIndex).dataType)
+          var prev: Any = null
+          var started = false
+          var pending = 0
+          while (rows.hasNext) {
+            val r = rows.next()
+            val key = keyOf(r, keyIndex)
+            if (!started || !java.util.Objects.deepEquals(key, prev)) {
+              started = true
+              prev = InternalRow.copyValue(key)
+              var i = 0
+              while (i < n) {
+                if (r.isNullAt(i)) stmt.setNull(i + 1, nullTypes(i))
+                else setters(i)(stmt, r, i)
+                i += 1
+              }
+              stmt.setInt(n + 1, ctx.partitionId)
+              stmt.addBatch()
+              pending += 1
+              if (pending == options.batchSize) { stmt.executeBatch(); pending = 0 }
+            }
+          }
+          if (pending > 0) stmt.executeBatch()
+        } finally stmt.close()
+        if (transactional) conn.commit()
+        committed = true
+      } finally {
+        try { if (!committed && transactional) conn.rollback() }
+        finally conn.close()
+      }
+    }
   }
 
   private final class Sink(url: String, table: String, keyCol: String,
       versionCol: String, tombstoneCol: String, props: Properties)
       extends ((DataFrame, Long) => Unit) {
     private val staging = table + "_stage"
+    private val options = new JdbcOptionsInWrite(url, q(staging), props.asScala.toMap)
     /** The staged schema the database side was last prepared for. */
     private var prepared: Option[StructType] = None
+    private var insertSql = ""
     private var dedupeSql = ""
     private var mergeSql = ""
 
     def apply(batch: DataFrame, batchId: Long): Unit = synchronized {
-      val staged = compactPartitions(batch, keyCol, versionCol)
+      val schema = batch.schema.add(Part, IntegerType, nullable = false)
+      val spark = batch.sparkSession
       val conn = DriverManager.getConnection(url, props)
       try {
         val st = conn.createStatement()
-        if (prepared.contains(staged.schema)) {
-          st.executeUpdate(s"DELETE FROM ${q(staging)}")
-          staged.write.mode("append").jdbc(url, q(staging), props)
-        } else {
-          staged.write.mode("overwrite").jdbc(url, q(staging), props)
-          prepare(conn, staged.columns.toSeq)
-          prepared = Some(staged.schema)
+        if (prepared.contains(schema)) st.executeUpdate(s"DELETE FROM ${q(staging)}")
+        else {
+          val caseSensitive = spark.sessionState.conf.caseSensitiveAnalysis
+          if (JdbcUtils.tableExists(conn, options))
+            JdbcUtils.dropTable(conn, options.table, options)
+          JdbcUtils.createTable(conn, options.table, schema, caseSensitive, options)
+          prepare(conn, schema.fieldNames.toSeq)
+          insertSql = JdbcUtils.getInsertStatement(options.table, schema, None,
+            caseSensitive, JdbcDialects.get(url))
+          prepared = Some(schema)
         }
+        val sorted = batch.sortWithinPartitions(col(keyCol), col(versionCol).desc)
+        spark.sparkContext.runJob(sorted.queryExecution.toRdd,
+          new StageRows(options, insertSql, schema, schema.fieldIndex(keyCol)))
         st.executeUpdate(dedupeSql)
         st.executeUpdate(mergeSql)
         st.close()
@@ -127,8 +209,8 @@ object JdbcUpsertSink {
 
     /** Everything that depends only on the staged schema: the staging key
       * index, target creation or its key index and new columns, and the
-      * dedupe and MERGE statements. Runs right after the writer created
-      * the staging table. */
+      * dedupe and MERGE statements. Runs right after the staging table
+      * is created. */
     private def prepare(conn: Connection, stagedCols: Seq[String]): Unit = {
       // target columns: everything but the tombstone flag and the tag
       val cols = stagedCols.filterNot(c => c == tombstoneCol || c == Part)
@@ -197,7 +279,7 @@ object JdbcUpsertSink {
         }
         // schema evolution (the whole-DB CDC reality — upstream tables
         // gain columns mid-stream): add staging columns the target lacks,
-        // typed from the staging table the JDBC writer just created.
+        // typed from the staging table just created.
         def columnsOf(t: String): Map[String, (String, Int)] = {
           val rs = conn.getMetaData.getColumns(null, null, t, null)
           val out = scala.collection.mutable.Map.empty[String, (String, Int)]

@@ -1,9 +1,17 @@
 package graft
 
-import org.apache.spark.JobsDuring
+import java.math.BigDecimal
+import java.sql.{Date, Timestamp}
+
+import org.apache.spark.{JobsDuring, ListenerBusDrain}
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.datasources.SaveIntoDataSourceCommand
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.JdbcUpsertSink
@@ -61,6 +69,82 @@ class JdbcUpsertSinkSpec extends AnyFunSuite {
     assert(landed === expected.toSeq.sorted)
   }
 
+  /** The logical plans of the queries Spark reports finished or failed
+    * while `body` runs: any action or command, the JDBC writer's
+    * `SaveIntoDataSourceCommand` among them. */
+  private def queriesDuring(body: => Unit): Seq[String] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.logical.getClass.getName)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        plans.add(qe.logical.getClass.getName)
+    }
+    ListenerBusDrain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try { body; ListenerBusDrain(spark.sparkContext) }
+    finally spark.listenerManager.unregister(listener)
+    plans.toArray(Array.empty[String]).toSeq
+  }
+
+  /** Runs `body` with every sort spilling each two rows, so sorted rows
+    * come back through the spill reader's reused buffer. */
+  private def withSortSpills[T](body: => T): T = {
+    val conf = org.apache.spark.SparkEnv.get.conf
+    val key = "spark.shuffle.spill.numElementsForceSpillThreshold"
+    val prior = conf.getOption(key)
+    conf.set(key, "2")
+    try body finally prior.fold(conf.remove(key))(conf.set(key, _))
+  }
+
+  test("every column type and NULL round-trips; a string key deduplicates " +
+    "within and across partitions") {
+    val url = "jdbc:derby:memory:graft8;create=true"
+    // Derby cannot index or compare the CLOB a string maps to by default
+    val props = new java.util.Properties
+    props.setProperty("createTableColumnTypes", "k VARCHAR(32)")
+    val sink = JdbcUpsertSink(url, "types_latest", "k", "version", "__deleted", props)
+    val schema = new StructType()
+      .add("k", StringType).add("version", LongType).add("__deleted", BooleanType)
+      .add("i", IntegerType).add("l", LongType).add("d", DoubleType)
+      .add("b", BooleanType).add("s", StringType).add("ts", TimestampType)
+      .add("dt", DateType).add("dec", DecimalType(10, 2)).add("bin", BinaryType)
+    def full(k: String, v: Long, n: Int) = Row(k, v, false, n, n * 10000000000L,
+      n + 0.25, n % 2 == 0, s"s$n-é", new Timestamp(1700000000000L + n * 1000L + 123),
+      Date.valueOf(s"2024-01-${10 + n}"), new BigDecimal(s"$n.45"), Array[Byte](n.toByte, 0, -1))
+    def nulls(k: String, v: Long) = Row(k, v, false, null, null, null, null, null,
+      null, null, null, null)
+    // three slices of four rows; keys repeat within and across slices.
+    // Sorting with a spill every two rows, the middle slice merges its
+    // spilled (delta 1, gamma 1) with its in-memory (gamma 9, omega 2):
+    // when the spill reader moves on to gamma 1, an uncopied "delta"
+    // would read "gamma" and drop gamma 9
+    val rows = Seq(
+      full("alpha", 3L, 3), full("beta", 1L, 1), nulls("beta", 9L), full("alpha", 2L, 2),
+      full("delta", 1L, 4), full("gamma", 1L, 5), full("gamma", 9L, 6), full("omega", 2L, 7),
+      full("beta", 4L, 8), full("alpha", 1L, 9), nulls("omega", 5L), full("delta", 3L, 1))
+    val batch = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema)
+    assert(batch.withColumn("p", spark_partition_id()).groupBy("k")
+      .agg(countDistinct("p")).as[(String, Long)].collect().toMap ===
+      Map("alpha" -> 2L, "beta" -> 2L, "delta" -> 2L, "gamma" -> 1L, "omega" -> 2L))
+    // a key that starts a run must outlive the row it was read from
+    withSortSpills(sink(batch, 0L))
+
+    def norm(r: Row): Seq[Any] = r.toSeq.map {
+      case a: Array[Byte] => a.toSeq
+      case v => v
+    }
+    val cols = schema.fieldNames.filterNot(_ == "__deleted")
+    val expected = rows.groupBy(_.getString(0)).values.map(_.maxBy(_.getLong(1)))
+      .map(r => norm(Row.fromSeq(cols.map(c => r.get(schema.fieldIndex(c)))))).toSet
+    def landed = readTable(url, "types_latest").select(cols.map(col): _*)
+      .collect().map(norm).toSet
+    assert(expected.size === 5)
+    assert(landed === expected)
+    sink(batch, 0L)
+    assert(landed === expected)
+  }
+
   test("a same-schema batch is one Spark job and keeps the staging table; " +
     "a new column re-creates it") {
     val url = "jdbc:derby:memory:graft7;create=true"
@@ -69,8 +153,12 @@ class JdbcUpsertSinkSpec extends AnyFunSuite {
       .toDF("id", "username", "version", "__deleted")
     sink(batch(1L), 0L)
     val staged = tableId(url, "steady_latest_stage")
-    val jobs = JobsDuring(spark.sparkContext)(sink(batch(2L), 1L))
+    var jobs = Seq.empty[org.apache.spark.StartedJob]
+    val queries = queriesDuring {
+      jobs = JobsDuring(spark.sparkContext)(sink(batch(2L), 1L))
+    }
     assert(jobs.size === 1, jobs)
+    assert(!queries.contains(classOf[SaveIntoDataSourceCommand].getName), queries)
     assert(tableId(url, "steady_latest_stage") === staged)
     sink(batch(3L), 2L)
     assert(tableId(url, "steady_latest_stage") === staged)

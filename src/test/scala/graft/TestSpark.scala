@@ -6,13 +6,12 @@ import org.apache.spark.sql.SparkSession
 object TestSpark {
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
+      .config(Sessions.IoSettings)
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        Sessions.CheckpointFileManagerClass)
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft_wh").toString)
       .getOrCreate()
