@@ -16,109 +16,16 @@ object Bench {
 
   /** The per-query entries of a bench JSON line (the flat object after
     * `"queries":` — calibration/shared_builds entries are outside it
-    * and never touched). */
+    * and never read). */
   def queriesOf(line: String): Map[String, Double] = {
-    val (open, close) = queriesSpan(line)
-    """"([A-Za-z0-9_]+)":(-?[0-9]+(?:\.[0-9]+)?)""".r
-      .findAllMatchIn(line.substring(open + 1, close))
-      .map(m => m.group(1) -> m.group(2).toDouble).toMap
-  }
-
-  private def queriesSpan(line: String): (Int, Int) = {
     val key = "\"queries\":{"
     val at = line.indexOf(key)
     require(at >= 0, "no queries object in bench line")
     val open = at + key.length - 1
-    (open, line.indexOf("}", open)) // flat object: first '}' closes it
-  }
-
-  /** Artifact-level min-merge (r12 VERDICT hygiene 1): substitute each
-    * donor timing that is FASTER than the base artifact's recorded one
-    * (the "noise spike min-merged from an isolated same-code re-run"
-    * case) and append donor entries the base sweep lacks (the
-    * "filtered same-SF run for a newly registered query" case). The
-    * rewritten line's `"patched":[…]` names every entry whose value
-    * came from a donor — a patched artifact self-describes instead of
-    * relying on SURVEY prose — and `"value"` is recomputed as the sum
-    * of the merged per-query map. Idempotent: re-applying the same
-    * donor changes nothing; the patched list is the sorted, deduped
-    * union with any pre-existing one. Donor failures (negative times)
-    * never substitute.
-    *
-    * Provenance (r13 ADVICE): a patched artifact no longer claims the
-    * sweep's methodology — its `"scheme"` gains a `+patched` suffix,
-    * and `"donors":[…]` records every donor artifact whose timings
-    * were merged in, so cross-round consumers can tell a patched total
-    * (mixed methodologies, biased toward the min) from a sweep total.
-    *
-    * Guard (r13 ADVICE): only the FULL bench line may be patched. The
-    * compact stdout line is shape-identical but its queries map is the
-    * headline subset, so recomputing `"value"` from it would silently
-    * shrink the recorded full-registry total. A full line's value IS
-    * the sum of its map (within per-entry %.3f rounding); anything
-    * else fails loudly. */
-  def patchLine(base: String, donor: Map[String, Double],
-      donorLabel: String = ""): String = {
-    val (open, close) = queriesSpan(base)
-    val merged = scala.collection.mutable.LinkedHashMap[String, Double]()
+    val close = line.indexOf("}", open) // flat object: first '}' closes it
     """"([A-Za-z0-9_]+)":(-?[0-9]+(?:\.[0-9]+)?)""".r
-      .findAllMatchIn(base.substring(open + 1, close))
-      .foreach(m => merged(m.group(1)) = m.group(2).toDouble)
-    val baseValue = """"value":(-?[0-9]+(?:\.[0-9]+)?)""".r
-      .findFirstMatchIn(base).map(_.group(1).toDouble)
-      .getOrElse(sys.error("no \"value\" field in bench line"))
-    val tol = 0.002 * merged.size + 0.01 // %.3f rounding per entry
-    require(math.abs(baseValue - merged.valuesIterator.sum) <= tol,
-      f"patchLine requires the FULL bench line: value=$baseValue%.3f != " +
-        f"sum(queries)=${merged.valuesIterator.sum}%.3f over ${merged.size} " +
-        "entries — this looks like the compact headline-subset stdout line")
-    val fromDonor = donor.toSeq.sortBy(_._1).collect {
-      case (k, v) if v >= 0 && merged.get(k).forall(v < _) =>
-        merged(k) = v; k
-    }
-    val priorPatched = """"patched":\[([^\]]*)\]""".r
-      .findFirstMatchIn(base).toSeq
-      .flatMap(m => """"([A-Za-z0-9_]+)"""".r.findAllMatchIn(m.group(1))
-        .map(_.group(1)))
-    val allPatched = (priorPatched ++ fromDonor).distinct.sorted
-    val priorDonors = """"donors":\[([^\]]*)\]""".r
-      .findFirstMatchIn(base).toSeq
-      .flatMap(m => """"([^"]+)"""".r.findAllMatchIn(m.group(1))
-        .map(_.group(1)))
-    val allDonors = (priorDonors ++
-      (if (fromDonor.nonEmpty && donorLabel.nonEmpty) Seq(donorLabel)
-       else Nil)).distinct.sorted
-    val newBody = merged
-      .map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }.mkString(",")
-    val patchedJson = allPatched.map("\"" + _ + "\"")
-      .mkString("\"patched\":[", ",", "]") +
-      (if (allDonors.isEmpty) ""
-       else allDonors.map("\"" + _ + "\"")
-         .mkString(",\"donors\":[", ",", "]"))
-    val total = merged.valuesIterator.sum
-    val rebuilt =
-      base.substring(0, open + 1) + newBody + base.substring(close)
-    val withTotal = rebuilt.replaceFirst(
-      """"value":-?[0-9]+(?:\.[0-9]+)?""", f""""value":$total%.3f""")
-    // test only the scheme FIELD (r14 ADVICE): a donor filename carrying
-    // the literal '+patched' in the donors array must not suppress the
-    // scheme suffix on a later patch of an otherwise-unsuffixed line
-    val schemeAlreadyPatched =
-      """"scheme":"[^"]*\+patched""".r.findFirstIn(withTotal).isDefined
-    val withScheme =
-      if (allPatched.isEmpty || schemeAlreadyPatched) withTotal
-      else withTotal.replaceFirst(""""scheme":"([^"]+)"""",
-        """"scheme":"$1+patched"""")
-    val spliced =
-      if (withScheme.contains("\"patched\":["))
-        withScheme.replaceFirst(
-          """"patched":\[[^\]]*\](,"donors":\[[^\]]*\])?""",
-          java.util.regex.Matcher.quoteReplacement(patchedJson))
-      else // older artifact without the field: splice it in before "sf"
-        withScheme.replaceFirst(""","sf":""",
-          java.util.regex.Matcher.quoteReplacement("," + patchedJson) +
-            ""","sf":""")
-    spliced
+      .findAllMatchIn(line.substring(open + 1, close))
+      .map(m => m.group(1) -> m.group(2).toDouble).toMap
   }
 
   /** Cross-round box-drift adjudication, IN the artifact (r13 VERDICT
@@ -288,10 +195,9 @@ object Bench {
       build("cosine_pairs",
         () => { operators.Dedup.sharedCosinePairs(spark, sfDir).count(); () }))
     // shared_build_sec = the shared materializations, EXCLUDING the
-    // bucketed-layout write (excluded since r09). Eleven since r14
-    // (phash_pairs, phash_labels, and cosine_pairs joined curation_flags
-    // and the seven r09-r12 builds — cross-round totals compare via the
-    // itemized shared_builds map, not this sum)
+    // bucketed-layout write (excluded since r09). There are twelve, and
+    // the set grew across rounds, so cross-round totals compare via the
+    // itemized shared_builds map, not this sum
     val sharedBuildSec = sharedBuilds.map(_._2).sum
     System.err.println(f"[bench] shared materialization build: $sharedBuildSec%.2fs")
     def settle(): Unit = {
@@ -384,9 +290,7 @@ object Bench {
     // sustained box contention survived min-of-2 AND the redo pass)
     val suspectJson =
       suspect.map("\"" + _ + "\"").mkString(",\"suspect\":[", ",", "]")
-    // a FRESH run never substitutes entries — "patched" is non-empty
-    // only on artifacts rewritten by tools.BenchPatch (min-merged or
-    // filtered-run-substituted entries name themselves there)
+    // always empty: the field stays so every artifact keeps one shape
     val patchedJson = ",\"patched\":[]"
     // the automatic box-drift adjudication block (r13 VERDICT task 3)
     val vsPriorJson = vsPrior(results, prior, calibrationSec, priorCalibSec)

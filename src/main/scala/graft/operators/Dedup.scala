@@ -650,7 +650,8 @@ object Dedup {
     * volume 27× and the guarantee-aligned threshold makes the sketch
     * semantics scale-invariant: what the operator returns is the same
     * relation brute force would, provably, at 100 TB as at sf0.01.
-    * [[graft.DebugSimhash2]] reproduces the recall probe. */
+    * The registry oracle `duckSimhash` is that brute force (all pairs,
+    * hamming ≤ threshold), so the query's recall is hash-checked. */
   val simhashPairs: Q = Q("dedup_simhash", duckSimhash) { (s, d) =>
     val docs = simhashDf(documents(s, d))
     val chunks = docs.select(col("doc_id"), col("sh"),
@@ -685,8 +686,10 @@ object Dedup {
     * metadata-only job, and the result is exact at every bits value, so
     * the knob tunes verify-join volume without touching semantics. */
   /** Cell bits for a corpus of n vectors: ≈ log₂(n/100) keeps cells at
-    * ~100 vectors — MEASURED optimum, not a guess: the r08
-    * `DebugCellCosine` sweep at sf1 (20 k vecs) reads 11.5/8.6/8.5/12.9 s
+    * ~100 vectors — MEASURED optimum, not a guess: the r08 cell-bits
+    * sweep (SURVEY.md §6.1; output identity across bits is DedupSpec's
+    * "cellCosinePairs is exact at every bits value" test) at sf1
+    * (20 k vecs) reads 11.5/8.6/8.5/12.9 s
     * for bits 4/6/8/10 and at sf2 (40 k) 29.1/18.7/15.4/12.8/8.6/29.3 s
     * for bits 5/6/7/8/9/10 — wall time is U-shaped in cell size with the
     * floor at ~60–300 rows/cell (verify volume Σ|Ci||Cj| shrinks with

@@ -12,10 +12,10 @@ import graft.functions.AvroCodec
   * (reference: main.py:6-9,22) or statically from a file
   * (reference: read_from_kafka.py:8). The engine's equivalents:
   *
-  *  - plan-time resolution: snapshot the subject's versions once and
-  *    plan the decode with them ([[SchemaRegistry.resolveAndDecode]]);
-  *  - per-batch re-resolution for schema evolution: inside foreachBatch,
-  *    re-snapshot before decoding each micro-batch
+  *  - one decode, [[SchemaRegistry.resolveAndDecodeById]]: snapshot the
+  *    subject's versions when the decode is built and decode each record
+  *    with its writer schema onto the latest one;
+  *  - for schema evolution, call it per micro-batch inside foreachBatch
   *    ([[SchemaRegistry.decodeEachBatchWith]]) — new fields appear as
   *    soon as the registry serves the widened schema, without restarting
   *    the query.
@@ -47,20 +47,13 @@ final class InMemorySchemaRegistry extends SchemaRegistry {
 
 object SchemaRegistry {
 
-  /** Plan-time resolution: the registry is consulted once, when the
-    * decode is built (the main.py mode with the registry cache warm).
-    * The one registry decode is [[resolveAndDecodeById]]. */
-  def resolveAndDecode(records: DataFrame, registry: SchemaRegistry,
-      topic: String): DataFrame =
-    resolveAndDecodeById(records, registry, topic)
-
   /** Evolution mode: re-resolve the schema per micro-batch so a widened
     * schema takes effect mid-stream. Use as the foreachBatch body:
     * {{{ stream.writeStream.foreachBatch(decodeEachBatchWith(reg, topic)(sink)) }}}
     */
   def decodeEachBatchWith(registry: SchemaRegistry, topic: String)(
       handle: (DataFrame, Long) => Unit): (DataFrame, Long) => Unit =
-    (batch, id) => handle(resolveAndDecode(batch, registry, topic), id)
+    (batch, id) => handle(resolveAndDecodeById(batch, registry, topic), id)
 
   /** Replay-safe decode: each record is decoded with its WRITER schema,
     * looked up by the Confluent wire-header id (the header exists

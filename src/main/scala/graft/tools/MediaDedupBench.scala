@@ -69,6 +69,6 @@ object MediaDedupBench {
     val line =
       s"""{"metric":"media_dedup_bench","batches":$nBatches,"tiers":{${entries.mkString(",")}}}"""
     println(line)
-    ScalePair.append("records/mediadedup.jsonl", line)
+    Records.append("records/mediadedup.jsonl", line)
   }
 }

@@ -120,6 +120,6 @@ object PackDeltaBench {
     val line = s"""{"metric":"pack_delta_bench","batches":$nBatches,""" +
       s""""per_batch_edits":$per,"epochs":{${cells.mkString(",")}}}"""
     println(line)
-    ScalePair.append("records/packdelta.jsonl", line)
+    Records.append("records/packdelta.jsonl", line)
   }
 }

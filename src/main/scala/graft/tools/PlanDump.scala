@@ -2,36 +2,52 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-/** Round-16 measurement helper: for each named registered query, write
-  * its `.explain("formatted")` output to `plans/r16/<name>_<tag>.txt`
-  * and print min-of-2 timings for BOTH actions — the bench's `.count()`
-  * (comparability with the driver artifact) and the noop sink (guide
-  * §1.4: computes every column, no sink cost). Dev tool; plans are the
-  * judge-checkable evidence for OPTIMIZATION_r16.md claims.
+/** Plan and timing dump for named registered queries. For each name it
+  * writes `plans/<tag>/<name>.txt` holding BOTH the initial
+  * `.explain("formatted")` plan AND the AQE final plan, captured from the
+  * SAME DataFrame instance after one execution, so runtime
+  * ReusedExchange / AQEShuffleRead nodes (invisible in the initial plan)
+  * are checkable. It prints the DataFrame-construction / physical-plan
+  * split and min-of-2 timings for the bench's `.count()` action and for
+  * the noop sink (which computes every column with no sink cost). Jobs
+  * are labelled via `setJobDescription`. Never on the bench path.
   *
   * Usage: runMain graft.tools.PlanDump <sfDir> <tag> <name> [name ...]
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val tag = args(1)
+    val dir = Paths.get("plans", args(1))
     val spark = graft.Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    Files.createDirectories(Paths.get("plans/r16"))
+    Files.createDirectories(dir)
     for (name <- args.drop(2)) {
       val fn = graft.SparkEntry.queries(name)
       def fresh() = fn(spark, sfDir)
+      def settle(): Unit = {
+        spark.sparkContext.getPersistentRDDs.valuesIterator
+          .foreach(_.unpersist(blocking = false))
+        spark.catalog.clearCache()
+      }
       spark.sparkContext.setJobDescription(s"plandump: $name")
-      // plan-cost split: DataFrame construction (analysis passes inside
-      // the operator body) vs optimize+physical-plan
       val tc0 = System.nanoTime()
       val df0 = fresh()
       val tBuild = (System.nanoTime() - tc0) / 1e9
       val tp0 = System.nanoTime()
       df0.queryExecution.executedPlan
       val tPlan = (System.nanoTime() - tp0) / 1e9
-      val formatted = df0.queryExecution.explainString(
+      val initial = df0.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
-      Files.writeString(Paths.get(s"plans/r16/${name}_$tag.txt"), formatted)
+      // execute THIS QueryExecution (a noop write would build a NEW one
+      // and leave df0's adaptive plan un-finalized) so the dumped final
+      // plan shows runtime ReusedExchange / AQEShuffleRead nodes
+      df0.queryExecution.executedPlan.execute().count()
+      val finalPlan = df0.queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode)
+      val out = dir.resolve(s"$name.txt")
+      Files.writeString(out,
+        s"== INITIAL PLAN (pre-execution) ==\n$initial\n" +
+          s"== FINAL PLAN (post-execution, AQE final) ==\n$finalPlan")
+      settle()
       def timeCount(): Double = {
         val t0 = System.nanoTime(); fresh().count(); (System.nanoTime() - t0) / 1e9
       }
@@ -40,14 +56,9 @@ object PlanDump {
         fresh().write.format("noop").mode("overwrite").save()
         (System.nanoTime() - t0) / 1e9
       }
-      def settle(): Unit = {
-        spark.sparkContext.getPersistentRDDs.valuesIterator
-          .foreach(_.unpersist(blocking = false))
-        spark.catalog.clearCache()
-      }
       val c = { val a = timeCount(); settle(); val b = timeCount(); settle(); math.min(a, b) }
       val n = { val a = timeNoop(); settle(); val b = timeNoop(); settle(); math.min(a, b) }
-      println(f"[plandump] $name%-32s count=$c%7.2fs noop=$n%7.2fs build=$tBuild%6.2fs plan=$tPlan%6.2fs -> plans/r16/${name}_$tag.txt")
+      println(f"[plandump] $name%-32s count=$c%7.2fs noop=$n%7.2fs build=$tBuild%6.2fs plan=$tPlan%6.2fs -> $out")
     }
     spark.stop()
   }

@@ -128,8 +128,7 @@ object TwsBench {
     val line =
       s"""{"metric":"tws_bench","batches":$nBatches,"twins":{${entries.mkString(",")}}}"""
     println(line)
-    // committed artifact trail (r14 VERDICT task 4), same file scheme
-    // as ScalePair's readings
-    ScalePair.append("records/twsbench.jsonl", line)
+    // committed artifact trail (r14 VERDICT task 4)
+    Records.append("records/twsbench.jsonl", line)
   }
 }

@@ -29,55 +29,12 @@ class BenchSpec extends AnyFunSuite {
     assert(Bench.suspects(results, Map.empty) === Nil)
   }
 
-  /** r12 VERDICT hygiene 1: a patched artifact must name WHICH entries
-    * were substituted. patchLine min-merges donor timings, appends
-    * donor-only entries, recomputes the total, and is idempotent. */
-  test("patchLine substitutes faster donors, appends missing, self-describes") {
-    val base = """{"metric":"total","value":3.000,"unit":"sec","scheme":"min2redo","calibration_sec":4.350,"calibration":{"agg":1.100,"join":2.000,"window":1.250},"shared_build_sec":9.000,"queries":{"q_spike":2.500,"q_fast":0.200,"q_keep":0.300},"suspect":[],"sf":"/tmp/sfX"}"""
-    val donor = Map(
-      "q_spike" -> 0.400, // faster → substituted (noise-spike min-merge)
-      "q_keep" -> 0.900, // slower → base kept, NOT marked patched
-      "q_new" -> 0.100, // absent from base → appended (filtered run)
-      "q_bad" -> -1.0) // donor failure: never substitutes
-    val out = Bench.patchLine(base, donor, "donor_run.json")
-    assert(out.contains(""""patched":["q_new","q_spike"]"""))
-    // r13 ADVICE: a patched artifact no longer claims the sweep's
-    // methodology, and names where the substituted values came from
-    assert(out.contains(""""scheme":"min2redo+patched""""))
-    assert(out.contains(""""donors":["donor_run.json"]"""))
-    assert(out.contains(""""q_spike":0.400"""))
-    assert(out.contains(""""q_keep":0.300"""))
-    assert(out.contains(""""q_new":0.100"""))
-    assert(!out.contains("q_bad"))
-    // total recomputed over the merged map: 0.4+0.2+0.3+0.1
-    assert(out.contains(""""value":1.000"""))
-    // calibration entries (outside the queries object) untouched
-    assert(out.contains(""""join":2.000"""))
-    assert(Bench.queriesOf(out) ===
-      Map("q_spike" -> 0.4, "q_fast" -> 0.2, "q_keep" -> 0.3, "q_new" -> 0.1))
-    // idempotent: same donor again changes nothing
-    assert(Bench.patchLine(out, donor) === out)
-    // a later donor UNIONS into the existing patched list (and a second
-    // labelled donor unions into the donors list)
-    val out2 = Bench.patchLine(out, Map("q_fast" -> 0.050), "other.json")
-    assert(out2.contains(""""patched":["q_fast","q_new","q_spike"]"""))
-    assert(out2.contains(""""donors":["donor_run.json","other.json"]"""))
-    assert(out2.contains(""""value":0.850"""))
-    // still exactly one scheme suffix after two patch applications
-    assert(!out2.contains("+patched+patched"))
-  }
-
-  /** r13 ADVICE: the compact stdout line (headline subset) is
-    * shape-identical to the full line; patching it would recompute
-    * "value" as the subset sum. The full-line guard must reject it. */
-  test("patchLine rejects the compact headline-subset line loudly") {
-    // value 129.7 is the FULL total but the queries map holds only two
-    // headline entries — exactly the compact stdout line's shape
-    val compact = """{"metric":"total","value":129.700,"unit":"sec","scheme":"min2redo","calibration_sec":5.000,"shared_build_sec":9.000,"queries":{"q01_pricing_summary":0.500,"q03_revenue_by_region":0.400},"patched":[],"sf":"/tmp/sfX"}"""
-    val e = intercept[IllegalArgumentException] {
-      Bench.patchLine(compact, Map("q01_pricing_summary" -> 0.100))
-    }
-    assert(e.getMessage.contains("FULL bench line"))
+  /** The prior run's per-query map comes from the flat `"queries"`
+    * object only; calibration and shared-build timings sit outside it. */
+  test("queriesOf reads only the queries object of a bench line") {
+    val line = """{"metric":"total","value":0.700,"unit":"sec","scheme":"min2redo","calibration_sec":4.350,"calibration":{"agg":1.100,"join":2.000,"window":1.250},"shared_build_sec":9.000,"shared_builds":{"dedup_pairs":9.000},"queries":{"q_a":0.500,"q_b":0.200},"patched":[],"sf":"/tmp/sfX"}"""
+    assert(Bench.queriesOf(line) === Map("q_a" -> 0.5, "q_b" -> 0.2))
+    intercept[IllegalArgumentException](Bench.queriesOf("""{"metric":"total"}"""))
   }
 
   /** r13 VERDICT task 3: the artifact itself carries the box-drift
@@ -121,18 +78,5 @@ class BenchSpec extends AnyFunSuite {
     val withZero = Bench.vsPrior(Seq("q_a" -> 1.0, "q_z" -> 2.0),
       Map("q_a" -> 1.0, "q_z" -> 0.0), 3.0, 3.0)
     assert(withZero.contains(""""median_query_ratio":1.000"""))
-  }
-
-  /** r14 ADVICE: the scheme-suffix dedup guard must test the scheme
-    * FIELD, not the whole line — a donor filename containing the
-    * literal '+patched' must not suppress the suffix. */
-  test("patchLine adds scheme suffix even when a donor filename says +patched") {
-    val base = """{"metric":"total","value":0.500,"unit":"sec","scheme":"min2redo","calibration_sec":4.000,"shared_build_sec":1.000,"queries":{"q_a":0.500},"patched":[],"donors":["old+patched.json"],"sf":"/tmp/sfX"}"""
-    val out = Bench.patchLine(base, Map("q_a" -> 0.100), "fresh.json")
-    assert(out.contains(""""scheme":"min2redo+patched""""))
-    assert(out.contains(""""patched":["q_a"]"""))
-    // and still idempotent: no double suffix on re-application
-    assert(!Bench.patchLine(out, Map("q_a" -> 0.100))
-      .contains("+patched+patched"))
   }
 }

@@ -47,7 +47,7 @@ class SchemaRegistrySpec extends AnyFunSuite {
   test("plan-time resolution uses the subject's latest schema") {
     val reg = new InMemorySchemaRegistry
     reg.register("pg.public.users-value", 1, v1)
-    val df = SchemaRegistry.resolveAndDecode(
+    val df = SchemaRegistry.resolveAndDecodeById(
       records(enc(v1, 1)(_.put("id", 5))), reg, "pg.public.users")
     assert(df.select("after.id").collect()(0).getInt(0) === 5)
     assert(!df.select("after.*").columns.contains("email"))

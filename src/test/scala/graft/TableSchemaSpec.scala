@@ -65,9 +65,8 @@ class TableSchemaSpec extends AnyFunSuite {
   }
 
   test("no registered query infers a parquet schema while it is built") {
-    val offenders = SparkEntry.registry.flatMap { q =>
-      JobsDuring(spark.sparkContext)(q.run(spark, TestSpark.tiny))
-        .filter(j => !j.inSqlExecution && j.site.startsWith("parquet at"))
+    val offenders = RegistrySweep.built.flatMap { q =>
+      q.jobs.filter(j => !j.inSqlExecution && j.site.startsWith("parquet at"))
         .map(j => s"${q.name} -> ${j.site}")
     }
     assert(offenders.isEmpty,
